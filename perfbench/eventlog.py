@@ -11,9 +11,7 @@ their SQL execution.
 
 from __future__ import annotations
 
-import glob
 import json
-import os
 from collections import defaultdict
 from dataclasses import dataclass, field
 
@@ -57,20 +55,11 @@ class GroupStats:
 
 
 def read_events(path: str):
-    """Events of one application: `path` is an event-log file or a
-    rolling (v2) event-log directory of `events_<n>_...` files."""
-    if os.path.isdir(path):
-        files = sorted(
-            glob.glob(os.path.join(path, "events_*")),
-            key=lambda p: int(os.path.basename(p).split("_")[1]),
-        )
-    else:
-        files = [path]
-    for fn in files:
-        with open(fn) as f:
-            for line in f:
-                if line.strip():
-                    yield json.loads(line)
+    """Events of one application's uncompressed event-log file."""
+    with open(path) as f:
+        for line in f:
+            if line.strip():
+                yield json.loads(line)
 
 
 def _count(value) -> int | None:

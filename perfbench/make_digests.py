@@ -4,7 +4,7 @@
     python3 perfbench/make_digests.py
 
 Every workload operation is answered by its DuckDB oracle
-(`queries.oracle_sql()`) on the benchmark's generated tables, and the
+(`queries.oracle_sql()`) on the benchmark's input tables, and the
 trips check by ISLANDS_SQL aggregated per vehicle. The script then runs
 the same operations in Spark and reports any digest that differs, so a
 digest is only committed once both engines agree on it. An operation
@@ -22,7 +22,7 @@ import time
 import duckdb
 
 import run as R
-from run import HERE, ROOT, SF, WORKLOADS, datagen, stats
+from run import DATA_DIR, HERE, ROOT, SF, TABLES, WORKLOADS, stats
 
 ORACLE_LIMIT_S = 30.0
 
@@ -47,9 +47,9 @@ def main() -> int:
     from mobilityduck_spark.sources import berlinmod as SBM
 
     work = os.path.join(ROOT, ".perfbench_work")
-    sf_dir = datagen.ensure(os.path.join(work, "data"), SF)
+    sf_dir = DATA_DIR
     con = duckdb.connect()
-    for t in datagen.TABLES:
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracles = Q.oracle_sql()
     checks: dict[str, dict] = {}
@@ -92,7 +92,7 @@ def main() -> int:
     if mismatched:
         print(f"not written: Spark and DuckDB disagree on {mismatched}")
         return 1
-    out = {"sf": SF, "data_version": datagen.VERSION, "checks": checks}
+    out = {"sf": SF, "data_sha": R.data_sha(), "checks": checks}
     with open(os.path.join(HERE, "digests.json"), "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
         f.write("\n")

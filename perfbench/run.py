@@ -1,22 +1,23 @@
 #!/usr/bin/env python3
 """Closed-loop benchmark of the engine's public entry points.
 
-    python3 perfbench/run.py --workload berlinmod --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload berlinmod --seed 1 --seconds 15 --trace 0
 
-One driver process on local[nproc] runs one operation at a time (a
+One Spark process on local[nproc] runs one operation at a time (a
 closed loop with one client). A run:
 
-1. generates the input tables once per checkout (datagen.py, fixed data
-   seed) under `.perfbench_work/`;
+1. reads the fixed sf0.01 input tables committed under `data/`;
 2. starts the session and runs the workload's setup SETUPS times,
    releasing the session caches in between (`setup_s` is the median);
 3. runs one untimed check pass that collects every operation's output
    and compares its digest with `digests.json` (berlinmod also writes
    the trips table and checks it against ISLANDS_SQL);
-4. runs WARMUP_PASSES untimed noop passes;
-5. runs timed passes, each in an order permuted from `--seed`, until
-   `--seconds` of operation time have passed. Setup, check and warm-up
-   run in the declared order, so every run warms up alike. Between
+4. runs WARMUP_PASSES untimed noop passes; setup, check and warm-up run
+   in the declared order, so every run warms up alike;
+5. runs `timed_pass_count()` timed passes, about `--seconds` seconds,
+   each in an order permuted from `--seed`, and up to EXTEND times as
+   many while half or more of them lost CPU time to the hypervisor.
+   Between
    passes, untimed, it collects garbage in Python and the JVM and checks
    that every operator pin was released.
 
@@ -47,32 +48,41 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
-import datagen  # noqa: E402
 import eventlog  # noqa: E402
 import stats  # noqa: E402
 
 SF = 0.01
-SETUPS = 3
+# copies of the engine's fixed seed-42 sf0.01 test tables (TESTDATA.md)
+DATA_DIR = os.path.join(HERE, "data", "sf0.01")
+TABLES = ("events", "documents", "embeddings")
+SETUPS = 2
 WARMUP_PASSES = 1  # noop passes after the check pass, the same in every run
-MIN_TIMED_PASSES = 2
-MAX_TIMED_PASSES = 5
-# A timed pass counts only when the hypervisor stole at most this share
-# of the machine's CPU time during it (see `quiet_passes`).
+MIN_TIMED_PASSES = 3
+# Nominal wall of one timed pass on a 4-vCPU VM. It turns --seconds into
+# a pass count that does not depend on the speed measured: with a time
+# limit instead, a faster run fitted one more pass, further down the JIT
+# warm-up curve, and its medians read 10-15% lower.
+PASS_S = 3.6
+# A timed pass is quiet when the hypervisor stole at most this share of
+# the machine's CPU time during it (see `mostly_quiet`).
 STEAL_LIMIT = 0.01
-DEADLINE_S = 64.0  # no timed pass beyond MIN_TIMED_PASSES starts after this much process time
+EXTEND = 1.5  # a run short of quiet passes runs up to this many times the passes
+EXTEND_UNTIL_S = 80.0  # but starts no added pass this long after it began
 MB = 1024.0 * 1024.0
 
 WORKLOADS: dict[str, tuple[str, ...]] = {
     # BerlinMOD queries over the session-cached trip intermediates:
     # vehicles dim (q2), _point_hits (q4), the pandas pair UDFs of
     # operators.tpoint_pairs (q5) and the temporal clip functions over
-    # the assembled user trajectories (at_stbox_duration)
-    "berlinmod": ("bm_q2", "bm_q4", "bm_q5", "at_stbox_duration"),
+    # the assembled user trajectories (at_stbox_duration), and the
+    # eDwithin probe UDF over the truck fleet (q6)
+    "berlinmod": ("bm_q2", "bm_q4", "bm_q5", "bm_q6", "at_stbox_duration"),
     # many-job operator pipelines: the random-hyperplane and MinHash LSH
-    # band joins, with their eager build-time jobs and operator pins
-    "pipelines": ("embed_near_dups", "doc_minhash_pairs"),
+    # band joins, with their eager build-time jobs and operator pins,
+    # and the as-of join of operators.range_join
+    "pipelines": ("embed_near_dups", "doc_minhash_pairs", "events_asof_value"),
 }
-PIPELINE_TABLES = ("documents", "embeddings")
+PIPELINE_TABLES = ("documents", "embeddings", "events")
 INGEST_CHECK = "_ingest_islands"
 
 E2E_UNITS = {
@@ -198,10 +208,18 @@ def git_sha() -> str | None:
     return out.stdout.strip() if out.returncode == 0 else None
 
 
+def data_sha() -> str:
+    h = hashlib.sha256()
+    for t in TABLES:
+        with open(os.path.join(DATA_DIR, f"{t}.parquet"), "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:16]
+
+
 def load_digests() -> dict:
     with open(os.path.join(HERE, "digests.json")) as f:
         d = json.load(f)
-    if d["sf"] != SF or d["data_version"] != datagen.VERSION:
+    if d["sf"] != SF or d["data_sha"] != data_sha():
         raise SetupError("digests.json was made for other inputs; rerun make_digests.py")
     return d
 
@@ -241,6 +259,8 @@ def start_session(work: str, trace: bool, cpus: int):
                 "spark.eventLog.enabled": "true",
                 "spark.eventLog.dir": "file://" + evdir,
                 "spark.eventLog.compress": "false",
+                # one plain file (Spark 4 rolls the log into a directory by default)
+                "spark.eventLog.rolling.enabled": "false",
             }
         )
     from mobilityduck_spark.session import get_spark
@@ -458,19 +478,19 @@ def steal_frac(before: list[int] | None, after: list[int] | None) -> float | Non
 
 def quiet(p: PassResult) -> bool:
     """The hypervisor stole at most STEAL_LIMIT of the machine's CPU time
-    during the pass. On a shared host a pass under heavy steal reads
-    20-100% slower for reasons outside the program."""
+    during the pass. On a shared host a pass under steal reads 20-100%
+    slower for reasons outside the program."""
     return p.steal is None or p.steal <= STEAL_LIMIT
 
 
-def quiet_passes(timed: list[PassResult]) -> list[PassResult]:
-    """The timed passes the metrics are taken from: the quiet ones, or
-    the MIN_TIMED_PASSES least-stolen when fewer are quiet."""
-    calm = [p for p in timed if quiet(p)]
-    if len(calm) >= MIN_TIMED_PASSES:
-        return calm
-    ranked = sorted(timed, key=lambda p: p.steal if p.steal is not None else 0.0)
-    return sorted(ranked[:MIN_TIMED_PASSES], key=lambda p: p.no)
+def timed_pass_count(seconds: float) -> int:
+    return max(MIN_TIMED_PASSES, round(seconds / PASS_S))
+
+
+def mostly_quiet(timed: list[PassResult]) -> bool:
+    """More than half of the timed passes were quiet, so the medians over
+    the passes, which the metrics are, come from quiet passes."""
+    return 2 * sum(quiet(p) for p in timed) > len(timed)
 
 
 def log(msg: str) -> None:
@@ -479,10 +499,7 @@ def log(msg: str) -> None:
 
 # ------------------------------------------------------------- metrics
 def e2e_metrics(setup_walls: list[float], timed: list[PassResult]) -> tuple[dict, dict]:
-    """End-to-end metrics and their sample counts. The record also keeps
-    the highest percentile over every timed operation that the sample
-    count supports; a few passes of a few distinct operations do not make
-    it steady enough to gate on."""
+    """End-to-end metrics and their sample counts."""
     per_op: dict[str, list[float]] = {}
     for p in timed:
         for op in p.ops:
@@ -490,8 +507,7 @@ def e2e_metrics(setup_walls: list[float], timed: list[PassResult]) -> tuple[dict
     complete = [p for p in timed if not p.failed]
     if not complete:
         raise RuntimeError("no timed pass completed")
-    pass_op_s = stats.median([sum(op.wall_s for op in p.ops) for p in complete])
-    walls = [w for v in per_op.values() for w in v]
+    pass_op_s = stats.median([p.op_s for p in complete])
     values = {
         "setup_s": stats.median(setup_walls),
         "cache_mb": stats.median([p.peak_storage_bytes for p in timed]) / MB,
@@ -503,12 +519,6 @@ def e2e_metrics(setup_walls: list[float], timed: list[PassResult]) -> tuple[dict
         "cache_mb": len(timed),
         "ops_per_min": len(complete),
         "op_geomean_s": {k: len(v) for k, v in sorted(per_op.items())},
-    }
-    q = stats.supported_percentile(len(walls))
-    samples["pooled_op_s"] = {
-        "samples": len(walls),
-        "percentile": q,
-        "value": stats.percentile(walls, q) if q else None,
     }
     return values, samples
 
@@ -595,11 +605,13 @@ def run(args) -> dict:
     t_proc = time.perf_counter()
     if not os.path.isdir(os.path.join(ROOT, "mobilityduck_spark")):
         raise SetupError(f"program package mobilityduck_spark not found under {ROOT}")
+    if not all(os.path.exists(os.path.join(DATA_DIR, f"{t}.parquet")) for t in TABLES):
+        raise SetupError(f"input tables missing under {DATA_DIR}")
     sys.path.insert(0, ROOT)
     expected = load_digests()["checks"]
     names = list(WORKLOADS[args.workload])
     work = os.path.join(ROOT, ".perfbench_work")
-    sf_dir = datagen.ensure(os.path.join(work, "data"), SF)
+    sf_dir = DATA_DIR
     cpus = len(os.sched_getaffinity(0))
     rng = random.Random(args.seed)
     attempted = failed = 0
@@ -635,20 +647,23 @@ def run(args) -> dict:
             warmup_walls.append(run_pass(ctx, "warmup", no, names, baseline).wall_s)
 
         timed: list[PassResult] = []
-        while len(timed) < MAX_TIMED_PASSES and (
-            len(timed) < MIN_TIMED_PASSES
-            or sum(p.op_s for p in timed if quiet(p)) < args.seconds
+        n_timed = timed_pass_count(args.seconds)
+        while len(timed) < n_timed or (
+            not mostly_quiet(timed)
+            and len(timed) < EXTEND * n_timed
+            and time.perf_counter() - t_proc < EXTEND_UNTIL_S
         ):
-            if len(timed) >= MIN_TIMED_PASSES and time.perf_counter() - t_proc > DEADLINE_S:
-                log("deadline reached; stopping timed passes")
-                break
             p = run_pass(ctx, "timed", len(timed), rng.sample(names, len(names)), baseline)
             timed.append(p)
             attempted += len(p.order)
             failed += len(p.order) if p.leaked > 0 else len(p.failed)
 
-        measured = quiet_passes(timed)
-        values, samples = e2e_metrics(setup_walls, measured)
+        steady = mostly_quiet(timed)
+        if not steady:
+            log(f"half or more of {len(timed)} timed passes lost over {STEAL_LIMIT:.0%} of "
+                "the CPU time to the hypervisor: the metrics are measured under steal "
+                "and the record says so (steady: false)")
+        values, samples = e2e_metrics(setup_walls, timed)
     finally:
         stop_session(spark)
 
@@ -661,22 +676,23 @@ def run(args) -> dict:
         "sf": SF,
         "git_sha": git_sha(),
         "program_sha": program_sha(),
+        "data_sha": data_sha(),
         "ops": names,
         "session_start_s": session_start_s,
         "setup_walls_s": setup_walls,
         "setup_steps_s": setup_steps,
         "setup_storage_mb": setup_storage / MB,
         "warmup_walls_s": warmup_walls,
-        "warmup_rule": f"setups, the check pass, then {WARMUP_PASSES} noop pass(es), "
-                       "in the declared order",
+        "warmup_rule": f"{SETUPS} setups, the check pass, then {WARMUP_PASSES} noop "
+                       "pass(es), in the declared order",
         "steal_limit": STEAL_LIMIT,
+        "steady": steady,
         "trips_steps_s": trips_steps,
         "timed_passes": len(timed),
         "timed_pass_walls_s": [p.wall_s for p in timed],
         "timed_pass_steal": [p.steal for p in timed],
-        "measured_passes": [p.no for p in measured],
         "op_walls_s": {
-            n: [op.wall_s for p in measured for op in p.ops if op.name == n] for n in names
+            n: [op.wall_s for p in timed for op in p.ops if op.name == n] for n in names
         },
         "samples": samples,
         "end_to_end": values,
@@ -690,7 +706,7 @@ def run(args) -> dict:
         logs = glob.glob(os.path.join(work, "eventlog", "*"))
         groups = eventlog.fold(eventlog.read_events(logs[0])) if logs else {}
         shutil.rmtree(os.path.join(work, "eventlog"), ignore_errors=True)
-        layers, counts = layer_metrics(ctx, measured, groups)
+        layers, counts = layer_metrics(ctx, timed, groups)
         for k in SETUP_LAYERS:
             layers[k] = trips_steps.get(k) or stats.median([st.get(k, 0.0) for st in setup_steps])
         layers["sources.cached_bytes"] = float(setup_storage)

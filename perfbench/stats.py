@@ -1,6 +1,6 @@
-"""Pure helpers of the benchmark: order statistics, the sample-count rule
-for percentiles, and the row normalization and digest of the output
-check. No Spark imports, so the tests run without a session."""
+"""Pure helpers of the benchmark: order statistics and the row
+normalization and digest of the output check. No Spark imports, so the
+tests run without a session."""
 
 from __future__ import annotations
 
@@ -38,27 +38,9 @@ def geomean(values: list[float]) -> float:
     return math.exp(sum(math.log(v) for v in values) / len(values))
 
 
-def min_samples(q: float, beyond: int = 10) -> int:
-    """Fewest samples for which the q-th percentile has at least `beyond`
-    samples above it: p50 needs 20, p90 needs 100."""
-    frac = 1.0 - q / 100.0
-    if frac <= 0:
-        raise ValueError("no finite sample count supports the maximum")
-    return math.ceil(beyond / frac - 1e-9)
-
-
-def supported_percentile(n: int, candidates=(99.0, 95.0, 90.0, 75.0, 50.0)) -> float | None:
-    """The highest candidate percentile that n samples support under
-    min_samples, or None when even the median is unsupported."""
-    for q in candidates:
-        if n >= min_samples(q):
-            return q
-    return None
-
-
 # ------------------------------------------------------------ output check
 def norm_value(v):
-    """One value under the repository's driver-check rule (floats rounded
+    """One value under the rule of scripts/driver_check.py (floats rounded
     to 6 places, integral floats made ints, NaN rejected), extended to
     the nested and temporal values a Spark Row or a DuckDB tuple carries
     so both engines reduce to the same JSON."""
@@ -90,7 +72,7 @@ def norm_value(v):
 
 def norm_rows(rows) -> list[list]:
     """Rows (sequences in one fixed column order) normalized and sorted
-    by their string form, order-insensitive like the driver check."""
+    by their string form, order-insensitive like scripts/driver_check.py."""
     out = [[norm_value(v) for v in r] for r in rows]
     return sorted(out, key=lambda r: tuple(str(x) for x in r))
 

@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import eventlog  # noqa: E402
 import stats  # noqa: E402
-from run import quiet_passes, steal_frac  # noqa: E402
+from run import mostly_quiet, steal_frac, timed_pass_count  # noqa: E402
 
 
 # ----------------------------------------------------------- statistics
@@ -46,17 +46,9 @@ def test_geomean():
         stats.geomean([])
 
 
-def test_sample_count_rule():
-    # a percentile needs ten samples beyond it
-    assert stats.min_samples(50) == 20
-    assert stats.min_samples(90) == 100
-    assert stats.min_samples(99) == 1000
-    assert stats.supported_percentile(19) is None
-    assert stats.supported_percentile(20) == 50
-    assert stats.supported_percentile(99) == 75
-    assert stats.supported_percentile(100) == 90
-    with pytest.raises(ValueError):
-        stats.min_samples(100)
+def test_timed_pass_count_follows_seconds_not_measured_speed():
+    assert timed_pass_count(15) == 4
+    assert timed_pass_count(1) == 3  # never fewer than MIN_TIMED_PASSES
 
 
 def test_steal_frac():
@@ -67,17 +59,16 @@ def test_steal_frac():
     assert steal_frac(before, before) is None
 
 
-def test_quiet_passes_drop_stolen_passes_but_keep_two():
+def test_mostly_quiet_needs_more_than_half_the_passes_quiet():
     import run
 
-    def p(no, steal):
-        return run.PassResult(no=no, order=[], steal=steal)
+    def passes(*steals):
+        return [run.PassResult(no=i, order=[], steal=x) for i, x in enumerate(steals)]
 
-    got = quiet_passes([p(0, 0.002), p(1, 0.05), p(2, None), p(3, 0.01)])
-    assert [x.no for x in got] == [0, 2, 3]
-    # all stolen: the two least-stolen stand in, in pass order
-    got = quiet_passes([p(0, 0.2), p(1, 0.03), p(2, 0.02)])
-    assert [x.no for x in got] == [1, 2]
+    assert mostly_quiet(passes(0.002, 0.05, None))  # no reading counts as quiet
+    assert not mostly_quiet(passes(0.002, 0.05))
+    assert not mostly_quiet(passes(0.2, 0.005, 0.02))
+    assert mostly_quiet(passes(0.01, 0.011, 0.0))  # the limit itself is quiet
 
 
 # --------------------------------------------------------- output check
@@ -227,14 +218,6 @@ def test_group_names_round_trip_and_reject_foreign_groups():
     assert eventlog.split_group(None) is None
     assert eventlog.split_group("someone-else") is None
     assert eventlog.split_group("a|x|b|c") is None
-
-
-def test_read_events_orders_rolling_files(tmp_path):
-    d = tmp_path / "eventlog_v2_app"
-    d.mkdir()
-    (d / "events_10_app").write_text('{"Event": "B"}\n')
-    (d / "events_2_app").write_text('{"Event": "A"}\n\n')
-    assert [e["Event"] for e in eventlog.read_events(str(d))] == ["A", "B"]
 
 
 # ---------------------------------------------------------- BENCHMARK.json
