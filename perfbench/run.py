@@ -15,11 +15,15 @@ closed loop with one client). A run:
 4. runs WARMUP_PASSES untimed noop passes; setup, check and warm-up run
    in the declared order, so every run warms up alike;
 5. runs `timed_pass_count()` timed passes, about `--seconds` seconds,
-   each in an order permuted from `--seed`, and up to EXTEND times as
-   many while half or more of them lost CPU time to the hypervisor.
-   Between
-   passes, untimed, it collects garbage in Python and the JVM and checks
-   that every operator pin was released.
+   each in an order permuted from `--seed`. Between passes, untimed, it
+   collects garbage in Python and the JVM and checks that every
+   operator pin was released.
+
+On a shared VM the host's speed changes from minute to minute, so a
+timed region is reported as its wall less the share the hypervisor
+withheld from the machine (`unstolen`), and operation times are scaled
+to a reference host speed measured by a probe that runs no program
+code, timed before every operation (`jvm_probe`, `host_speed`).
 
 `--trace 1` makes a separate run with the Spark event log on and a job
 group per operation, build/run phase and pass; it prints the per-layer
@@ -63,12 +67,13 @@ MIN_TIMED_PASSES = 3
 # limit instead, a faster run fitted one more pass, further down the JIT
 # warm-up curve, and its medians read 10-15% lower.
 PASS_S = 3.6
-# A timed pass is quiet when the hypervisor stole at most this share of
-# the machine's CPU time during it (see `mostly_quiet`).
-STEAL_LIMIT = 0.01
-EXTEND = 1.5  # a run short of quiet passes runs up to this many times the passes
-EXTEND_UNTIL_S = 80.0  # but starts no added pass this long after it began
 MB = 1024.0 * 1024.0
+HZ = os.sysconf("SC_CLK_TCK")  # /proc/stat counts in these ticks per second
+# Median wall of `jvm_probe` on the 4-vCPU VM the benchmark was written
+# on; operation times are scaled to a host on which the probe takes this
+# long (see `host_speed`).
+REF_PROBE_S = 0.018
+PROBES_PER_OP = 5
 
 WORKLOADS: dict[str, tuple[str, ...]] = {
     # BerlinMOD queries over the session-cached trip intermediates:
@@ -149,10 +154,16 @@ class OpTiming:
     build_s: float
     run_s: float
     phases_ms: dict[str, float] = field(default_factory=dict)
+    busy_s: float = 0.0
+    steal_s: float = 0.0
 
     @property
     def wall_s(self) -> float:
         return self.build_s + self.run_s
+
+    @property
+    def unstolen_s(self) -> float:
+        return unstolen(self.wall_s, self.busy_s, self.steal_s)
 
 
 @dataclass
@@ -167,10 +178,11 @@ class PassResult:
     leaked: int = 0
     wall_s: float = 0.0
     steal: float | None = None
+    probes_s: list[float] = field(default_factory=list)
 
     @property
     def op_s(self) -> float:
-        return sum(op.wall_s for op in self.ops)
+        return sum(op.unstolen_s for op in self.ops)
 
 
 @dataclass
@@ -425,9 +437,11 @@ def run_pass(ctx: Ctx, phase: str, no: int, order: list[str], baseline: int) -> 
     t_pass = time.perf_counter()
     cpu0 = cpu_times()
     for name in order:
+        res.probes_s += [jvm_probe(ctx.spark) for _ in range(PROBES_PER_OP)]
         try:
             if ctx.trace:
                 sc.setJobGroup(eventlog.group_name(phase, no, name, "build"), name)
+            c0 = cpu_times()
             t0 = time.perf_counter()
             df = qs[name](ctx.spark, ctx.sf_dir)
             t1 = time.perf_counter()
@@ -438,7 +452,9 @@ def run_pass(ctx: Ctx, phase: str, no: int, order: list[str], baseline: int) -> 
             t2 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t3 = time.perf_counter()
-            res.ops.append(OpTiming(name, t1 - t0, t3 - t2, ph))
+            op = OpTiming(name, t1 - t0, t3 - t2, ph)
+            op.busy_s, op.steal_s = busy_steal(c0, cpu_times())
+            res.ops.append(op)
         except Exception:
             res.failed.append(name)
             log(f"{phase} pass {no}: {name} raised\n{traceback.format_exc()}")
@@ -450,7 +466,7 @@ def run_pass(ctx: Ctx, phase: str, no: int, order: list[str], baseline: int) -> 
         res.pins_released += Q.release_operator_caches()
         res.release_s += time.perf_counter() - t0
     res.wall_s = time.perf_counter() - t_pass
-    res.steal = steal_frac(cpu0, cpu_times())
+    res.steal = steal_share(cpu0, cpu_times())
     res.leaked = persistent_rdds(ctx.spark) - baseline
     if res.leaked > 0:
         log(f"{phase} pass {no}: {res.leaked} persistent RDDs above the baseline")
@@ -467,30 +483,52 @@ def cpu_times() -> list[int] | None:
         return None
 
 
-def steal_frac(before: list[int] | None, after: list[int] | None) -> float | None:
-    """Share of CPU time the hypervisor stole between two readings; a
-    run on a busy host reads slow for reasons outside the program."""
+def jvm_probe(spark) -> float:
+    """Wall of a fixed piece of JVM work that runs no program code: a
+    BigInteger product of about 500 000 bits, 15-25 ms on a 4-vCPU VM."""
+    big = spark._jvm.java.math.BigInteger
+    t0 = time.perf_counter()
+    big.valueOf(7).pow(60000).pow(3).bitLength()
+    return time.perf_counter() - t0
+
+
+def host_speed(probes: list[float]) -> float:
+    """How fast the host ran during the timed passes, relative to the
+    reference: REF_PROBE_S over the median probe wall."""
+    return REF_PROBE_S / stats.median(probes)
+
+
+def busy_steal(before: list[int] | None, after: list[int] | None) -> tuple[float, float]:
+    """CPU seconds the machine ran (user, nice, system, irq, softirq) and
+    CPU seconds the hypervisor withheld from it (steal: a vCPU had work
+    but the host ran another guest) between two readings; 0, 0 without
+    readings."""
     if not before or not after or len(before) < 8:
-        return None
+        return 0.0, 0.0
     d = [b - a for a, b in zip(before, after)]
-    return d[7] / sum(d) if sum(d) else None
+    return (d[0] + d[1] + d[2] + d[5] + d[6]) / HZ, d[7] / HZ
 
 
-def quiet(p: PassResult) -> bool:
-    """The hypervisor stole at most STEAL_LIMIT of the machine's CPU time
-    during the pass. On a shared host a pass under steal reads 20-100%
-    slower for reasons outside the program."""
-    return p.steal is None or p.steal <= STEAL_LIMIT
+def unstolen(wall: float, busy: float, steal: float) -> float:
+    """The wall of a timed region less the hypervisor's share of it.
+
+    While the machine wants CPU time, a share steal / (busy + steal) of
+    it goes to other guests, and a thread on a withheld vCPU makes no
+    progress; idle vCPUs are never stolen. The program's wall on a host
+    of its own is then the wall times busy / (busy + steal). On a quiet
+    host (steal 0) it is the wall itself."""
+    return wall * busy / (busy + steal) if busy + steal > 0 else wall
+
+
+def steal_share(before: list[int] | None, after: list[int] | None) -> float | None:
+    """Share of the CPU time the machine wanted that the hypervisor
+    withheld, for the record."""
+    busy, steal = busy_steal(before, after)
+    return steal / (busy + steal) if busy + steal > 0 else None
 
 
 def timed_pass_count(seconds: float) -> int:
     return max(MIN_TIMED_PASSES, round(seconds / PASS_S))
-
-
-def mostly_quiet(timed: list[PassResult]) -> bool:
-    """More than half of the timed passes were quiet, so the medians over
-    the passes, which the metrics are, come from quiet passes."""
-    return 2 * sum(quiet(p) for p in timed) > len(timed)
 
 
 def log(msg: str) -> None:
@@ -499,15 +537,17 @@ def log(msg: str) -> None:
 
 # ------------------------------------------------------------- metrics
 def e2e_metrics(setup_walls: list[float], timed: list[PassResult]) -> tuple[dict, dict]:
-    """End-to-end metrics and their sample counts."""
+    """End-to-end metrics and their sample counts. Operation times are
+    unstolen walls scaled to the reference host speed."""
+    speed = host_speed([x for p in timed for x in p.probes_s])
     per_op: dict[str, list[float]] = {}
     for p in timed:
         for op in p.ops:
-            per_op.setdefault(op.name, []).append(op.wall_s)
+            per_op.setdefault(op.name, []).append(op.unstolen_s * speed)
     complete = [p for p in timed if not p.failed]
     if not complete:
         raise RuntimeError("no timed pass completed")
-    pass_op_s = stats.median([p.op_s for p in complete])
+    pass_op_s = stats.median([p.op_s for p in complete]) * speed
     values = {
         "setup_s": stats.median(setup_walls),
         "cache_mb": stats.median([p.peak_storage_bytes for p in timed]) / MB,
@@ -519,6 +559,7 @@ def e2e_metrics(setup_walls: list[float], timed: list[PassResult]) -> tuple[dict
         "cache_mb": len(timed),
         "ops_per_min": len(complete),
         "op_geomean_s": {k: len(v) for k, v in sorted(per_op.items())},
+        "host_speed": sum(len(p.probes_s) for p in timed),
     }
     return values, samples
 
@@ -621,13 +662,15 @@ def run(args) -> dict:
     session_start_s = time.perf_counter() - t0
     try:
         ctx = Ctx(spark, sf_dir, work, bool(args.trace), cpus)
-        setup_walls, setup_steps = [], []
+        setup_walls, setup_raw, setup_steps = [], [], []
         for i in range(SETUPS):
             if i:
                 release_session_caches()
+            c0 = cpu_times()
             t0 = time.perf_counter()
             setup_steps.append(setup(ctx, args.workload))
-            setup_walls.append(time.perf_counter() - t0)
+            setup_raw.append(time.perf_counter() - t0)
+            setup_walls.append(unstolen(setup_raw[-1], *busy_steal(c0, cpu_times())))
         setup_storage = storage_bytes(spark)
 
         trips_steps: dict[str, float] = {}
@@ -647,22 +690,12 @@ def run(args) -> dict:
             warmup_walls.append(run_pass(ctx, "warmup", no, names, baseline).wall_s)
 
         timed: list[PassResult] = []
-        n_timed = timed_pass_count(args.seconds)
-        while len(timed) < n_timed or (
-            not mostly_quiet(timed)
-            and len(timed) < EXTEND * n_timed
-            and time.perf_counter() - t_proc < EXTEND_UNTIL_S
-        ):
-            p = run_pass(ctx, "timed", len(timed), rng.sample(names, len(names)), baseline)
+        for no in range(timed_pass_count(args.seconds)):
+            p = run_pass(ctx, "timed", no, rng.sample(names, len(names)), baseline)
             timed.append(p)
             attempted += len(p.order)
             failed += len(p.order) if p.leaked > 0 else len(p.failed)
 
-        steady = mostly_quiet(timed)
-        if not steady:
-            log(f"half or more of {len(timed)} timed passes lost over {STEAL_LIMIT:.0%} of "
-                "the CPU time to the hypervisor: the metrics are measured under steal "
-                "and the record says so (steady: false)")
         values, samples = e2e_metrics(setup_walls, timed)
     finally:
         stop_session(spark)
@@ -679,18 +712,28 @@ def run(args) -> dict:
         "data_sha": data_sha(),
         "ops": names,
         "session_start_s": session_start_s,
-        "setup_walls_s": setup_walls,
+        "setup_walls_s": setup_raw,
+        "setup_unstolen_s": setup_walls,
         "setup_steps_s": setup_steps,
         "setup_storage_mb": setup_storage / MB,
         "warmup_walls_s": warmup_walls,
         "warmup_rule": f"{SETUPS} setups, the check pass, then {WARMUP_PASSES} noop "
                        "pass(es), in the declared order",
-        "steal_limit": STEAL_LIMIT,
-        "steady": steady,
         "trips_steps_s": trips_steps,
         "timed_passes": len(timed),
         "timed_pass_walls_s": [p.wall_s for p in timed],
         "timed_pass_steal": [p.steal for p in timed],
+        "probes_s": [p.probes_s for p in timed],
+        "host_speed": host_speed([x for p in timed for x in p.probes_s]),
+        "op_unstolen_s": {
+            n: [op.unstolen_s for p in timed for op in p.ops if op.name == n] for n in names
+        },
+        "op_busy_s": {
+            n: [op.busy_s for p in timed for op in p.ops if op.name == n] for n in names
+        },
+        "op_steal_s": {
+            n: [op.steal_s for p in timed for op in p.ops if op.name == n] for n in names
+        },
         "op_walls_s": {
             n: [op.wall_s for p in timed for op in p.ops if op.name == n] for n in names
         },

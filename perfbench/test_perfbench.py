@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import eventlog  # noqa: E402
 import stats  # noqa: E402
-from run import mostly_quiet, steal_frac, timed_pass_count  # noqa: E402
+from run import busy_steal, steal_share, timed_pass_count, unstolen  # noqa: E402
 
 
 # ----------------------------------------------------------- statistics
@@ -51,24 +51,48 @@ def test_timed_pass_count_follows_seconds_not_measured_speed():
     assert timed_pass_count(1) == 3  # never fewer than MIN_TIMED_PASSES
 
 
-def test_steal_frac():
-    before = [100, 0, 10, 800, 0, 0, 0, 90, 0, 0]
-    after = [200, 0, 20, 900, 0, 0, 0, 170, 0, 0]
-    assert steal_frac(before, after) == pytest.approx(80 / 290)
-    assert steal_frac(None, after) is None
-    assert steal_frac(before, before) is None
-
-
-def test_mostly_quiet_needs_more_than_half_the_passes_quiet():
+def test_busy_and_steal_seconds_from_proc_stat_ticks():
     import run
 
-    def passes(*steals):
-        return [run.PassResult(no=i, order=[], steal=x) for i, x in enumerate(steals)]
+    # user nice system idle iowait irq softirq steal guest guest_nice
+    before = [100, 0, 10, 800, 5, 1, 2, 90, 0, 0]
+    after = [200, 10, 20, 900, 9, 2, 4, 170, 0, 0]
+    busy, steal = busy_steal(before, after)
+    assert busy == pytest.approx((100 + 10 + 10 + 1 + 2) / run.HZ)
+    assert steal == pytest.approx(80 / run.HZ)
+    assert busy_steal(None, after) == (0.0, 0.0)
+    assert steal_share(before, after) == pytest.approx(80 / 203)
+    assert steal_share(before, before) is None
 
-    assert mostly_quiet(passes(0.002, 0.05, None))  # no reading counts as quiet
-    assert not mostly_quiet(passes(0.002, 0.05))
-    assert not mostly_quiet(passes(0.2, 0.005, 0.02))
-    assert mostly_quiet(passes(0.01, 0.011, 0.0))  # the limit itself is quiet
+
+def test_unstolen_takes_out_the_withheld_share_of_the_wall():
+    assert unstolen(2.0, 3.0, 0.0) == 2.0  # quiet host: the wall itself
+    assert unstolen(2.0, 3.0, 1.0) == pytest.approx(1.5)
+    assert unstolen(2.0, 0.0, 0.0) == 2.0  # no readings
+    import run
+
+    op = run.OpTiming("bm_q2", 0.5, 1.5, busy_s=3.0, steal_s=1.0)
+    p = run.PassResult(no=0, order=["bm_q2"], ops=[op, op])
+    assert op.unstolen_s == pytest.approx(1.5) and p.op_s == pytest.approx(3.0)
+
+
+def test_operation_times_are_scaled_to_the_reference_host_speed():
+    import run
+
+    assert run.host_speed([run.REF_PROBE_S] * 3) == 1.0
+    # probes twice as slow as the reference: a host at half speed
+    slow = [2 * run.REF_PROBE_S, 2 * run.REF_PROBE_S, 9.0]
+    assert run.host_speed(slow) == pytest.approx(0.5)
+    passes = [
+        run.PassResult(no=n, order=["a", "b"], probes_s=slow, ops=[
+            run.OpTiming("a", 0.0, 1.0), run.OpTiming("b", 0.0, 4.0)])
+        for n in (0, 1)
+    ]
+    values, samples = run.e2e_metrics([3.0, 1.0, 2.0], passes)
+    assert values["op_geomean_s"] == pytest.approx(1.0)  # geomean of 0.5 and 2
+    assert values["ops_per_min"] == pytest.approx(60.0 * 2 / 2.5)
+    assert values["setup_s"] == 2.0  # set-up walls are not scaled
+    assert samples["host_speed"] == 6
 
 
 # --------------------------------------------------------- output check
