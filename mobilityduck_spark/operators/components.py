@@ -25,19 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_cc_cache: list[DataFrame] = []
-
-
-def release_caches() -> int:
-    n = len(_cc_cache)
-    for df in _cc_cache:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _cc_cache.clear()
-    return n
-
+from ..pins import pin
 
 def _local_union_find(rows: list, spark) -> DataFrame:
     """Exact min-label components on the driver for a bounded edge
@@ -98,8 +86,7 @@ def connected_components(
     # the same edges plan reuses this cache — a checkpoint RDD is
     # per-instance and poisons that identity (measured: warm repeats
     # regressed 10.6 → 50-80 s at 96× with an eager checkpoint here)
-    e = e.persist()
-    _cc_cache.append(e)
+    e = pin(e)
     n_edges = e.count()
     # dedup graphs are forests of small cliques: when the SURVIVING
     # edge list is bounded (the count above is already materialized,
@@ -114,8 +101,7 @@ def connected_components(
             [(r[0], r[1]) for r in e.collect()], edges.sparkSession
         )
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = sym.distinct().persist()
-    _cc_cache.append(sym)
+    sym = pin(sym.distinct())
 
     labels = (
         sym.select(F.col("src").alias("node"))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from . import text as TX
 from ..functions.span import _c
+from ..pins import pin
 
 
 # ---------------------------------------------------------------- exact
@@ -108,23 +109,6 @@ def ngram_jaccard_pairs(
 
 # ---------------------------------------------------------------- minhash
 _LONG_MAX = (1 << 63) - 1
-
-# persisted intermediates owned by this module (banded signatures);
-# long-lived sessions call release_caches() to free them explicitly
-_PERSISTED: list[DataFrame] = []
-
-
-def release_caches() -> int:
-    """Unpersist every DataFrame this module has cached; returns count."""
-    n = 0
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
 
 def _spread(df: DataFrame) -> DataFrame:
     """Ensure at least defaultParallelism partitions before a
@@ -361,11 +345,10 @@ def minhash_lsh_pairs(
     # both sides of the candidate self-join read the banded signatures;
     # materialize once (shingle+signature is the expensive stage).
     # MEMORY_AND_DISK: a 10⁹-doc signature table spills instead of
-    # evicting; the handle is registered for release_caches().
+    # evicting; the pin is call-scoped (pins.release).
     from pyspark import StorageLevel
 
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(banded)
+    banded = pin(banded, level=StorageLevel.MEMORY_AND_DISK)
     other = banded.select(
         F.col("id").alias("id_b"),
         F.col("sig").alias("sig_b"),
@@ -514,8 +497,7 @@ def ngram_jaccard_pairs_exploded(
     # the tokenize+shingle+df-cap pipeline exactly once
     from pyspark import StorageLevel
 
-    pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(pre)
+    pre = pin(pre, level=StorageLevel.MEMORY_AND_DISK)
     inter = _gram_pair_intersections(pre, block_cols)
     jac = F.col("inter") / (
         F.col("n_grams") + F.col("n_grams_b") - F.col("inter")
@@ -636,8 +618,7 @@ def ngram_jaccard_histogram(
 
     pre = _exploded_gram_table(docs, id_col, text_col, n, block_cols,
                                max_gram_df)
-    pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(pre)
+    pre = pin(pre, level=StorageLevel.MEMORY_AND_DISK)
     inter = _gram_pair_intersections(pre, block_cols)
     bucket = F.expr(
         f"least(({bins} * inter) div (n_grams + n_grams_b - inter), "
@@ -919,8 +900,7 @@ def ngram_containment_pairs(
     pre = _exploded_gram_table(
         docs, id_col, text_col, n, block_cols, max_gram_df
     )
-    pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(pre)
+    pre = pin(pre, level=StorageLevel.MEMORY_AND_DISK)
     inter = _gram_pair_intersections(pre, block_cols)
     # both directions from ONE pass over the intersections: the union
     # of two projections re-ran the candidate join + pair aggregate
@@ -1012,8 +992,7 @@ def ssjoin_prefix(
     # real deployment materializes.
     from pyspark import StorageLevel
 
-    lists = lists.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(lists)
+    lists = pin(lists, level=StorageLevel.MEMORY_AND_DISK)
     # prefix length |x| - ceil(t|x|) + 1 (>=1 for any t <= 1)
     plen = (F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1).cast("int")
     prefix = lists.select(
@@ -1150,8 +1129,7 @@ def minhash_lsh_pairs_md5(
     )
     from pyspark import StorageLevel
 
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(banded)
+    banded = pin(banded, level=StorageLevel.MEMORY_AND_DISK)
     other = banded.select(
         F.col("id").alias("id_b"),
         F.col("sig").alias("sig_b"),

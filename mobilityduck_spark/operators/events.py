@@ -29,31 +29,11 @@ oracle hash is aggregation-order-free.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# persisted domain-sized intermediates (|users|-sized RFM table, value
-# histograms) consumed by >1 downstream subtree in one operator call;
-# released via release_caches(), same contract as dedup/components
-_PERSISTED: list[DataFrame] = []
-
-
-def release_caches() -> int:
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:
-            pass
-    return n
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
-    return df
+from ..pins import pin
 
 _US_PER_UNIT = {
     "microsecond": 1,
@@ -973,7 +953,7 @@ def rfm_scores(
     # pin the |users|-sized RFM table: the exploded rank relation below
     # and the pivot both derive from it — without the pin the events
     # scan and the user-keyed aggregate re-derive per consumer
-    per = _pin(per)
+    per = pin(per, level=StorageLevel.MEMORY_AND_DISK)
     # ALL THREE ntiles in ONE exploded (metric, value) relation: the
     # three chained _scalable_ntile passes each paid their own offset
     # histogram + join-back + coarse-bucket row_number (69 Exchanges at
@@ -1187,12 +1167,13 @@ def psi_drift(
     # histogram windows (cum is domain-sized — |distinct (g, x)| — so
     # the pin is cheap at any scale)
     w = Window.partitionBy("g").orderBy(F.col("x").asc())
-    cum = _pin(
+    cum = pin(
         h.select(
             "g", "x", "c_old", "c_new",
             F.sum("c_old").over(w).alias("cum_old"),
             F.sum("c_old").over(Window.partitionBy("g")).alias("n_old_tot"),
-        )
+        ),
+        level=StorageLevel.MEMORY_AND_DISK,
     )
     ps = tagged.sparkSession.range(1, n_buckets).select(
         (F.col("id") * (100 / n_buckets)).cast("int").alias("p")
@@ -1224,7 +1205,7 @@ def psi_drift(
         )
     )
     # pinned: the grid (distinct groups) and the left join both read it
-    bucketed = _pin(bucketed)
+    bucketed = pin(bucketed, level=StorageLevel.MEMORY_AND_DISK)
     # complete the (group, bucket) grid so empty buckets still emit
     grid = (
         bucketed.select("g").distinct()
@@ -2559,11 +2540,12 @@ def drift_series(
     # subtrees read it (baseline anchor, type domain, day domain, the
     # series join) — without the pin each re-runs the full scan +
     # groupBy. Domain-sized (|days × types|), so the pin is free.
-    d = _pin(
+    d = pin(
         events.groupBy(
             F.col(ts_col).cast("date").alias("day"),
             F.col(type_col).alias("etype"),
-        ).agg(F.count(F.lit(1)).alias("c"))
+        ).agg(F.count(F.lit(1)).alias("c")),
+        level=StorageLevel.MEMORY_AND_DISK,
     )
     d0 = d.agg(F.min("day").alias("day0"))
     types = d.select("etype").distinct()

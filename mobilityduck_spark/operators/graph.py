@@ -20,18 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_PERSISTED: list[DataFrame] = []
-
-
-def release_caches() -> int:
-    """Unpersist intermediates pinned by label_propagation (same
-    contract as dedup/similarity.release_caches)."""
-    n = 0
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-        n += 1
-    return n
-
+from ..pins import pin
 
 def _canonical_edges(
     edges: DataFrame, src: str, dst: str, max_degree: int | None
@@ -81,8 +70,7 @@ def triangle_stats(
     # union ×2, the three triangle-join sides) — pin it so the
     # dedup/canonicalization shuffle runs once (same multi-consumer
     # persist contract as LPA's edge materialization)
-    e = _canonical_edges(edges, src, dst, max_degree).persist()
-    _PERSISTED.append(e)
+    e = pin(_canonical_edges(edges, src, dst, max_degree))
     # both endpoint degrees from ONE pass: explode(array(a, b)) ≡
     # unionAll of the two projections (order-free under the groupBy)
     deg = (
@@ -124,8 +112,7 @@ def node_triangle_counts(
     # the unionAll formulation re-ran the whole triangle enumeration
     # per corner projection (explode(array(a,b,c)) ≡ the 3-way union,
     # order-free under the groupBy)
-    e = _canonical_edges(edges, src, dst, max_degree).persist()
-    _PERSISTED.append(e)
+    e = pin(_canonical_edges(edges, src, dst, max_degree))
     e2 = e.select(F.col("a").alias("b2"), F.col("b").alias("c"))
     e3 = e.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
     tris = (
@@ -208,16 +195,18 @@ def label_propagation(
     # warm spike in the close-out bench. persist + count (not
     # localCheckpoint): the fixed-rounds loop here grows the plan only
     # linearly so truncation isn't needed, and a persisted DataFrame is
-    # actually RECLAIMED by release_caches().unpersist — checkpoint
+    # actually RECLAIMED by pins.release — checkpoint
     # blocks aren't registered with the cache manager and would leak
     # until GC.
     from pyspark import StorageLevel
 
-    base = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("t"), F.col(weight).alias("w")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    base = pin(
+        edges.select(
+            F.col(src).alias("s"), F.col(dst).alias("t"), F.col(weight).alias("w")
+        ),
+        level=StorageLevel.MEMORY_AND_DISK,
+    )
     n_base = base.count()  # eager: one evaluation, charged here
-    _PERSISTED.append(base)
     # the edge pipeline is already materialized and counted above, so
     # the size gate is free: for bounded dedup graphs, replay the SAME
     # synchronous rounds on the driver instead of a rounds-deep plan of
@@ -342,9 +331,8 @@ def kcore(
     # pipeline three times) — reads the cache.
     from pyspark import StorageLevel
 
-    base = edges.select(src, dst).persist(StorageLevel.MEMORY_AND_DISK)
+    base = pin(edges.select(src, dst), level=StorageLevel.MEMORY_AND_DISK)
     n_edges = base.count()  # eager: one evaluation, charged here
-    _PERSISTED.append(base)
     if n_edges <= local_max_edges:
         return _local_kcore(base, src, dst, k, max_rounds)
     sym = base.select(

@@ -25,32 +25,15 @@ from pyspark.sql.window import Window
 from . import components as CC
 from . import dedup as DD
 from . import text as TX
-
-# stage-boundary persists (released via release_caches, same contract
-# as dedup/components): the funnel output is a UNION of one aggregate
-# per stage, so without a cache each stage re-derives every upstream
-# stage's subtree — the n-gram join + CC closure would run ~5× for the
-# 9-stage production funnel. At 100 TB these are the natural
-# materialization points a real pipeline would write to storage anyway.
-_PERSISTED: list = []
+from ..pins import pin
 
 
-def release_caches() -> int:
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:
-            pass
-    return n
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PERSISTED.append(df)
-    return df
-
-
+# stage-boundary pins (call-scoped, see pins.py): the funnel output is a
+# UNION of one aggregate per stage, so without a cache each stage
+# re-derives every upstream stage's subtree — the n-gram join + CC
+# closure would run ~5× for the 9-stage production funnel. At 100 TB
+# these are the natural materialization points a real pipeline would
+# write to storage anyway.
 def curate_corpus(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -125,7 +108,7 @@ def curate_corpus(
     exact = fp.withColumn(
         "rep", F.min("id").over(Window.partitionBy("fp"))
     )
-    exact_keep = _pin(
+    exact_keep = pin(
         exact.filter(F.col("id") == F.col("rep")).select("id", "lang", "text")
     )
 
@@ -153,7 +136,7 @@ def curate_corpus(
     near_keep = clustered.filter(F.col("id") == F.col("cluster_id"))
     # near-dup survivors with text/lang back (clustered carries ids
     # only); pinned — every later stage and funnel row reads from here
-    kept = _pin(exact_keep.join(near_keep.select("id"), "id"))
+    kept = pin(exact_keep.join(near_keep.select("id"), "id"))
 
     # ------------------------- optional stage: benchmark decontamination
     if bench_docs is not None:
@@ -184,13 +167,13 @@ def curate_corpus(
             .filter(F.col("_hits") >= contam_min_hits)
             .select("id")
         )
-        decon_keep = _pin(kept.join(contaminated, "id", "left_anti"))
+        decon_keep = pin(kept.join(contaminated, "id", "left_anti"))
     else:
         decon_keep = kept
 
     # ------------------------- optional stage: mixture reweighting
     if mixture_fracs is not None:
-        mix_keep = _pin(
+        mix_keep = pin(
             TX.mixture_sample(
                 decon_keep,
                 mixture_fracs,

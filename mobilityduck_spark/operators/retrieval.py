@@ -62,26 +62,9 @@ def _doc_tokens(docs: DataFrame) -> DataFrame:
     ).where(F.col("w").isNotNull())
 
 
-# persisted shared query-term tf relations (one per combined-ranker
-# call); released via release_caches(), same contract as dedup/
-# components/pipeline
-_PERSISTED: list[DataFrame] = []
-
-
-def release_caches() -> int:
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:
-            pass
-    return n
-
-
 def query_term_tf(
     docs: DataFrame,
     queries: list[tuple[str, str]],
-    persist: bool | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The shared substrate every lexical ranker here reads: (qterms,
     tf, stats) where qterms = (query_id, term), tf = (doc_id, dl,
@@ -90,23 +73,9 @@ def query_term_tf(
     set BEFORE the tf shuffle, so corpus-scale postings never
     shuffle), and stats = one row (n_docs, sum_dl).
 
-    With persist=True the tf relation (bounded by |docs| × |query
-    terms|, tiny) is materialized once so multiple rankers in one
-    query read it without re-running the corpus explode — the reason
-    doc_rrf_fusion / doc_retrieval_eval cost ONE tokenize pass for
-    postings instead of one per ranker.
-
-    persist=None (the default) resolves from $SPARK_GRAFT_TF_PERSIST:
-    unset/0 = no pin — right for local[N] where the duplicated tf
-    subtree overlaps across idle cores and a pin serializes it
-    (measured: 2.0 s vs 2.5 s fused at sf0.1); 1 = pin — the cluster
-    deployment default, paying ONE corpus explode instead of one per
-    ranker. An env switch rather than an in-code flip so the scale-out
-    configuration needs no code change (VERDICT r11 item 9)."""
-    import os
-
-    if persist is None:
-        persist = os.environ.get("SPARK_GRAFT_TF_PERSIST", "0") == "1"
+    tf is not pinned: rankers that share it each re-run its subtree,
+    which on local[N] overlaps across idle cores (a pin serialized it:
+    2.5 s vs 2.0 s at sf0.1)."""
     spark = docs.sparkSession
     toks = _doc_tokens(docs).select("doc_id", "w", F.size("w").alias("dl"))
     stats = toks.agg(
@@ -123,9 +92,6 @@ def query_term_tf(
     tf = post.groupBy("doc_id", "dl", "term").agg(
         F.count(F.lit(1)).alias("tf")
     )
-    if persist:
-        tf = tf.persist()
-        _PERSISTED.append(tf)
     return qterms, tf, stats
 
 

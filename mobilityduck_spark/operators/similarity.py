@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.span import _c
+from ..pins import memo, pin
 
 
 def dot(a, b) -> Column:
@@ -238,12 +239,12 @@ def embedding_near_dup_pairs(
     # explode and by BOTH exact-verify sides (va/vb below) — without
     # the pin the embeddings parquet is scanned and projected three
     # more times after the occupancy count. The count doubles as the
-    # eager materialization of the pin. Released via release_caches().
-    base = emb.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # eager materialization of the (call-scoped) pin.
+    base = pin(
+        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
+        level=StorageLevel.MEMORY_AND_DISK,
+    )
     n = base.count()
-    _PERSISTED_CALL.append(base)
     if n_planes is None:
         n_planes = max(4, math.ceil(math.log2(max(2.0, n / target_occupancy))))
     # ALL table signatures in ONE scan, exploded to (id, t, sig), and
@@ -305,61 +306,14 @@ def embedding_near_dup_pairs(
     return scored.filter(F.col("cos") >= min_cos)
 
 
-# persisted IVF assignment tables (session-scoped: paired with the
-# memoized fits in _FIT_CACHE — the train-once/search-many deployment
-# shape); long-lived sessions call release_caches() to free them
-_PERSISTED: list[DataFrame] = []
-# per-call pins (LSH keyed/base relations): safe — and meant — to be
-# released between queries via release_call_caches(); unlike _PERSISTED
-# nothing memoized references them after the call returns
-_PERSISTED_CALL: list[DataFrame] = []
-_FIT_CACHE: dict = {}
-
-
-def release_call_caches() -> int:
-    """Unpersist per-call pins only; keeps the session-scoped index
-    pins and the memoized deterministic fits intact (releasing those
-    between queries would refit the IVF/PQ/SQ8 codebooks per query —
-    the exact harness overhead cached_fit exists to remove)."""
-    n = 0
-    while _PERSISTED_CALL:
-        try:
-            _PERSISTED_CALL.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-def release_caches() -> int:
-    n = release_call_caches()
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    _FIT_CACHE.clear()
-    return n
-
-
-def cached_fit(key, builder):
-    """Memoize a DETERMINISTIC index/codebook build (pq_train,
-    build_ivf_index, sq8_train are all sort-by-id + bounded-sample +
-    seeded fits — same input, same output, always). This is the
-    train-once/search-many deployment shape made explicit: without it
-    every query invocation re-collects the capped train sample and
-    refits driver-side — measured 56 s/call at the 192k-vector sweep
-    point where the 100k cap binds, pure harness overhead at search
-    time. Key by (session, data identity, params); cleared by
-    release_caches(). Pass key=None to bypass."""
-    if key is None:
-        return builder()
-    if key not in _FIT_CACHE:
-        _FIT_CACHE[key] = builder()
-    return _FIT_CACHE[key]
-
-
+# Index builds (build_ivf_index, pq_train, sq8_train) are DETERMINISTIC
+# — sort-by-id + bounded sample + seeded fit, same input, same output —
+# so callers memoize them with pins.memo keyed by (session, data
+# identity, params): the train-once/search-many deployment shape.
+# Without it every query re-collects the capped train sample and refits
+# driver-side (measured 56 s/call at the 192k-vector sweep point where
+# the 100k cap binds). The IVF assignment and code tables they persist
+# are session-scoped pins for the same reason.
 def build_ivf_index(
     emb: DataFrame,
     n_centroids: int = 16,
@@ -422,12 +376,15 @@ def build_ivf_index(
         d2 = (m * m).sum(1)[:, None] - 2.0 * m @ cmat.T + (cmat * cmat).sum(1)
         return pd.Series(d2.argmin(1).astype("int32"))
 
-    assigned = emb.select(
-        F.col(id_col), F.col(vec_col),
-        nearest_cell(F.col(vec_col)).alias("cell"),
-        norm(F.col(vec_col)).alias("_norm"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(assigned)
+    assigned = pin(
+        emb.select(
+            F.col(id_col), F.col(vec_col),
+            nearest_cell(F.col(vec_col)).alias("cell"),
+            norm(F.col(vec_col)).alias("_norm"),
+        ),
+        "session",
+        level=StorageLevel.MEMORY_AND_DISK,
+    )
     centroids = emb.sparkSession.createDataFrame(
         [(i, [float(v) for v in c]) for i, c in enumerate(cent)],
         schema="cell int, centroid array<double>",
@@ -953,10 +910,13 @@ def build_twolevel_cells(
             out[sel] = df_.argmin(1) + off
         return pd.Series(out.astype("int32"))
 
-    assigned = emb.select(
-        F.col(id_col), F.col(vec_col), cell2(F.col(vec_col)).alias("cell")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(assigned)
+    assigned = pin(
+        emb.select(
+            F.col(id_col), F.col(vec_col), cell2(F.col(vec_col)).alias("cell")
+        ),
+        "session",
+        level=StorageLevel.MEMORY_AND_DISK,
+    )
     return assigned
 
 
@@ -1314,16 +1274,16 @@ def ivfpq_topk(
     reconstruction, no cross join against the corpus.
 
     `cache_key` (hashable, e.g. (session, sf, tag)) memoizes the
-    coarse index and the sub-codebooks via cached_fit — the
+    coarse index and the sub-codebooks via pins.memo — the
     train-once/search-many contract; both fits are deterministic."""
-    assigned, centroids = cached_fit(
+    assigned, centroids = memo(
         None if cache_key is None else (cache_key, "ivf", n_centroids, seed),
         lambda: build_ivf_index(
             emb, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
             seed=seed,
         ),
     )
-    cents = cached_fit(
+    cents = memo(
         None if cache_key is None else (cache_key, "pq", m, kc, seed),
         lambda: pq_train(emb, vec_col=vec_col, m=m, k=kc, id_col=id_col),
     )
@@ -1338,11 +1298,10 @@ def ivfpq_topk(
             assigned.select(id_col, "cell"), id_col
         )
         if cache_key is not None:
-            c = c.persist(StorageLevel.MEMORY_AND_DISK)
-            _PERSISTED.append(c)
+            c = pin(c, "session", level=StorageLevel.MEMORY_AND_DISK)
         return c
 
-    codes = cached_fit(
+    codes = memo(
         # the codes are a function of the ASSIGNMENT too: key them by the
         # full coarse-index identity, or a second call with different
         # n_centroids/seed would reuse codes bound to stale cells
@@ -1546,7 +1505,7 @@ def ivfpq_residual_topk(
     functions of the cached assignment."""
     from pyspark import StorageLevel
 
-    assigned, centroids = cached_fit(
+    assigned, centroids = memo(
         None if cache_key is None else (cache_key, "ivf", n_centroids, seed),
         lambda: build_ivf_index(
             emb, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col,
@@ -1568,21 +1527,23 @@ def ivfpq_residual_topk(
         # residualize + train + encode once: all three are downstream
         # of the cached assignment and deterministic, and the (code,
         # cell) table is the index at rest
-        resid = assigned.select(
-            F.col(id_col), F.col("cell"),
-            _residual(F.col(vec_col), F.col("cell")).alias("resid"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED.append(resid)
+        resid = pin(
+            assigned.select(
+                F.col(id_col), F.col("cell"),
+                _residual(F.col(vec_col), F.col("cell")).alias("resid"),
+            ),
+            "session",
+            level=StorageLevel.MEMORY_AND_DISK,
+        )
         cents_ = pq_train(resid, vec_col="resid", m=m, k=kc, id_col=id_col)
         codes_ = pq_codes(resid, cents_, id_col, "resid").join(
             resid.select(id_col, "cell"), id_col
         )
         if cache_key is not None:
-            codes_ = codes_.persist(StorageLevel.MEMORY_AND_DISK)
-            _PERSISTED.append(codes_)
+            codes_ = pin(codes_, "session", level=StorageLevel.MEMORY_AND_DISK)
         return cents_, codes_
 
-    cents, codes = cached_fit(
+    cents, codes = memo(
         None if cache_key is None
         else (cache_key, "respq", m, kc, n_centroids, seed),
         _fit_residual_index,
@@ -2079,12 +2040,11 @@ def rademacher_near_dups(
     # scan, the micro-quantization and all n_planes integer projections
     # run twice (the committed before-plan shows the embeddings parquet
     # scanned 8x through the caller's planted union). bands x |corpus|
-    # rows of (id, qv, nv, band, bkey); released via release_caches().
+    # rows of (id, qv, nv, band, bkey); a call-scoped pin.
     from pyspark import StorageLevel
 
-    keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
+    keyed = pin(keyed, level=StorageLevel.MEMORY_AND_DISK)
     keyed.count()  # eager: both join sides must read the cache, not race it
-    _PERSISTED_CALL.append(keyed)
     other = keyed.select(
         F.col("id").alias("id_b"), F.col("qv").alias("qv_b"),
         F.col("nv").alias("nv_b"),

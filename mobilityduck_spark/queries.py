@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from .functions import set_ as ST
 from .functions import span as S
 from .functions import temporal as TT
+from .pins import memo, pin, release, session_key
 from .sources import tables as SRC
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -185,33 +186,12 @@ def release_operator_caches(session_scoped: bool = False) -> int:
     queries so cache blocks do not accumulate for the whole session
     (VERDICT r11 item 4); results never change, only what stays cached.
 
-    session_scoped=True additionally releases the session-lifetime
-    caches: the memoized IVF/PQ/SQ8 fits + their pinned index tables
-    (similarity.cached_fit's train-once contract) and the BerlinMOD
-    shared trip/segment intermediates built once per session. Use for
-    teardown only — releasing those between queries would rebuild them
-    per query, which is exactly the overhead they exist to remove."""
-    from . import berlinmod
-    from .operators import (
-        basket,
-        components,
-        dedup,
-        events,
-        graph,
-        pipeline,
-        retrieval,
-        similarity,
-    )
-
-    n = 0
-    for mod in (basket, components, dedup, events, graph, pipeline,
-                retrieval):
-        n += mod.release_caches()
-    n += similarity.release_call_caches()
-    if session_scoped:
-        n += similarity.release_caches()
-        n += berlinmod.release_caches()
-    return n
+    session_scoped=True also releases the session scope (pins.py): the
+    memoized IVF/PQ/SQ8 fits and their index tables, the BerlinMOD
+    shared trip/segment intermediates and the assembled temporal
+    tables. Use for teardown only — releasing those between queries
+    would rebuild them per query, the overhead they exist to remove."""
+    return release(session=session_scoped)
 
 
 # =====================================================================
@@ -523,7 +503,9 @@ def _user_trajectories(spark: SparkSession, sf_dir: str):
         )
         return TT.assemble_tsequence(raw, "_raw", out_col="tp", interp="linear")
 
-    return SRC._cached((SRC.session_key(spark), sf_dir, "utraj"), build)
+    return memo(
+        (session_key(spark), sf_dir, "utraj"), lambda: pin(build(), "session")
+    )
 
 
 _TRAJ_SQL = """
@@ -2942,14 +2924,15 @@ def embed_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark import StorageLevel
 
         cents = SIM.pq_train(corpus, m=8, k=16)
-        codes = SIM.pq_codes(corpus, cents, "vec_id", "embedding").persist(
-            StorageLevel.MEMORY_AND_DISK
+        codes = pin(
+            SIM.pq_codes(corpus, cents, "vec_id", "embedding"),
+            "session",
+            level=StorageLevel.MEMORY_AND_DISK,
         )
-        SIM._PERSISTED.append(codes)
         return cents, codes
 
-    cents, codes = SIM.cached_fit(
-        (SRC.session_key(spark), sf_dir, "pq_planted", 8, 16),
+    cents, codes = memo(
+        (session_key(spark), sf_dir, "pq_planted", 8, 16),
         _fit_pq_index,
     )
     qdf = emb.filter(
@@ -3080,8 +3063,8 @@ def embed_ivf_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
     )
     corpus = emb.unionByName(plants)
-    assigned, centroids = SIM.cached_fit(
-        (SRC.session_key(spark), sf_dir, "ivf_planted", 16),
+    assigned, centroids = memo(
+        (session_key(spark), sf_dir, "ivf_planted", 16),
         lambda: SIM.build_ivf_index(corpus, n_centroids=16),
     )
     qdf = emb.filter(
@@ -3112,8 +3095,8 @@ def embed_ivf_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    assigned, centroids = SIM.cached_fit(
-        (SRC.session_key(spark), sf_dir, "ivf_emb", 16),
+    assigned, centroids = memo(
+        (session_key(spark), sf_dir, "ivf_emb", 16),
         lambda: SIM.build_ivf_index(emb, n_centroids=16),
     )
     return SIM.ivf_search(
@@ -3340,8 +3323,8 @@ def embed_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    codebook = SIM.cached_fit(
-        (SRC.session_key(spark), sf_dir, "sq8"),
+    codebook = memo(
+        (session_key(spark), sf_dir, "sq8"),
         lambda: SIM.sq8_train(emb),
     )
     return SIM.sq8_topk(emb, queries_df, k=5, codebook=codebook).select(
@@ -5446,8 +5429,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semi-join): persist it, or the whole signature pipeline (pandas
     # UDF over every doc) re-evaluates per consumer — measured 90 s vs
     # ~25 s first-exposure at sf1
-    cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    DD._PERSISTED.append(cand)
+    cand = pin(cand, level=StorageLevel.MEMORY_AND_DISK)
     # exact verify restricted to candidate DOCS (semi-join), then to
     # candidate PAIRS: n_grams comes from the full-corpus df-capped
     # table, so the Jaccard is identical to the all-pairs formulation
@@ -5461,8 +5443,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the full df-capped gram table now has exactly one consumer (this
     # semi-join) and streams through without materializing 10x the rows
     pre_c = pre.join(cids, "id", "left_semi")
-    pre_c = pre_c.persist(StorageLevel.MEMORY_AND_DISK)
-    DD._PERSISTED.append(pre_c)
+    pre_c = pin(pre_c, level=StorageLevel.MEMORY_AND_DISK)
     inter = DD._gram_pair_intersections(pre_c, ("lang", "lb")).join(
         cand,
         (F.col("id") == F.col("cid_a")) & (F.col("id_b") == F.col("cid_b")),
@@ -6698,10 +6679,8 @@ def doc_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both rankers read ONE query-term tf substrate (the overlap count
     # is a plain aggregate over the same distinct-(doc, term) rows BM25
     # scores, so results are identical to the two-pass formulation).
-    # The tf pin is env-keyed ($SPARK_GRAFT_TF_PERSIST, default off):
-    # at sf0.1 the duplicated tf subtree overlaps across cores and a
-    # persist serializes it (measured 2.0 s vs 2.5 s min); a cluster
-    # deployment sets the env to pay ONE corpus explode instead of two
+    # tf is not pinned: at sf0.1 the duplicated tf subtree overlaps
+    # across cores and a persist serializes it (measured 2.0 s vs 2.5 s)
     qterms, tf, stats = RT.query_term_tf(docs, _BM25_QUERIES)
     bm = RT.bm25_rank_from_tf(qterms, tf, stats, k=10).select(
         "query_id", "doc_id", "rnk"
@@ -7343,7 +7322,7 @@ def embed_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     topk = SIM.ivfpq_topk(
         corpus, qdf, k=3, n_centroids=16, n_probe=2, m=8, kc=16,
-        cache_key=(SRC.session_key(spark), sf_dir, "ivfpq_planted"),
+        cache_key=(session_key(spark), sf_dir, "ivfpq_planted"),
     )
     return (
         topk.filter(F.col("vec_id") == F.col("query_id") + 1_000_000)
@@ -8046,7 +8025,7 @@ def embed_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     topk = SIM.ivfpq_residual_topk(
         corpus, qdf, k=3, n_centroids=16, n_probe=2, m=8, kc=16,
-        cache_key=(SRC.session_key(spark), sf_dir, "ivfpq_res_planted"),
+        cache_key=(session_key(spark), sf_dir, "ivfpq_res_planted"),
     )
     return (
         topk.filter(F.col("vec_id") == F.col("query_id") + 1_000_000)
@@ -8716,11 +8695,9 @@ def doc_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = SRC.load(spark, sf_dir, "documents")
     # run and qrels read ONE query-term tf substrate (the qrels
     # evidence — distinct (doc, query-term) rows — is exactly the tf
-    # relation BM25 scores). The tf pin is env-keyed
-    # ($SPARK_GRAFT_TF_PERSIST, default off): at sf0.1 the duplicated
+    # relation BM25 scores). tf is not pinned: at sf0.1 the duplicated
     # subtree overlaps across cores and a persist serializes it
-    # (measured 2.07 s vs 2.93 s min); a cluster deployment sets the
-    # env to pay one explode instead of two
+    # (measured 2.07 s vs 2.93 s min)
     qterms, tf, stats = RT.query_term_tf(docs, _BM25_QUERIES)
     run = RT.bm25_rank_from_tf(qterms, tf, stats, k=10).select(
         "query_id", "doc_id", "rnk"

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import temporal as TT
+from ..pins import memo, pin, session_key
 from . import tables as SRC
 
 GAP_SECS = 7200
@@ -223,19 +224,16 @@ def trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("user_id", "vehicle_id")
 
 
-_VEH_CACHE: dict = {}
-
-
 def vehicles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vehicle dim derived from events (scan + distinct shuffle).
     Persisted per session: it feeds licences1/licences2/probe dims in
     most bm queries, and several of those embed it in multiple
     materialized (checkpointed) subtrees per run — without the cache
     each run re-scans and re-shuffles the events table per use."""
-    key = (SRC.session_key(spark), sf_dir)
-    if key not in _VEH_CACHE:
-        _VEH_CACHE[key] = _vehicles_uncached(spark, sf_dir).persist()
-    return _VEH_CACHE[key]
+    return memo(
+        (session_key(spark), sf_dir, "vehicles"),
+        lambda: pin(_vehicles_uncached(spark, sf_dir), "session"),
+    )
 
 
 def _vehicles_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:

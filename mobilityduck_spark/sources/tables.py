@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import temporal as TT
+from ..pins import memo, pin, release, session_key
 
 _NS_TS_COLS: dict[str, list[str]] = {}
 
@@ -80,39 +81,16 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
-# Assembled temporal tables are the engine's "materialized view" of the
-# events feed: many registry queries read the same one, so cache per
-# (session, sf_dir, variant) exactly like berlinmod._trips. Callers that
-# need a one-off assembly can bypass with cache=False.
-_TEMPORAL_CACHE: dict[tuple, DataFrame] = {}
-
-
-def session_key(spark: SparkSession) -> str:
-    """Stable per-JVM-context cache key. id(spark) is unsafe here: after
-    a session is GC'd a new object can land on the same address and be
-    handed a stopped session's persisted DataFrame."""
-    return spark.sparkContext.applicationId
-
-
 def release_temporal_caches() -> int:
-    """Unpersist every cached assembled temporal table; returns count."""
-    n = 0
-    while _TEMPORAL_CACHE:
-        _, df = _TEMPORAL_CACHE.popitem()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+    """Release the session scope (the assembled temporal tables and
+    every other session pin); returns the number of pins released."""
+    return release(session=True)
 
 
-def _cached(key: tuple, build) -> DataFrame:
-    if key not in _TEMPORAL_CACHE:
-        _TEMPORAL_CACHE[key] = build().persist()
-    return _TEMPORAL_CACHE[key]
-
-
+# Assembled temporal tables are the engine's "materialized view" of the
+# events feed: many registry queries read the same one, so they are
+# pinned and memoized per (session, sf_dir, variant) in the session
+# scope, exactly like berlinmod._trips.
 def user_tfloat(spark: SparkSession, sf_dir: str, interp: str = "step") -> DataFrame:
     """events → one tfloat per user (sorted, deduped inside tsequence);
     staged assembly (see assemble_tsequence PERF note); persisted per
@@ -127,7 +105,10 @@ def user_tfloat(spark: SparkSession, sf_dir: str, interp: str = "step") -> DataF
         )
         return TT.assemble_tsequence(raw, "_raw", out_col="tf", interp=interp)
 
-    return _cached((session_key(spark), sf_dir, "tfloat", interp), build)
+    return memo(
+        (session_key(spark), sf_dir, "tfloat", interp),
+        lambda: pin(build(), "session"),
+    )
 
 
 def user_tbool(
@@ -148,7 +129,10 @@ def user_tbool(
         )
         return TT.assemble_tsequence(raw, "_raw", out_col="tb", interp="step")
 
-    return _cached((session_key(spark), sf_dir, "tbool", threshold), build)
+    return memo(
+        (session_key(spark), sf_dir, "tbool", threshold),
+        lambda: pin(build(), "session"),
+    )
 
 
 def period_grid(

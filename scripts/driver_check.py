@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entry_mod
+from mobilityduck_spark import pins
 from mobilityduck_spark.session import get_spark
 
 TABLES = (
@@ -83,9 +84,10 @@ def main() -> None:
     failed = []
     report: dict[str, dict] = {}
     for name in names:
-        qdf = queries[name](spark, sf_dir)
-        cols = sorted(qdf.columns)
-        spark_rows = [tuple(row[c] for c in cols) for row in qdf.collect()]
+        with pins.query_scope(name):
+            qdf = queries[name](spark, sf_dir)
+            cols = sorted(qdf.columns)
+            spark_rows = [tuple(row[c] for c in cols) for row in qdf.collect()]
         if name not in oracles:
             print(f"{name}: rows-only ({len(spark_rows)} rows)")
             report[name] = {

@@ -16,6 +16,7 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+from mobilityduck_spark import pins
 from mobilityduck_spark.session import get_spark
 
 
@@ -30,7 +31,7 @@ def main() -> None:
             print(f"SKIP {name}: not registered here")
             continue
         buf = io.StringIO()
-        with redirect_stdout(buf):
+        with pins.query_scope(name), redirect_stdout(buf):
             qs[name](spark, sf_dir).explain("formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:

@@ -5,6 +5,7 @@ paths), plus the docs-level cluster assignment."""
 import pyspark.sql.functions as F
 import pytest
 
+from mobilityduck_spark import pins
 from mobilityduck_spark.operators import components as CC
 
 
@@ -65,7 +66,7 @@ def test_local_gate_matches_distributed(spark):
                 df, local_max_edges=0).collect()}
     assert local == dist
     assert (0, 0) in local and (102, 0) in local  # bridge merged, min label
-    CC.release_caches()
+    pins.release()
 
 
 def test_assign_clusters_keep_flags(spark):
@@ -78,4 +79,4 @@ def test_assign_clusters_keep_flags(spark):
     assert out[6] == (2, False)
     for singleton in (1, 3, 4, 7):
         assert out[singleton] == (singleton, True)
-    CC.release_caches()
+    pins.release()

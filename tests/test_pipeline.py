@@ -4,7 +4,7 @@ representatives keep, members drop; split labels partition the keeps)."""
 
 import pyspark.sql.functions as F
 
-from mobilityduck_spark.operators import components as CC
+from mobilityduck_spark import pins
 from mobilityduck_spark.operators import dedup as DD
 from mobilityduck_spark.operators import pipeline as PL
 from mobilityduck_spark.sources import tables as SRC
@@ -20,9 +20,7 @@ def _curated(spark):
     manifest, funnel = PL.curate_corpus(u)
     m = manifest.collect()
     f = {r["stage"]: r["n_docs"] for r in funnel.collect()}
-    PL.release_caches()
-    DD.release_caches()
-    CC.release_caches()
+    pins.release()
     return m, f
 
 
@@ -479,9 +477,7 @@ def test_full_funnel_stage_invariants(spark):
     )
     f = {r["stage"]: r["n_docs"] for r in funnel.collect()}
     m = manifest.collect()
-    PL.release_caches()
-    DD.release_caches()
-    CC.release_caches()
+    pins.release()
     assert f["4_near_dup"] >= f["5_decontam"] >= f["6_mixture"]
     # mixture quota exactness: per-lang kept == ceil(frac * decontam_n)
     drops = {}

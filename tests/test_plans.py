@@ -9,6 +9,7 @@ must keep the properties that make them scale (SURVEY.md §4.3):
 import pytest
 from pyspark.sql import functions as F
 
+from mobilityduck_spark import pins
 from mobilityduck_spark import queries as Q
 from mobilityduck_spark.plans import (
     has_pushed_filter,
@@ -98,7 +99,7 @@ def test_point_hits_plan_codegen_no_cartesian(spark):
     codegen (not an interpreted HOF)."""
     from mobilityduck_spark import berlinmod as Q
 
-    Q.release_caches()
+    pins.release(session=True)
     hits = Q._point_hits(spark, SF)
     opt = hits._jdf.queryExecution().optimizedPlan().toString()
     assert "CartesianProduct" not in opt
@@ -109,7 +110,7 @@ def test_point_hits_plan_codegen_no_cartesian(spark):
     # shuffled cartesian
     assert "BroadcastNestedLoopJoin" in opt
     assert hits.count() > 0
-    Q.release_caches()
+    pins.release(session=True)
 
 
 def test_tpch_q4_semi_join_no_cartesian(spark):
@@ -178,7 +179,7 @@ def test_connected_components_no_cartesian(spark):
     plan = str(out._jdf.queryExecution().executedPlan())
     assert "CartesianProduct" not in plan
     assert out.count() == 40
-    CC.release_caches()
+    pins.release()
 
 
 def test_stratified_sample_broadcasts_flags_no_cartesian(spark):
@@ -259,9 +260,7 @@ def test_segment_relational_queries_broadcast_probe_dims(spark):
         c = plan_counts(df)
         assert c["broadcast_joins"] >= 1, f"{name}: probe dim must broadcast"
         assert c["sortmerge_joins"] <= 1, f"{name}: {c}"  # licence join only
-    from mobilityduck_spark import berlinmod as BMQ
-
-    BMQ.release_caches()
+    pins.release(session=True)
 
 
 def test_events_enrich_broadcasts_dim(spark):

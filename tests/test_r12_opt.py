@@ -4,8 +4,6 @@
   (no aggregation buffer ever holds a degenerate basket's item set);
 - the fused single-rank RFM reproduces the old three-pass ntile chain
   exactly;
-- release_operator_caches() drains the per-call pin registries and the
-  storage layer (bench.py calls it between queries);
 - incremental_near_dups' map-side verify emits the same pairs as the
   dedup-then-verify formulation it replaced.
 """
@@ -127,21 +125,6 @@ def test_rfm_fused_rank_matches_three_pass(spark):
             assert g[k] == e[k], (uid, k, g, e)
         assert g["rfm"] == e["r_score"] * 100 + e["f_score"] * 10 + e["m_score"]
     Q.release_operator_caches()
-
-
-def test_release_operator_caches_drains_pins(spark):
-    jsc = spark.sparkContext._jsc
-    Q.release_operator_caches()
-    base = jsc.getPersistentRDDs().size()
-    df = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "a"), (2, "b")], "b bigint, i string"
-    )
-    BK.pair_rules(df, "b", "i").collect()
-    assert BK._PERSISTED, "pair_rules must register its pin"
-    n = Q.release_operator_caches()
-    assert n >= 1
-    assert not BK._PERSISTED
-    assert jsc.getPersistentRDDs().size() <= base
 
 
 def test_incremental_near_dups_mapside_verify_parity(spark):

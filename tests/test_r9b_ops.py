@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from mobilityduck_spark import pins
 from mobilityduck_spark.operators import graph as G
 from mobilityduck_spark.operators import similarity as SIM
 from mobilityduck_spark.operators import skyline as SK
@@ -103,7 +104,7 @@ def test_kcore_matches_python_peel_on_random_graph(spark, seed, k):
     }
     want = {(n_, d) for n_, d in _py_kcore(edges, k).items()}
     assert got == want
-    G.release_caches()
+    pins.release()
 
 
 def test_kcore_empty_core(spark):
@@ -113,7 +114,7 @@ def test_kcore_empty_core(spark):
         [(i, i + 1) for i in range(8)], "a long, b long"
     )
     assert G.kcore(df, k=2).count() == 0
-    G.release_caches()
+    pins.release()
 
 
 def test_kcore_long_path_runs_to_fixpoint(spark):
@@ -125,7 +126,7 @@ def test_kcore_long_path_runs_to_fixpoint(spark):
         [(i, i + 1) for i in range(120)], "a long, b long"
     )
     assert G.kcore(df, k=2).count() == 0
-    G.release_caches()
+    pins.release()
 
 
 def test_kcore_max_rounds_exhaustion_raises(spark):
@@ -136,7 +137,7 @@ def test_kcore_max_rounds_exhaustion_raises(spark):
     )
     with pytest.raises(RuntimeError, match="max_rounds"):
         G.kcore(df, k=2, max_rounds=2)
-    G.release_caches()
+    pins.release()
 
 
 def _py_skyline(pts):
@@ -837,7 +838,7 @@ def test_kcore_local_gate_matches_distributed(spark, seed, k):
         for r in G.kcore(df, k=k, local_max_edges=0).collect()
     }
     assert local == dist
-    G.release_caches()
+    pins.release()
 
 
 def test_lpa_local_gate_matches_distributed(spark):
@@ -865,4 +866,4 @@ def test_lpa_local_gate_matches_distributed(spark):
             ).collect()
         }
         assert local == dist, rounds
-    G.release_caches()
+    pins.release()

@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from mobilityduck_spark import pins
 from mobilityduck_spark.operators import similarity as SIM
 from mobilityduck_spark.sources import tables as SRC
 
@@ -57,7 +58,7 @@ def test_ivf_index_many_centroids(spark):
     assert rows and all(r["rank"] <= 3 for r in rows)
     plan = str(out._jdf.queryExecution().executedPlan())
     assert "CartesianProduct" not in plan
-    SIM.release_caches()
+    pins.release(session=True)
 
 
 def test_lsh_topk_subset_of_universe(spark):
@@ -96,7 +97,7 @@ def test_ivf_index_save_load_roundtrip(spark, tmp_path):
         for r in SIM.ivf_search(a2, c2, queries_df, k=5, n_probe=3).collect()
     )
     assert before == after
-    SIM.release_caches()
+    pins.release(session=True)
 
 
 def test_sq8_codes_bounds_and_roundtrip(spark):
