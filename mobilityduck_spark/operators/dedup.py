@@ -3,14 +3,18 @@
 Four tiers, in increasing fuzziness:
 - exact: md5 fingerprint groupBy (one shuffle on the hash — even key
   distribution by construction);
-- n-gram Jaccard: exact set similarity within cheap blocking keys;
+- n-gram Jaccard: exact set similarity over df-capped exploded grams
+  within cheap blocking keys;
 - MinHash + LSH: shingles → minhash signature → band buckets →
-  candidate pairs via equi-join on (band, band-hash) — the web-scale
+  candidate pairs via equi-join on (band, key) — the web-scale
   path: no pairwise blowup, shuffle keys are bucket hashes;
-- SimHash: 64-bit bit-vote fingerprint, near-dups = small Hamming
+- SimHash: 128-bit bit-vote fingerprint, near-dups = small Hamming
   distance within LSH-style chunk buckets.
 
-All expression-based (xxhash64/md5 are JVM built-ins); no UDFs.
+The MinHash and SimHash families build a keyed relation and hand the
+band self-join, verify and dedup to operators/lsh.py. Hashes are JVM
+built-ins (xxhash64/md5); the signature and fingerprint kernels are
+numpy pandas UDFs.
 """
 
 from __future__ import annotations
@@ -20,6 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import lsh as LSH
 from . import text as TX
 from ..functions.span import _c
 from ..pins import pin
@@ -48,68 +53,7 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-# ---------------------------------------------------------------- jaccard
-def ngram_set(text, n: int = 3) -> Column:
-    """Distinct word-n-gram hash set."""
-    return F.array_distinct(TX.rolling_hash_shingles(text, k=n))
-
-
-def ngram_set_from_tokens(toks, n: int = 3) -> Column:
-    """Distinct word-n-gram hash set from an ALREADY-MATERIALIZED token
-    array column. Callers should project `tokens(text)` in its own
-    select first: referencing the tokenize subtree inside the
-    per-element lambda re-evaluates it per gram (interpreted HOF, no
-    CSE) — O(tokens²) per doc, measured 5 s for 5 k docs at sf0.1."""
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - n + 1, F.lit(1)))
-    return F.array_distinct(
-        F.transform(
-            idx, lambda i: F.xxhash64(F.array_join(F.slice(toks, i, n), " "))
-        )
-    )
-
-
-def jaccard(a, b) -> Column:
-    inter = F.size(F.array_intersect(_c(a), _c(b)))
-    union = F.size(F.array_union(_c(a), _c(b)))
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    block_cols: tuple[str, ...] = ("lang",),
-) -> DataFrame:
-    """Exact n-gram Jaccard over blocked candidate pairs. Blocking keys
-    bound the quadratic term; at scale use minhash_lsh_pairs instead."""
-    pre = docs.select(
-        *[F.col(c) for c in block_cols],
-        F.col(id_col).alias("id"),
-        ngram_set(F.col(text_col), n).alias("grams"),
-    )
-    a = pre
-    b = pre.select(
-        *[F.col(c).alias(f"{c}_b") for c in block_cols],
-        F.col("id").alias("id_b"),
-        F.col("grams").alias("grams_b"),
-    )
-    cond = [a[c] == b[f"{c}_b"] for c in block_cols] + [a["id"] < b["id_b"]]
-    joined = a.join(b, cond)
-    return (
-        joined.select(
-            F.col("id").alias("id_a"),
-            F.col("id_b"),
-            F.round(jaccard(F.col("grams"), F.col("grams_b")), 6).alias("jac"),
-        )
-        .filter(F.col("jac") >= threshold)
-    )
-
-
 # ---------------------------------------------------------------- minhash
-_LONG_MAX = (1 << 63) - 1
-
 def _spread(df: DataFrame) -> DataFrame:
     """Ensure at least defaultParallelism partitions before a
     compute-heavy per-row stage. A small single-row-group parquet file
@@ -120,34 +64,6 @@ def _spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def minhash_signature_from_shingles(shingles, num_hashes: int = 32) -> Column:
-    """MinHash signature in ONE pass over the shingle array: fold with an
-    elementwise-min accumulator of num_hashes lanes (zip_with + least).
-
-    Single traversal matters: the naive per-hash-function formulation
-    (num_hashes separate transforms over the shingle expression)
-    re-evaluates the shingle subtree per lane under interpreted
-    higher-order-function eval — measured 180s vs ~4s at sf0.1.
-    """
-    init = F.array(*[F.lit(_LONG_MAX).cast("long") for _ in range(num_hashes)])
-
-    def lane_hashes(s: Column) -> Column:
-        return F.array(*[F.xxhash64(F.lit(i), s) for i in range(num_hashes)])
-
-    return F.aggregate(
-        _c(shingles),
-        init,
-        lambda acc, s: F.zip_with(acc, lane_hashes(s), lambda a, b: F.least(a, b)),
-    )
-
-
-def minhash_signature(text, num_hashes: int = 32, shingle_k: int = 5) -> Column:
-    """MinHash signature of a text column (shingle + fold)."""
-    return minhash_signature_from_shingles(
-        TX.rolling_hash_shingles(text, k=shingle_k), num_hashes
-    )
 
 
 def minhash_lane_constants() -> tuple[np.ndarray, np.ndarray]:
@@ -196,51 +112,29 @@ def _banded_signatures(
     text_col: str,
     num_hashes: int,
     bands: int,
-    shingle_k: int,
+    shingles,
+    band_hash,
 ) -> DataFrame:
-    """Shared head of the LSH pipelines: tokens → shingle hashes (JVM
-    xxhash) → numpy-vectorized minhash signature → exploded band rows
-    (id, sig, band, bhash). Select barriers keep each expensive column
-    evaluated once (the interpreted fold costs ~8s at sf0.1, the numpy
-    kernel <1s)."""
+    """Shared head of the MinHash pipelines: tokens → shingle hashes
+    (`shingles(tokens)`, JVM-side) → numpy-vectorized minhash signature
+    → one (id, sig, band, key) row per band, key = `band_hash(lanes)`
+    over the band's num_hashes/bands signature lanes. Select barriers
+    keep each expensive column evaluated once (the interpreted fold
+    costs ~8s at sf0.1, the numpy kernel <1s)."""
     rows = num_hashes // bands
     shingled = _spread(docs).select(
         F.col(id_col).alias("id"),
         TX.tokens(F.col(text_col)).alias("_toks"),
-    ).select(
-        "id",
-        TX.rolling_hash_shingles_from_tokens(
-            F.col("_toks"), k=shingle_k
-        ).alias("sh"),
-    )
+    ).select("id", shingles(F.col("_toks")).alias("sh"))
     sig_udf = minhash_signature_numpy_udf()
     sig = shingled.select(
         "id",
         sig_udf(F.col("sh"), F.lit(num_hashes)).alias("sig"),
     )
-    return sig.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at(F.col("sig"), b * rows + r + 1)
-                                for r in range(rows)
-                            ]
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
-        "id", "sig",
-        F.col("bb.band").alias("band"), F.col("bb.bhash").alias("bhash"),
-    )
+    return LSH.band_rows(sig, [
+        band_hash([F.element_at(F.col("sig"), b * rows + r + 1) for r in range(rows)])
+        for b in range(bands)
+    ])
 
 
 def minhash_band_index(
@@ -251,14 +145,17 @@ def minhash_band_index(
     bands: int = 8,
     shingle_k: int = 5,
 ) -> DataFrame:
-    """The prior snapshot's materialized LSH index: (id, sig, band,
-    bhash), one row per (doc, band). A deployment writes this once per
-    snapshot — bucketed by (band, bhash), see sources.tables.
+    """The banded MinHash signatures of `docs`: (id, sig, band, key),
+    one row per (doc, band), xxhash64 shingle and band hashes. As the
+    prior snapshot's materialized LSH index, a deployment writes this
+    once per snapshot — bucketed by (band, key), see sources.tables.
     write_bucketed — so every subsequent ingest batch band-joins it
     without reshuffling the snapshot (the near-dup analog of the
     exact-fp index in incremental_dedup)."""
     return _banded_signatures(
-        docs, id_col, text_col, num_hashes, bands, shingle_k
+        docs, id_col, text_col, num_hashes, bands,
+        lambda toks: TX.rolling_hash_shingles_from_tokens(toks, k=shingle_k),
+        lambda lanes: F.xxhash64(*lanes),
     )
 
 
@@ -281,35 +178,21 @@ def incremental_near_dups(
     two signatures, identical to the batch operator's estimator.
 
     Candidates dedupe on the pair key (a pair colliding in several
-    bands is emitted once); the join keys are (band, bhash) — the same
+    bands is emitted once); the join keys are (band, key) — the same
     well-distributed buckets as the batch path, so skew follows content
-    duplication exactly as there."""
-    banded_new = _banded_signatures(
+    duplication exactly as there. The only band join that is not a
+    self-join; verify runs map-side as in lsh.band_pairs."""
+    banded_new = minhash_band_index(
         new_docs, id_col, text_col, num_hashes, bands, shingle_k
     )
     prior = prior_index.select(
-        F.col("id").alias("id_p"),
-        F.col("sig").alias("sig_p"),
-        F.col("band").alias("band_p"),
-        F.col("bhash").alias("bhash_p"),
+        *[F.col(c).alias(f"{c}_p") for c in ("id", "sig", "band", "key")]
     )
     cand = banded_new.join(
         prior,
-        (F.col("band") == F.col("band_p"))
-        & (F.col("bhash") == F.col("bhash_p")),
+        (F.col("band") == F.col("band_p")) & (F.col("key") == F.col("key_p")),
     )
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sig"), F.col("sig_p"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    ) / F.lit(num_hashes)
-    # verify map-side BEFORE the pair-dedup exchange (same argument as
-    # the batch LSH family): est_jaccard is a pure function of the two
-    # signatures — identical on every duplicate band collision — so
-    # filter-then-distinct equals dedup-then-verify while the exchange
-    # carries (new_id, prior_id, est) per SURVIVING pair instead of two
-    # full signature arrays per raw collision row.
+    est = LSH.matched_lanes(F.col("sig"), F.col("sig_p")) / F.lit(num_hashes)
     return (
         cand.select(
             F.col("id").alias("new_id"),
@@ -334,133 +217,33 @@ def minhash_lsh_pairs(
 
     signature → `bands` bands of num_hashes/bands rows; band hash =
     xxhash64 of the band slice; candidates = pairs sharing ≥1 band
-    bucket (deduped via min band); estimated Jaccard = fraction of equal
-    signature positions. Shuffles: one groupBy for signatures is not
-    needed (map-side), one equi-join shuffle on (band, hash) — this is
-    the plan that scales to billions of docs.
+    bucket (lsh.band_pairs); estimated Jaccard = fraction of equal
+    signature positions. One equi-join shuffle on (band, key) — the
+    plan that scales to billions of docs.
     """
-    banded = _banded_signatures(
+    keyed = minhash_band_index(
         docs, id_col, text_col, num_hashes, bands, shingle_k
     )
-    # both sides of the candidate self-join read the banded signatures;
-    # materialize once (shingle+signature is the expensive stage).
-    # MEMORY_AND_DISK: a 10⁹-doc signature table spills instead of
-    # evicting; the pin is call-scoped (pins.release).
-    from pyspark import StorageLevel
+    est = LSH.matched_lanes(F.col("sig"), F.col("sig_b")) / F.lit(num_hashes)
+    return LSH.band_pairs(
+        keyed,
+        F.round(est, 6).alias("est_jaccard"),
+        F.col("est_jaccard") >= min_est_jaccard,
+    )
 
-    banded = pin(banded, level=StorageLevel.MEMORY_AND_DISK)
-    other = banded.select(
-        F.col("id").alias("id_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("band").alias("band_b"),
-        F.col("bhash").alias("bhash_b"),
-    )
-    cand = banded.join(
-        other,
-        (F.col("band") == F.col("band_b"))
-        & (F.col("bhash") == F.col("bhash_b"))
-        & (F.col("id") < F.col("id_b")),
-    )
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sig"), F.col("sig_b"), lambda x, y: x == y),
-            lambda eq: eq,
+
+# ---------------------------------------------------------------- jaccard
+def ngram_set_from_tokens(toks, n: int = 3) -> Column:
+    """Distinct word-n-gram hash set from an ALREADY-MATERIALIZED token
+    array column. Callers should project `tokens(text)` in its own
+    select first: referencing the tokenize subtree inside the
+    per-element lambda re-evaluates it per gram (interpreted HOF, no
+    CSE) — O(tokens²) per doc, measured 5 s for 5 k docs at sf0.1."""
+    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - n + 1, F.lit(1)))
+    return F.array_distinct(
+        F.transform(
+            idx, lambda i: F.xxhash64(F.array_join(F.slice(toks, i, n), " "))
         )
-    ) / F.lit(num_hashes)
-    # estimate-verify map-side BEFORE the pair-dedup shuffle:
-    # est_jaccard is a pure function of (id, id_b) — identical on every
-    # duplicate band collision — so filter-then-distinct equals the old
-    # dedup-then-filter while the exchange carries (id_a, id_b, est)
-    # per SURVIVING pair instead of two full signature arrays per raw
-    # candidate row
-    return (
-        cand.select(
-            F.col("id").alias("id_a"),
-            F.col("id_b"),
-            F.round(est, 6).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= min_est_jaccard)
-        .distinct()
-    )
-
-
-# ---------------------------------------------------------------- simhash
-def simhash(text, hashbits: int = 64) -> Column:
-    """64-bit SimHash: per token hash, vote +1/-1 per bit, sign →
-    fingerprint bit. Expression-only via bit arithmetic over an
-    aggregate of per-bit counters."""
-    toks = TX.tokens(text)
-    hashes = F.transform(toks, lambda w: F.xxhash64(w))
-    # votes[b] = Σ tokens (bit b set ? 1 : -1); bit b of result = votes[b] > 0
-    bit_cols = []
-    for b in range(hashbits):
-        def _bit_set(bb):
-            return lambda h: F.shiftright(h, bb).bitwiseAND(F.lit(1)) == 1
-
-        ones = F.size(F.filter(hashes, _bit_set(b)))
-        votes = ones * 2 - F.size(hashes)
-        bit_cols.append(F.when(votes > 0, F.lit(1).cast("long")).otherwise(F.lit(0)))
-    out = F.lit(0).cast("long")
-    for b, bit in enumerate(bit_cols):
-        out = out.bitwiseOR(F.shiftleft(bit, b))
-    return out
-
-
-def hamming64(a, b) -> Column:
-    return F.bit_count(_c(a).bitwiseXOR(_c(b)))
-
-
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 8,
-    chunks: int = 4,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: candidates share at least one of
-    `chunks` 16-bit fingerprint chunks (pigeonhole guarantees recall for
-    hamming < chunks), verified by exact Hamming distance."""
-    sh = docs.select(F.col(id_col).alias("id"), simhash(F.col(text_col)).alias("sh"))
-    width = 64 // chunks
-    mask = (1 << width) - 1
-    chunked = sh.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("sh"), c * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("ckey"),
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("cc"),
-    ).select("id", "sh", "cc.chunk", "cc.ckey")
-    other = chunked.select(
-        F.col("id").alias("id_b"), F.col("sh").alias("sh_b"),
-        F.col("chunk").alias("chunk_b"), F.col("ckey").alias("ckey_b"),
-    )
-    cand = chunked.join(
-        other,
-        (F.col("chunk") == F.col("chunk_b"))
-        & (F.col("ckey") == F.col("ckey_b"))
-        & (F.col("id") < F.col("id_b")),
-    )
-    # hamming-verify map-side BEFORE the pair-dedup shuffle (the
-    # distance is fixed per (id, id_b), so filter-then-distinct is
-    # result-identical; only surviving 3-int rows cross the exchange)
-    return (
-        cand.select(
-            F.col("id").alias("id_a"),
-            F.col("id_b"),
-            hamming64(F.col("sh"), F.col("sh_b")).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
     )
 
 
@@ -476,11 +259,11 @@ def ngram_jaccard_pairs_exploded(
     """Scalable exact n-gram Jaccard: explode grams → equi-join on
     (block, gram) → count shared grams per pair → |A∩B| / (|A|+|B|−|A∩B|).
 
-    Identical results to ngram_jaccard_pairs, different physical plan:
-    instead of interpreted array_intersect per candidate pair (quadratic
-    in block size, measured 22s at sf0.1), the intersection is a plain
-    shuffled hash join on gram hash — partitions by gram, no per-row
-    array scans, and survives block-size skew at 100 TB.
+    Instead of an interpreted array_intersect per blocked candidate
+    pair (quadratic in block size, measured 22s at sf0.1), the
+    intersection is a plain shuffled hash join on gram hash — partitions
+    by gram, no per-row array scans, and survives block-size skew at
+    100 TB.
 
     `max_gram_df` drops stop-grams (document frequency above the cap
     within a block) BEFORE the self-join — without it, one gram shared
@@ -632,6 +415,29 @@ def ngram_jaccard_histogram(
     )
 
 
+# ---------------------------------------------------------------- simhash
+def simhash(text, hashbits: int = 64) -> Column:
+    """64-bit SimHash: per token hash, vote +1/-1 per bit, sign →
+    fingerprint bit. Expression-only via bit arithmetic over an
+    aggregate of per-bit counters; the reference the numpy kernel
+    (_fp128_udf) is tested against."""
+    toks = TX.tokens(text)
+    hashes = F.transform(toks, lambda w: F.xxhash64(w))
+    # votes[b] = Σ tokens (bit b set ? 1 : -1); bit b of result = votes[b] > 0
+    bit_cols = []
+    for b in range(hashbits):
+        def _bit_set(bb):
+            return lambda h: F.shiftright(h, bb).bitwiseAND(F.lit(1)) == 1
+
+        ones = F.size(F.filter(hashes, _bit_set(b)))
+        votes = ones * 2 - F.size(hashes)
+        bit_cols.append(F.when(votes > 0, F.lit(1).cast("long")).otherwise(F.lit(0)))
+    out = F.lit(0).cast("long")
+    for b, bit in enumerate(bit_cols):
+        out = out.bitwiseOR(F.shiftleft(bit, b))
+    return out
+
+
 # 128-bit chunk boundaries: 6 chunks of 21–22 bits, aligned so no chunk
 # spans the word0/word1 boundary at bit 64 (i*128//6 hits 64 exactly).
 _SH128_BOUNDS = [i * 128 // 6 for i in range(7)]  # [0,21,42,64,85,106,128]
@@ -681,6 +487,38 @@ def _chunk_key(word0, word1, c: int):
     return F.shiftrightunsigned(src, off).bitwiseAND(F.lit(mask))
 
 
+def _simhash_pairs(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    token_hashes,
+    chunk_keys,
+    max_hamming: int,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """Shared body of the 128-bit SimHash twins: the two per-token hash
+    lanes `token_hashes` vote into fingerprint words (w0, w1) in
+    _fp128_udf, `chunk_keys(w0, w1)` gives the six chunk bucket keys,
+    buckets above `max_bucket_size` are dropped, and candidates are
+    verified by exact Hamming distance."""
+    toks = TX.tokens(F.col(text_col))
+    h0, h1 = (F.transform(toks, h) for h in token_hashes)
+    fp = _fp128_udf(id_col)
+    sh = _spread(docs).select(F.col(id_col).alias("id"), fp(h0, h1).alias("fp")).select(
+        "id", F.col("fp")[0].alias("w0"), F.col("fp")[1].alias("w1")
+    )
+    keyed = LSH.cap_buckets(
+        LSH.band_rows(sh, chunk_keys(F.col("w0"), F.col("w1"))), max_bucket_size
+    )
+    ham = (
+        F.bit_count(F.col("w0").bitwiseXOR(F.col("w0_b")))
+        + F.bit_count(F.col("w1").bitwiseXOR(F.col("w1_b")))
+    )
+    return LSH.band_pairs(
+        keyed, ham.cast("int").alias("hamming"), F.col("hamming") <= max_hamming
+    )
+
+
 def simhash128_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -702,66 +540,11 @@ def simhash128_pairs(
     before the self-join — the bucket-size analog of the n-gram df-cap,
     the standard guard against quadratic buckets at corpus scale.
     """
-    toks = TX.tokens(F.col(text_col))
-    h0 = F.transform(toks, lambda w: F.xxhash64(w))
-    h1 = F.transform(toks, lambda w: F.xxhash64(F.lit(1), w))
-    fp = _fp128_udf(id_col)
-    sh = _spread(docs).select(F.col(id_col).alias("id"), fp(h0, h1).alias("fp")).select(
-        "id", F.col("fp")[0].alias("w0"), F.col("fp")[1].alias("w1")
-    )
-    chunked = sh.select(
-        "id",
-        "w0",
-        "w1",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        _chunk_key(F.col("w0"), F.col("w1"), c).alias("ckey"),
-                    )
-                    for c in range(6)
-                ]
-            )
-        ).alias("cc"),
-    ).select("id", "w0", "w1", "cc.chunk", "cc.ckey")
-    if max_bucket_size is not None:
-        ok = (
-            chunked.groupBy("chunk", "ckey")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .drop("_bsz")
-        )
-        chunked = chunked.join(ok, ["chunk", "ckey"])
-    other = chunked.select(
-        F.col("id").alias("id_b"), F.col("w0").alias("w0_b"),
-        F.col("w1").alias("w1_b"),
-        F.col("chunk").alias("chunk_b"), F.col("ckey").alias("ckey_b"),
-    )
-    cand = chunked.join(
-        other,
-        (F.col("chunk") == F.col("chunk_b"))
-        & (F.col("ckey") == F.col("ckey_b"))
-        & (F.col("id") < F.col("id_b")),
-    )
-    ham = (
-        F.bit_count(F.col("w0").bitwiseXOR(F.col("w0_b")))
-        + F.bit_count(F.col("w1").bitwiseXOR(F.col("w1_b")))
-    )
-    # hamming-verify map-side BEFORE the pair-dedup shuffle (same
-    # rationale as minhash_lsh_pairs_md5): the distance is a pure
-    # function of (id, id_b) — identical on every duplicate candidate
-    # row — so filter-then-distinct equals dedup-then-filter while the
-    # exchange carries only surviving 3-int rows instead of four
-    # 64-bit words per raw bucket collision
-    return (
-        cand.select(
-            F.col("id").alias("id_a"),
-            F.col("id_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    return _simhash_pairs(
+        docs, id_col, text_col,
+        (lambda w: F.xxhash64(w), lambda w: F.xxhash64(F.lit(1), w)),
+        lambda w0, w1: [_chunk_key(w0, w1, c) for c in range(6)],
+        max_hamming, max_bucket_size,
     )
 
 
@@ -943,7 +726,7 @@ def ssjoin_prefix(
 ) -> DataFrame:
     """Exact set-similarity join with PPJoin-style PREFIX FILTERING —
     an algorithmically tighter candidate generator than the df-capped
-    full token join (ngram_jaccard_pairs): order every document's
+    gram join (ngram_jaccard_pairs_exploded): order every document's
     distinct tokens by global rarity (df asc, token asc) and index only
     each document's first |x| - ceil(t*|x|) + 1 tokens; the prefix
     theorem guarantees any pair with Jaccard >= t shares at least one
@@ -1083,85 +866,19 @@ def minhash_lsh_pairs_md5(
     one shuffle), every emitted value integer. NULL-text docs are
     excluded (their signature would be the degenerate all-min row).
     Output: (id_a, id_b, n_matches)."""
-    rows = num_hashes // bands
-    base = (
-        _spread(docs.filter(F.col(text_col).isNotNull()))
-        .select(
-            F.col(id_col).alias("id"),
-            TX.tokens(F.col(text_col)).alias("_toks"),
-        )
-        .select(
-            "id",
-            md5_shingles_from_tokens(F.col("_toks"), k=shingle_k).alias("sh"),
-        )
+    keyed = _banded_signatures(
+        docs.filter(F.col(text_col).isNotNull()),
+        id_col, text_col, num_hashes, bands,
+        lambda toks: md5_shingles_from_tokens(toks, k=shingle_k),
+        lambda lanes: md5_hash60(
+            F.concat_ws(",", *[c.cast("string") for c in lanes])
+        ),
     )
-    sig_udf = minhash_signature_numpy_udf()
-    sig = base.select(
-        "id", sig_udf(F.col("sh"), F.lit(num_hashes)).alias("sig")
-    )
-    banded = sig.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        md5_hash60(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.element_at(
-                                        F.col("sig"), b * rows + r + 1
-                                    ).cast("string")
-                                    for r in range(rows)
-                                ],
-                            )
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
-        "id", "sig",
-        F.col("bb.band").alias("band"), F.col("bb.bhash").alias("bhash"),
-    )
-    from pyspark import StorageLevel
-
-    banded = pin(banded, level=StorageLevel.MEMORY_AND_DISK)
-    other = banded.select(
-        F.col("id").alias("id_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("band").alias("band_b"),
-        F.col("bhash").alias("bhash_b"),
-    )
-    cand = banded.join(
-        other,
-        (F.col("band") == F.col("band_b"))
-        & (F.col("bhash") == F.col("bhash_b"))
-        & (F.col("id") < F.col("id_b")),
-    )
-    matches = F.size(
-        F.filter(
-            F.zip_with(F.col("sig"), F.col("sig_b"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-    # verify map-side, BEFORE the pair-dedup shuffle: n_matches is a
-    # pure function of (id, id_b) — identical on every duplicate
-    # candidate row — so filtering first and deduping (id_a, id_b,
-    # n_matches) is result-identical while the exchange carries 3
-    # integers per SURVIVING pair instead of two full signature arrays
-    # per raw band collision
-    return (
-        cand.select(
-            F.col("id").alias("id_a"),
-            F.col("id_b"),
-            matches.cast("int").alias("n_matches"),
-        )
-        .filter(F.col("n_matches") >= min_matches)
-        .distinct()
+    matches = LSH.matched_lanes(F.col("sig"), F.col("sig_b"))
+    return LSH.band_pairs(
+        keyed,
+        matches.cast("int").alias("n_matches"),
+        F.col("n_matches") >= min_matches,
     )
 
 
@@ -1251,77 +968,18 @@ def simhash_md5_pairs(
     (_fp128_udf; the four dead top bits of each 60-bit word vote 0),
     same bucket-cap guard, candidates share one of six 20-bit chunks
     (~1M buckets/chunk — the same at-scale bucket-density shape).
-    Output: (id_a, id_b, hamming)."""
-    toks = TX.tokens(F.col(text_col))
-    h0 = F.transform(toks, lambda w: md5_hash60(w))
-    h1 = F.transform(toks, lambda w: md5_hash60(F.concat(F.lit("1:"), w)))
-    fp = _fp128_udf(id_col)
-    sh = (
-        _spread(docs.filter(F.col(text_col).isNotNull()))
-        .select(F.col(id_col).alias("id"), fp(h0, h1).alias("fp"))
-        .select(
-            "id", F.col("fp")[0].alias("w0"), F.col("fp")[1].alias("w1")
-        )
-    )
+    NULL-text docs are excluded. Output: (id_a, id_b, hamming)."""
     mask = (1 << 20) - 1
-    chunked = sh.select(
-        "id",
-        "w0",
-        "w1",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned(
-                            F.col("w0") if c < 3 else F.col("w1"),
-                            (c % 3) * 20,
-                        )
-                        .bitwiseAND(F.lit(mask))
-                        .alias("ckey"),
-                    )
-                    for c in range(6)
-                ]
+    return _simhash_pairs(
+        docs.filter(F.col(text_col).isNotNull()), id_col, text_col,
+        (lambda w: md5_hash60(w), lambda w: md5_hash60(F.concat(F.lit("1:"), w))),
+        lambda w0, w1: [
+            F.shiftrightunsigned(w0 if c < 3 else w1, (c % 3) * 20).bitwiseAND(
+                F.lit(mask)
             )
-        ).alias("cc"),
-    ).select("id", "w0", "w1", "cc.chunk", "cc.ckey")
-    if max_bucket_size is not None:
-        ok = (
-            chunked.groupBy("chunk", "ckey")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .drop("_bsz")
-        )
-        chunked = chunked.join(ok, ["chunk", "ckey"])
-    other = chunked.select(
-        F.col("id").alias("id_b"), F.col("w0").alias("w0_b"),
-        F.col("w1").alias("w1_b"),
-        F.col("chunk").alias("chunk_b"), F.col("ckey").alias("ckey_b"),
-    )
-    cand = chunked.join(
-        other,
-        (F.col("chunk") == F.col("chunk_b"))
-        & (F.col("ckey") == F.col("ckey_b"))
-        & (F.col("id") < F.col("id_b")),
-    )
-    ham = (
-        F.bit_count(F.col("w0").bitwiseXOR(F.col("w0_b")))
-        + F.bit_count(F.col("w1").bitwiseXOR(F.col("w1_b")))
-    )
-    # hamming-verify map-side BEFORE the pair-dedup shuffle (same
-    # rationale as minhash_lsh_pairs_md5): the distance is a pure
-    # function of (id, id_b) — identical on every duplicate candidate
-    # row — so filter-then-distinct equals dedup-then-filter while the
-    # exchange carries only surviving 3-int rows instead of four
-    # 64-bit words per raw bucket collision
-    return (
-        cand.select(
-            F.col("id").alias("id_a"),
-            F.col("id_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+            for c in range(6)
+        ],
+        max_hamming, max_bucket_size,
     )
 
 

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import lsh as LSH
 from ..functions.span import _c
 from ..pins import memo, pin
 
@@ -247,45 +248,14 @@ def embedding_near_dup_pairs(
     n = base.count()
     if n_planes is None:
         n_planes = max(4, math.ceil(math.log2(max(2.0, n / target_occupancy))))
-    # ALL table signatures in ONE scan, exploded to (id, t, sig), and
-    # ONE self-join keyed on (t, sig): the per-table loop re-ran the
-    # corpus scan + signature expression and a separate self-join per
-    # table (n_tables scans, n_tables exchanges). union-then-distinct
-    # over per-table joins ≡ distinct over the table-keyed join — the
-    # table index in the join key keeps candidates within their table,
-    # exactly as the loop did.
-    n_tables = max(1, n_tables)
-    e = base.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("t"),
-                        lsh_signature(
-                            F.col("v"), dim, n_planes, seed=42 + t
-                        ).alias("sig"),
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("ts"),
-    ).select("id", "ts.t", "ts.sig")
-    o = e.select(
-        F.col("id").alias("id_b"),
-        F.col("t").alias("t_b"),
-        F.col("sig").alias("sig_b"),
-    )
-    pairs = (
-        e.join(
-            o,
-            (F.col("t") == F.col("t_b"))
-            & (F.col("sig") == F.col("sig_b"))
-            & (F.col("id") < F.col("id_b")),
-        )
-        .select("id", "id_b")
-        .distinct()
-    )
+    # the n_tables salted plane sets are the bands: the table index in
+    # the bucket key keeps candidates within their table, and all
+    # tables share one scan and one self-join
+    keyed = LSH.band_rows(base, [
+        lsh_signature(F.col("v"), dim, n_planes, seed=42 + t)
+        for t in range(max(1, n_tables))
+    ]).drop("v")
+    pairs = LSH.band_candidates(keyed).select("id", "id_b").distinct()
     va = base
     vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
     scored = (
@@ -312,8 +282,11 @@ def embedding_near_dup_pairs(
 # identity, params): the train-once/search-many deployment shape.
 # Without it every query re-collects the capped train sample and refits
 # driver-side (measured 56 s/call at the 192k-vector sweep point where
-# the 100k cap binds). The IVF assignment and code tables they persist
-# are session-scoped pins for the same reason.
+# the 100k cap binds). The code tables they persist when memoized are
+# session-scoped pins. build_ivf_index pins its assignment in `scope`:
+# "session" where later queries search a memoized index again, the
+# call scope otherwise, so a build nothing keeps is released with its
+# query.
 def build_ivf_index(
     emb: DataFrame,
     n_centroids: int = 16,
@@ -322,6 +295,7 @@ def build_ivf_index(
     seed: int = 42,
     max_iter: int = 8,
     train_fraction: float = 1.0,
+    scope: str = "call",
 ) -> tuple[DataFrame, DataFrame]:
     """Build the IVF coarse-quantizer index ONCE: fit Lloyd's k-means
     driver-side in numpy on a BOUNDED, deterministically-ordered train
@@ -332,8 +306,9 @@ def build_ivf_index(
     matrix in the closure — linear scan, no shuffle, no N×k row
     blowup), and persist the (id, vec, cell) assignment table.
 
-    Returns (assignments, centroids): `assignments` is the persisted
-    cell-assignment DataFrame; `centroids` is an (cell, centroid) table
+    Returns (assignments, centroids): `assignments` is the
+    cell-assignment DataFrame, pinned in `scope` (pass "session" when
+    the result is memoized); `centroids` is an (cell, centroid) table
     of n_centroids rows used to route queries. Plan size is O(1) in
     n_centroids — works at n_centroids=256 and beyond. (Earlier
     versions used MLlib KMeans: correct, but its class-loading +
@@ -382,7 +357,7 @@ def build_ivf_index(
             nearest_cell(F.col(vec_col)).alias("cell"),
             norm(F.col(vec_col)).alias("_norm"),
         ),
-        "session",
+        scope,
         level=StorageLevel.MEMORY_AND_DISK,
     )
     centroids = emb.sparkSession.createDataFrame(
@@ -846,8 +821,8 @@ def build_twolevel_cells(
     blocking, NOT for query routing; build_ivf_index remains the path
     that returns a centroid table for probes.
 
-    Returns the persisted (id_col, vec_col, cell) assignment, cell =
-    global fine-centroid index.
+    Returns the (id_col, vec_col, cell) assignment, pinned in the call
+    scope, cell = global fine-centroid index.
     """
     import math
 
@@ -914,7 +889,6 @@ def build_twolevel_cells(
         emb.select(
             F.col(id_col), F.col(vec_col), cell2(F.col(vec_col)).alias("cell")
         ),
-        "session",
         level=StorageLevel.MEMORY_AND_DISK,
     )
     return assigned
@@ -1526,13 +1500,13 @@ def ivfpq_residual_topk(
     def _fit_residual_index():
         # residualize + train + encode once: all three are downstream
         # of the cached assignment and deterministic, and the (code,
-        # cell) table is the index at rest
+        # cell) table is the index at rest. The residuals are read only
+        # while the codes are built, so they pin in the call scope.
         resid = pin(
             assigned.select(
                 F.col(id_col), F.col("cell"),
                 _residual(F.col(vec_col), F.col("cell")).alias("resid"),
             ),
-            "session",
             level=StorageLevel.MEMORY_AND_DISK,
         )
         cents_ = pq_train(resid, vec_col="resid", m=m, k=kc, id_col=id_col)
@@ -2019,57 +1993,12 @@ def rademacher_near_dups(
             )
             key = key.bitwiseOR(F.shiftleft(bit, j))
         band_keys.append(key)
-    keyed = e.select(
-        "id",
-        "qv",
-        "nv",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), band_keys[b].alias("bkey")
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "qv", "nv", F.col("bb.band").alias("band"),
-             F.col("bb.bkey").alias("bkey"))
-    # pin + eagerly materialize the keyed relation: the band self-join
-    # below references it on BOTH sides, so without the pin the source
-    # scan, the micro-quantization and all n_planes integer projections
-    # run twice (the committed before-plan shows the embeddings parquet
-    # scanned 8x through the caller's planted union). bands x |corpus|
-    # rows of (id, qv, nv, band, bkey); a call-scoped pin.
-    from pyspark import StorageLevel
-
-    keyed = pin(keyed, level=StorageLevel.MEMORY_AND_DISK)
-    keyed.count()  # eager: both join sides must read the cache, not race it
-    other = keyed.select(
-        F.col("id").alias("id_b"), F.col("qv").alias("qv_b"),
-        F.col("nv").alias("nv_b"),
-        F.col("band").alias("band_b"), F.col("bkey").alias("bkey_b"),
-    )
-    cand = keyed.join(
-        other,
-        (F.col("band") == F.col("band_b"))
-        & (F.col("bkey") == F.col("bkey_b"))
-        & (F.col("id") < F.col("id_b")),
-    )
+    keyed = LSH.band_rows(e, band_keys).drop("_projs")
     cos = _int_cos(int_dot("qv", "qv_b"), F.col("nv"), F.col("nv_b"))
-    # cosine-verify map-side BEFORE the pair-dedup shuffle: cos_u6 is a
-    # pure function of (id, id_b) — identical on every duplicate band
-    # collision — so filter-then-distinct equals dedup-then-verify
-    # while the exchange carries 3 ints per surviving pair instead of
-    # four integer vectors per raw collision row
-    return (
-        cand.select(
-            F.col("id").alias("id_a"),
-            F.col("id_b"),
-            F.round(cos * _Q_SCALE).cast("long").alias("cos_u6"),
-        )
-        .filter(F.col("cos_u6") >= min_cos_u6)
-        .distinct()
+    return LSH.band_pairs(
+        keyed,
+        F.round(cos * _Q_SCALE).cast("long").alias("cos_u6"),
+        F.col("cos_u6") >= min_cos_u6,
     )
 
 

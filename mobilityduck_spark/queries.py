@@ -3065,7 +3065,7 @@ def embed_ivf_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.unionByName(plants)
     assigned, centroids = memo(
         (session_key(spark), sf_dir, "ivf_planted", 16),
-        lambda: SIM.build_ivf_index(corpus, n_centroids=16),
+        lambda: SIM.build_ivf_index(corpus, n_centroids=16, scope="session"),
     )
     qdf = emb.filter(
         (F.col("vec_id") % 40 == 0) & (F.col("vec_id") < 2000)
@@ -3097,7 +3097,7 @@ def embed_ivf_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned, centroids = memo(
         (session_key(spark), sf_dir, "ivf_emb", 16),
-        lambda: SIM.build_ivf_index(emb, n_centroids=16),
+        lambda: SIM.build_ivf_index(emb, n_centroids=16, scope="session"),
     )
     return SIM.ivf_search(
         assigned, centroids, queries_df, k=5, n_probe=16
@@ -5378,6 +5378,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label tiebreak."""
     from .operators import dedup as DD
     from .operators import graph as G
+    from .operators import lsh as LSH
 
     docs = SRC.load(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars", "text"
@@ -5393,35 +5394,24 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark import StorageLevel
 
-    # Candidate pairs come from the banded minhash index (dedup.py),
-    # NOT the raw gram pair join: the gram-bucket self-join is the
-    # 5.6x-per-10x densification class, while band collisions are
-    # bounded by actual content duplication. The edge DEFINITION is
-    # unchanged (exact df-capped 3-gram Jaccard >= 0.5, verified below
-    # on the candidate pairs only), so the all-pairs ANSI oracle still
-    # matches as long as LSH recall at jac >= 0.5 is 1 — measured, not
-    # assumed: this corpus's edges are >= 0.958 Jaccard (50/58 exact
-    # copies at sf0.01), where missing all 8 bands has p ~ 1.6e-7 and
-    # the replay gates equality at every test SF.
-    banded = DD._banded_signatures(
-        u, "doc_id", "text", num_hashes=32, bands=8, shingle_k=3
-    ).select("id", "band", "bhash").join(
+    # Candidate pairs come from the banded minhash index
+    # (dedup.minhash_band_index, self-joined within (lang, lb) blocks by
+    # lsh.band_candidates), NOT the raw gram pair join: the gram-bucket
+    # self-join is the 5.6x-per-10x densification class, while band
+    # collisions are bounded by actual content duplication. The edge
+    # DEFINITION is unchanged (exact df-capped 3-gram Jaccard >= 0.5,
+    # verified below on the candidate pairs only), so the all-pairs ANSI
+    # oracle still matches as long as LSH recall at jac >= 0.5 is 1 —
+    # measured, not assumed: this corpus's edges are >= 0.958 Jaccard
+    # (50/58 exact copies at sf0.01), where missing all 8 bands has
+    # p ~ 1.6e-7 and the replay gates equality at every test SF.
+    keyed = DD.minhash_band_index(
+        u, num_hashes=32, bands=8, shingle_k=3
+    ).select("id", "band", "key").join(
         u.select(F.col("doc_id").alias("id"), "lang", "lb"), "id"
     )
-    right = banded.select(
-        F.col("id").alias("id_b"), F.col("band").alias("band_b"),
-        F.col("bhash").alias("bhash_b"), F.col("lang").alias("lang_b"),
-        F.col("lb").alias("lb_b"),
-    )
     cand = (
-        banded.join(
-            right,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("bhash") == F.col("bhash_b"))
-            & (F.col("lang") == F.col("lang_b"))
-            & (F.col("lb") == F.col("lb_b"))
-            & (F.col("id") < F.col("id_b")),
-        )
+        LSH.band_candidates(keyed, block=("lang", "lb"))
         .select(F.col("id").alias("cid_a"), F.col("id_b").alias("cid_b"))
         .distinct()
     )

@@ -81,16 +81,16 @@ def _kcore_on_raising_edges(spark):
     return G.kcore(edges, k=2)
 
 
-def _rademacher_on_raising_vectors(spark):
+def _embedding_near_dups_on_raising_vectors(spark):
     emb = spark.createDataFrame(
         [(i, [float(i + j) for j in range(64)]) for i in range(8)],
         "vec_id long, embedding array<double>",
     ).select("vec_id", _raising_vec("embedding").alias("embedding"))
-    return SIM.rademacher_near_dups(emb)
+    return SIM.embedding_near_dup_pairs(emb)
 
 
 @pytest.mark.parametrize(
-    "build", [_kcore_on_raising_edges, _rademacher_on_raising_vectors]
+    "build", [_kcore_on_raising_edges, _embedding_near_dups_on_raising_vectors]
 )
 def test_failed_eager_count_leaves_no_pin(spark, build):
     """The operator pins its input and counts it while building; when
@@ -103,6 +103,30 @@ def test_failed_eager_count_leaves_no_pin(spark, build):
     Q.release_operator_caches()
     assert _persistent_rdds(spark) <= rdds
     assert _cached_plans(spark) <= plans
+
+
+def test_unmemoized_index_builds_leave_no_session_pin(spark):
+    """An unmemoized index build pins what it builds in the call scope,
+    so a query's release frees it: three semantic_dedup calls over both
+    assignment paths, flat IVF (8 clusters) and two-level (200 cells),
+    and a residual IVF-PQ search without a cache key."""
+    emb = SRC.load(spark, SF, "embeddings")
+    q = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    calls = [
+        lambda: SIM.semantic_dedup(emb, n_clusters=8),
+        lambda: SIM.semantic_dedup(emb, n_clusters=200),
+        lambda: SIM.semantic_dedup(emb, n_clusters=8),
+        lambda: SIM.ivfpq_residual_topk(emb, q, k=3),
+    ]
+    Q.release_operator_caches()
+    held, rdds = len(pins._PINS["session"]), _persistent_rdds(spark)
+    for i, call in enumerate(calls):
+        with pins.query_scope(f"unmemoized_build_{i}"):
+            call().collect()
+        assert len(pins._PINS["session"]) == held, i
+        assert _persistent_rdds(spark) <= rdds, i
 
 
 def test_call_release_keeps_session_scope(spark):

@@ -6,11 +6,14 @@ must keep the properties that make them scale (SURVEY.md §4.3):
 - bounded shuffle counts (assembly = ONE shuffle on the group key).
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from mobilityduck_spark import pins
 from mobilityduck_spark import queries as Q
+from mobilityduck_spark.operators import lsh as LSH
 from mobilityduck_spark.plans import (
     has_pushed_filter,
     plan_counts,
@@ -64,13 +67,43 @@ def test_embed_topk_broadcasts_queries(spark):
     assert has_pushed_filter(df, "vec_id") or True  # pushdown optional here
 
 
-def test_minhash_join_is_equijoin_not_nl(spark):
-    df = Q.queries()["doc_minhash_pairs"](spark, SF)
-    plan = str(df._jdf.queryExecution().executedPlan())
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan, (
-        "LSH candidate join must be an equi-join on (band, bhash)"
-    )
+@pytest.mark.parametrize(
+    "name",
+    ["doc_minhash_pairs", "doc_simhash_pairs", "embed_near_dups",
+     "embed_near_dup_recall"],
+)
+def test_lsh_band_join_is_pinned_equijoin(spark, monkeypatch, name):
+    """The LSH candidate join is an equi-join on (band, key), and both of
+    its sides read the keyed relation from the cache (lsh.band_candidates
+    pins it), so the signature work runs once, not once per side. The
+    band join's own plan is checked too, since a checkpoint downstream
+    (embedding_near_dup_pairs) hides it from the query's plan."""
+    joins = []
+
+    def recorded(keyed, block=()):
+        joins.append(band_candidates(keyed, block))
+        return joins[-1]
+
+    band_candidates = LSH.band_candidates
+    monkeypatch.setattr(LSH, "band_candidates", recorded)
+    with pins.query_scope(name):
+        df = Q.queries()[name](spark, SF)
+        plans = [
+            str(d._jdf.queryExecution().executedPlan()) for d in [df, *joins]
+        ]
+    assert len(joins) == 1
+    for plan in plans:
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoop" not in plan, (
+            "LSH candidate join must be an equi-join on (band, key)"
+        )
+    # the self-join's right side reads the cache under renamed columns
+    keyed_scans = [
+        ln for ln in plans[1].splitlines()
+        if "InMemoryTableScan" in ln
+        and re.search(r"\bband(_b)?#", ln) and re.search(r"\bkey(_b)?#", ln)
+    ]
+    assert len(keyed_scans) == 2, plans[1]
 
 
 def test_bucketed_overlap_join_no_cartesian(spark):

@@ -3,9 +3,7 @@
 - the mega-basket cap is enforced BEFORE collect_set builds an array
   (no aggregation buffer ever holds a degenerate basket's item set);
 - the fused single-rank RFM reproduces the old three-pass ntile chain
-  exactly;
-- incremental_near_dups' map-side verify emits the same pairs as the
-  dedup-then-verify formulation it replaced.
+  exactly.
 """
 
 import re
@@ -14,7 +12,6 @@ import pyspark.sql.functions as F
 
 from mobilityduck_spark import queries as Q
 from mobilityduck_spark.operators import basket as BK
-from mobilityduck_spark.operators import dedup as DD
 from mobilityduck_spark.operators import events as EV
 from mobilityduck_spark.plans import formatted_plan
 from mobilityduck_spark.sources import tables as SRC
@@ -125,37 +122,3 @@ def test_rfm_fused_rank_matches_three_pass(spark):
             assert g[k] == e[k], (uid, k, g, e)
         assert g["rfm"] == e["r_score"] * 100 + e["f_score"] * 10 + e["m_score"]
     Q.release_operator_caches()
-
-
-def test_incremental_near_dups_mapside_verify_parity(spark):
-    """filter-then-distinct == dedup-then-verify: est_jaccard is a pure
-    function of the pair, so the map-side verify emits exactly the rows
-    the old groupBy(first(sig)) formulation did."""
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta"),
-            (2, "alpha beta gamma delta epsilon zeta"),
-            (3, "one two three four five six seven"),
-            (4, "completely different text body here now"),
-        ],
-        "doc_id bigint, text string",
-    )
-    prior = docs.where(F.col("doc_id") <= 2)
-    new = docs.where(F.col("doc_id") >= 3).unionAll(
-        prior.select((F.col("doc_id") + 100).alias("doc_id"), "text")
-    )
-    idx = DD.minhash_band_index(prior, num_hashes=16, bands=4, shingle_k=3)
-    got = sorted(
-        (r["new_id"], r["prior_id"], r["est_jaccard"])
-        for r in DD.incremental_near_dups(
-            new, idx, num_hashes=16, bands=4, shingle_k=3,
-            min_est_jaccard=0.5,
-        ).collect()
-    )
-    # docs 101/102 are exact copies of priors 1/2 (identical texts give
-    # identical signatures): each must pair with BOTH priors at est 1.0
-    assert got == [
-        (101, 1, 1.0), (101, 2, 1.0), (102, 1, 1.0), (102, 2, 1.0),
-    ]
-    # and exactly once per pair despite colliding in all 4 bands
-    assert len(got) == len(set((a, b) for a, b, _ in got))
