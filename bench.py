@@ -112,6 +112,47 @@ _STDOUT_QUERIES = [
 ]
 
 
+def promotion(
+    run: dict, committed: dict, force: bool = False
+) -> tuple[str | None, bool, float]:
+    """Promotion gate for one bench run: (file the run replaces or None,
+    quiet_run, frac_2x). `run` is this run's record; `committed` maps
+    file name to the committed records read (BENCH_full.json and
+    BENCH_c{cpus}.json, where present).
+
+    A record is compared with, and replaced by, runs at its own core
+    count only: BENCH_full.json when it records this run's cpus (or does
+    not exist yet), otherwise BENCH_c{cpus}.json — so a run at another
+    core count can never overwrite the headline record, and a record
+    with no `cpus` (which core count it holds is unknown) is left alone.
+    A run qualifies as a quiet-host headline run when sf == 0.1, reps >=
+    2 and setup_sec <= 25 s (17-21 s on a quiet 32-core host; a loaded
+    host shows 60+ s), and it is not a stall window: at most 10% of the
+    queries it shares with the record took over 2x their recorded time.
+    A quiet setup does not guarantee a quiet run — stalled runs had
+    15-16% of queries over 2x, a merely inflated run 5%; a genuine plan
+    regression concentrates in a few queries. `force`
+    (SPARK_GRAFT_BENCH_PROMOTE=1) promotes into BENCH_full.json
+    regardless of the gate."""
+    full = committed.get("BENCH_full.json")
+    if force or full is None or full.get("cpus") == run["cpus"]:
+        target = "BENCH_full.json"
+    else:
+        target = f"BENCH_c{run['cpus']}.json"
+    prev = committed.get(target, {}).get("queries", {})
+    timings = run["queries"]
+    common = [n for n in prev if n in timings and prev[n] > 0]
+    frac_2x = 0.0
+    if len(common) >= 50:
+        frac_2x = sum(1 for n in common if timings[n] > 2.0 * prev[n]) / len(common)
+    quiet_run = frac_2x <= 0.10
+    qualifies = (
+        run["sf"] == 0.1 and run["reps"] >= 2 and run["setup_sec"] <= 25.0
+        and quiet_run
+    )
+    return (target if qualifies or force else None), quiet_run, frac_2x
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -121,6 +162,7 @@ def main() -> None:
         sf_val = sf
 
     spark = get_spark("mobilityduck_spark_bench")
+    cpus = spark.sparkContext.defaultParallelism
     # warm the JVM (JIT, codegen, parquet footers, shuffle paths) with one
     # representative untimed run so the first timed query doesn't absorb
     # session startup — cluster jobs run warm, this measures the queries
@@ -183,40 +225,19 @@ def main() -> None:
         "sf": sf_val,
         "reps": reps,
         "setup_sec": setup_sec,
+        "cpus": cpus,
     }
-    # Every run writes the un-gated record to BENCH_last_run.json (never
-    # committed); BENCH_full.json — the committed round-over-round record —
-    # is only overwritten when this run qualifies as a quiet-host headline
-    # run: sf==0.1, reps>=2, setup_sec within the quiet-host norm (17-21 s
-    # on this box; a loaded host shows 60+ s and would poison tracking —
-    # round 6's driver ran at setup 63.4 s and overwrote the committed
-    # record, which this gate prevents recurring).
-    # Stall-window guard (round-11): a quiet SETUP does not guarantee a
-    # quiet RUN — twice this round a mid-run host stall slipped past the
-    # setup gate with setup 19.3/24.9 s and promoted a 395/327 s record
-    # over the 180 s baseline. Measured discriminator: stalled runs had
-    # 15-16% of queries >2x the committed per-query record, the settled
-    # (merely inflated) run 5%. A genuine plan regression concentrates
-    # in a few queries; 10% of the registry doubling SIMULTANEOUSLY is a
-    # host event. SPARK_GRAFT_BENCH_PROMOTE=1 still force-promotes.
-    quiet_run = True
-    frac_2x = 0.0
-    full_path = os.path.join(here, "BENCH_full.json")
-    if os.path.exists(full_path):
+    committed = {}
+    for name in ("BENCH_full.json", f"BENCH_c{cpus}.json"):
         try:
-            with open(full_path) as f:
-                prev = json.load(f).get("queries", {})
-            common = [n for n in prev if n in timings and prev[n] > 0]
-            if len(common) >= 50:
-                frac_2x = sum(
-                    1 for n in common if timings[n] > 2.0 * prev[n]
-                ) / len(common)
-                quiet_run = frac_2x <= 0.10
-        except Exception:
+            with open(os.path.join(here, name)) as f:
+                committed[name] = json.load(f)
+        except (OSError, ValueError):
             pass
-    promoted = (
-        sf_val == 0.1 and reps >= 2 and setup_sec <= 25.0 and quiet_run
-    ) or os.environ.get("SPARK_GRAFT_BENCH_PROMOTE") == "1"
+    target, quiet_run, frac_2x = promotion(
+        full, committed, os.environ.get("SPARK_GRAFT_BENCH_PROMOTE") == "1"
+    )
+    promoted = target is not None
     # gate bookkeeping travels with BOTH written records (ADVICE r11:
     # a rejected run must be distinguishable from a promoted one in the
     # artifacts, not only by the stdout "promoted" flag)
@@ -227,7 +248,7 @@ def main() -> None:
         json.dump(full, f, indent=1, sort_keys=True)
         f.write("\n")
     if promoted:
-        with open(os.path.join(here, "BENCH_full.json"), "w") as f:
+        with open(os.path.join(here, target), "w") as f:
             json.dump(full, f, indent=1, sort_keys=True)
             f.write("\n")
 
@@ -256,7 +277,7 @@ def main() -> None:
                 "setup_sec": setup_sec,
                 "nq": len(timings),
                 "omitted": len(timings) - len(q),
-                "full": "BENCH_full.json" if promoted else "BENCH_last_run.json",
+                "full": target or "BENCH_last_run.json",
                 "promoted": promoted,
             },
             separators=(",", ":"),

@@ -11,8 +11,7 @@ Semantics notes vs the reference:
 - box-region queries (q13/q16) use EXACT crossing-interpolation
   semantics (TP.intersects_stbox, Liang–Barsky per segment, oracle in
   identical ANSI SQL); polygon-region variants (bm_q13_poly/bm_q14_poly)
-  mirror the reference's real ST_MakePolygon regions. The sampled
-  approximation (TP.at_box_sampled) remains available and documented.
+  mirror the reference's real ST_MakePolygon regions.
 - interpolation-dependent queries (q3/q11/q12/q14) compare the SAME
   closed-form interpolation on both engines → exact float equality.
 - pairwise queries q5/q6/q10 now carry full ANSI oracles: q5 via the
@@ -23,6 +22,9 @@ Semantics notes vs the reference:
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -553,9 +555,8 @@ def bm_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANSI SQL, term-for-term the numpy kernel's formulas (both sides of
     every probe pair have real segments in this dataset, so the
     point-point fallback arm is not needed)."""
-    from .operators.tpoint_pairs import register_flat_pair_udfs
+    from .operators.tpoint_pairs import min_traj_distance
 
-    udfs = register_flat_pair_udfs(spark)
     ft = _flat_trips(spark, sf_dir)
     l1 = BM.licences1(spark, sf_dir)
     l2 = BM.licences2(spark, sf_dir)
@@ -578,44 +579,106 @@ def bm_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         "licence1",
         "licence2",
         F.round(
-            udfs["min_traj_distance"]("t1", "x1", "y1", "l1", "t2", "x2", "y2", "l2"), 3
+            min_traj_distance("t1", "x1", "y1", "l1", "t2", "x2", "y2", "l2"), 3
         ).alias("min_dist"),
     )
 
 
 # ---------------------------------------------------------------- pair plans
-# Above this per-side row count the broadcast theta-join (small-side
-# BNLJ with bbox prefilter) gives way to the grid-bucketed candidate
-# equi-join — the plan that survives large×large at cluster scale.
+# Above this probe-side row count the kernel-closure plan gives way to
+# the grid-bucketed candidate equi-join — the plan that survives
+# large×large at cluster scale.
 _GRID_PAIR_THRESHOLD = 2000
+_FLAT = ("t_arr", "x_arr", "y_arr", "len_arr")
 
 
-def _pair_frames(t: DataFrame, n: int) -> DataFrame:
-    return t.select(
-        F.col("vehicle_id").alias(f"vid{n}"),
-        F.col("licence").alias(f"licence{n}"),
-        F.col("t_arr").alias(f"ta{n}"), F.col("x_arr").alias(f"xa{n}"),
-        F.col("y_arr").alias(f"ya{n}"), F.col("len_arr").alias(f"la{n}"),
-        F.col("bb").alias(f"bb{n}"),
-    )
+def _edwithin_pairs(
+    spark: SparkSession,
+    probes: DataFrame,
+    fleet: DataFrame,
+    d: float,
+    n_probes: int,
+    self_pairs: bool,
+) -> DataFrame:
+    """(vid1, vid2) pairs — vid1 a `probes` row, vid2 a `fleet` row, both
+    `_flat_trips`-shaped — whose trajectories ever come within d
+    (eDwithin). `self_pairs` (probes == fleet) keeps vid1 < vid2 only;
+    otherwise a row is never paired with its own vid. `n_probes` bounds
+    the probe rows (a memoized dim count) and picks the plan.
 
+    Small probe side: the probe trajectories ride in the kernel CLOSURE,
+    so each fleet row's arrays cross Arrow once instead of once per
+    candidate pair (the pair-join formulation shipped |probes|× the
+    data). Without self pairs, a JVM-side OR over the probe envelopes
+    first keeps only rows that can hit; with self pairs every row
+    overlaps its own probe envelope, so that filter could prune nothing
+    (measured: 44 850 of 44 850 truck pairs pass the bbox test). The
+    fleet is spread over all cores before the kernel stage: its payload
+    is a few MB, so Spark would otherwise run the O(probes × fleet)
+    kernel loop on 1-2 partitions.
 
-def _pair_candidates_grid(t1: DataFrame, t2: DataFrame, d: float) -> DataFrame:
-    """Large×large path: grid-key candidate equi-join (no broadcast, no
+    Large probe side: grid-key candidate equi-join (no broadcast, no
     cartesian — operators/range_join.grid_pair_candidates), payloads
     re-joined once per DISTINCT candidate id pair."""
     from .operators.range_join import grid_pair_candidates
+    from .operators.tpoint_pairs import e_dwithin, register_probe_edwithin_udf
 
-    cand = grid_pair_candidates(
-        t1.withColumnRenamed("ta1", "t_arr").withColumnRenamed("xa1", "x_arr")
-          .withColumnRenamed("ya1", "y_arr").withColumnRenamed("la1", "len_arr"),
-        t2.withColumnRenamed("ta2", "t_arr").withColumnRenamed("xa2", "x_arr")
-          .withColumnRenamed("ya2", "y_arr").withColumnRenamed("la2", "len_arr"),
-        "vid1", "vid2", d=d,
+    if n_probes <= _GRID_PAIR_THRESHOLD:
+        # bounded by the threshold check above
+        rows = probes.select("vehicle_id", *_FLAT).collect()
+        hit_vid = register_probe_edwithin_udf(
+            [
+                {"vid": r["vehicle_id"], "t": r["t_arr"], "x": r["x_arr"],
+                 "y": r["y_arr"], "lens": r["len_arr"]}
+                for r in rows
+            ],
+            d,
+            ordered=self_pairs,
+        )
+        if not self_pairs:
+            bb = F.col("bb")
+            fleet = fleet.filter(functools.reduce(operator.or_, [
+                (bb["xmax"] >= min(r["x_arr"]) - d)
+                & (bb["xmin"] <= max(r["x_arr"]) + d)
+                & (bb["ymax"] >= min(r["y_arr"]) - d)
+                & (bb["ymin"] <= max(r["y_arr"]) + d)
+                & (F.unix_micros(bb["tmin"]) / 1e6 <= max(r["t_arr"]))
+                & (F.unix_micros(bb["tmax"]) / 1e6 >= min(r["t_arr"]))
+                for r in rows
+            ], F.lit(False)))
+        spread = fleet.select("vehicle_id", *_FLAT).repartition(
+            spark.sparkContext.defaultParallelism, "vehicle_id"
+        )
+        return spread.select(
+            F.explode(hit_vid(*_FLAT, "vehicle_id")).alias("vid1"),
+            F.col("vehicle_id").alias("vid2"),
+        )
+
+    def side(df: DataFrame, n: int) -> DataFrame:
+        return df.select(
+            F.col("vehicle_id").alias(f"vid{n}"),
+            *[F.col(c).alias(f"{c}{n}") for c in _FLAT],
+        )
+
+    cand = grid_pair_candidates(probes, fleet, "vehicle_id", "vehicle_id", d=d)
+    vl, vr = F.col("vehicle_id_l"), F.col("vehicle_id_r")
+    cand = cand.filter(vl < vr if self_pairs else vl != vr)
+    pairs = cand.join(side(probes, 1), vl == F.col("vid1")).join(
+        side(fleet, 2), vr == F.col("vid2")
     )
-    return cand.join(t1, F.col("vid1_l") == F.col("vid1")).join(
-        t2, F.col("vid2_r") == F.col("vid2")
-    ).drop("vid1_l", "vid2_r")
+    return pairs.filter(
+        e_dwithin(*[f"{c}{n}" for n in (1, 2) for c in _FLAT], F.lit(d))
+    ).select("vid1", "vid2")
+
+
+def _with_licence(pairs: DataFrame, dim: DataFrame, n: int) -> DataFrame:
+    """`pairs` plus licence{n}, looked up by vid{n} in the cached vehicle
+    dim `dim` (a broadcast of an in-memory relation: no Python-side
+    local relation, whose broadcast runs a Python RDD job per query)."""
+    return pairs.join(F.broadcast(dim.select(
+        F.col("vehicle_id").alias(f"vid{n}"),
+        F.col("licence").alias(f"licence{n}"),
+    )), f"vid{n}")
 
 
 # ================================================================ q6
@@ -750,11 +813,8 @@ def _sync_edwithin_oracle(tp_filter: str, prs_cond: str, d2: str,
     ),
 )
 def bm_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q6: truck pairs that ever came within 10 units
-    (bbox expand prefilter + eDwithin — the reference's
-    `Trip && expandSpace(...)` plan, SURVEY.md §2.7). Plan switches to
-    the grid-bucketed candidate join when the truck fleet outgrows
-    broadcast size.
+    """q6: truck pairs that ever came within 10 units (the reference's
+    `Trip && expandSpace(...)` + eDwithin, SURVEY.md §2.7).
 
     Oracle: full synchronized-distance formulation in ANSI SQL — union
     knots per pair (ASOF-join interpolation matching np.interp's
@@ -762,68 +822,17 @@ def bm_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-segment quadratic vertex minimum, term-for-term the
     _min_dist_sq_profile kernel.
 
-    Small-fleet plan: the whole truck fleet rides in the kernel
-    CLOSURE (ordered probe form — each unordered pair evaluated once)
-    so every trip's arrays cross Arrow ONCE, not once per candidate
-    pair. A bbox prefilter was useless here: at city density every
-    trip bbox overlaps every other (measured: 44 850 of 44 850 pairs
-    pass), so the pair-join formulation shipped |fleet|× the data for
-    zero pruning. Past the threshold the plan switches to the
-    grid-bucketed candidate join (the large×large shape at scale)."""
-    from .operators.tpoint_pairs import (
-        register_flat_pair_udfs,
-        register_probe_edwithin_udf,
-    )
-
+    Plan: `_edwithin_pairs` over the truck fleet against itself (self
+    pairs), then both licences."""
     v = BM.vehicles(spark, sf_dir).filter(F.col("vehicle_type") == "truck")
     t = _flat_trips(spark, sf_dir).join(F.broadcast(v), "vehicle_id")
     # plan probe on the DIM side: each vehicle has ≤1 trips row, so
     # |v| bounds |t| — a memoized count on the tiny vehicles parquet
     # instead of a scan over the cached trip arrays (~0.9 s at sf0.1)
     n_trucks = memo((session_key(spark), sf_dir, "count", "trucks"), v.count)
-    if n_trucks <= _GRID_PAIR_THRESHOLD:
-        rows = t.select(
-            "vehicle_id", "licence", "t_arr", "x_arr", "y_arr", "len_arr"
-        ).collect()  # bounded by the threshold check above
-        probes = [
-            {"vid": r["vehicle_id"], "t": r["t_arr"], "x": r["x_arr"],
-             "y": r["y_arr"], "lens": r["len_arr"]}
-            for r in rows
-        ]
-        hit_vid = register_probe_edwithin_udf(probes, 10.0, ordered=True)
-        lic = spark.createDataFrame(
-            [(r["vehicle_id"], r["licence"]) for r in rows],
-            schema="vehicle_id long, licence string",
-        )
-        # spread the (tiny) fleet relation across all cores before the
-        # kernel stage: its payload is a few MB so Spark would otherwise
-        # run the whole O(fleet²) kernel loop on 1-2 partitions
-        spread = t.repartition(
-            spark.sparkContext.defaultParallelism, "vehicle_id"
-        )
-        hits = spread.select(
-            F.col("licence").alias("licence2"),
-            F.explode(
-                hit_vid("t_arr", "x_arr", "y_arr", "len_arr", "vehicle_id")
-            ).alias("vehicle_id"),
-        )
-        return (
-            hits.join(F.broadcast(lic), "vehicle_id")
-            .select(F.col("licence").alias("licence1"), "licence2")
-            .distinct()
-        )
-    udfs = register_flat_pair_udfs(spark)
-    t1, t2 = _pair_frames(t, 1), _pair_frames(t, 2)
-    pairs = _pair_candidates_grid(t1, t2, 10.0).filter(
-        F.col("vid1") < F.col("vid2")
-    )
-    return (
-        pairs.filter(
-            udfs["e_dwithin"]("ta1", "xa1", "ya1", "la1", "ta2", "xa2", "ya2", "la2", F.lit(10.0))
-        )
-        .select("licence1", "licence2")
-        .distinct()
-    )
+    pairs = _edwithin_pairs(spark, t, t, 10.0, n_trucks, self_pairs=True)
+    pairs = _with_licence(_with_licence(pairs, v, 1), v, 2)
+    return pairs.select("licence1", "licence2").distinct()
 
 
 # ================================================================ q7
@@ -1011,96 +1020,18 @@ def bm_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bm_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q10: licences1 vehicles vs everyone: pairs that ever came within
-    3 units. With a tiny probe fleet (10 licences in the benchmark) the
-    probe trajectories travel INSIDE the kernel closure — one Arrow
-    pass over the big side, each row's arrays crossing once instead of
-    once per candidate pair (the broadcast-join formulation shipped
-    |probes|× the data). Past the threshold the plan switches to the
-    grid-bucketed candidate join — the shape that survives a
-    large×large fleet at cluster scale."""
-    from .operators.tpoint_pairs import (
-        register_flat_pair_udfs,
-        register_probe_edwithin_udf,
-    )
-
-    udfs = register_flat_pair_udfs(spark)
+    3 units. Plan: `_edwithin_pairs` of the licences1 trips against
+    the whole fleet, then licence1."""
     ft = _flat_trips(spark, sf_dir)
     l1 = BM.licences1(spark, sf_dir)
-    t1 = ft.join(F.broadcast(l1), "vehicle_id").select(
-        F.col("vehicle_id").alias("vid1"), F.col("licence").alias("licence1"),
-        F.col("t_arr").alias("ta1"), F.col("x_arr").alias("xa1"),
-        F.col("y_arr").alias("ya1"), F.col("len_arr").alias("la1"),
-        F.col("bb").alias("bb1"),
-    )
-    t2 = ft.select(
-        F.col("vehicle_id").alias("vid2"),
-        F.col("t_arr").alias("ta2"), F.col("x_arr").alias("xa2"),
-        F.col("y_arr").alias("ya2"), F.col("len_arr").alias("la2"),
-        F.col("bb").alias("bb2"),
-    )
     # plan probe on the licences dim (≤1 trips row per vehicle bounds
-    # |t1|) — memoized; avoids scanning the cached trip arrays or
-    # re-firing the dim count job per call
+    # the probe rows) — memoized; avoids scanning the cached trip arrays
+    # or re-firing the dim count job per call
     n_l1 = memo((session_key(spark), sf_dir, "count", "licences1"), l1.count)
-    if n_l1 <= _GRID_PAIR_THRESHOLD:
-        probe_rows = t1.collect()  # bounded by the threshold check above
-        probes = [
-            {"vid": r["vid1"], "t": r["ta1"], "x": r["xa1"],
-             "y": r["ya1"], "lens": r["la1"]}
-            for r in probe_rows
-        ]
-        hit_vid = register_probe_edwithin_udf(probes, 3.0)
-        lic = spark.createDataFrame(
-            [(r["vid1"], r["licence1"]) for r in probe_rows],
-            schema="vid1 long, licence1 string",
-        )
-        # JVM-side bbox+time prefilter (OR over the ≤threshold probe
-        # envelopes, pure codegen) so only candidate rows cross Arrow
-        # into the kernel at all — the kernel re-checks per-probe boxes
-        any_overlap = None
-        for p in probes:
-            xs, ys, ts_ = p["x"], p["y"], p["t"]
-            ov = (
-                (F.col("bb")["xmax"] >= min(xs) - 3.0)
-                & (F.col("bb")["xmin"] <= max(xs) + 3.0)
-                & (F.col("bb")["ymax"] >= min(ys) - 3.0)
-                & (F.col("bb")["ymin"] <= max(ys) + 3.0)
-                & (F.unix_micros(F.col("bb")["tmin"]) / 1e6 <= max(ts_))
-                & (F.unix_micros(F.col("bb")["tmax"]) / 1e6 >= min(ts_))
-            )
-            any_overlap = ov if any_overlap is None else (any_overlap | ov)
-        hits = ft.filter(any_overlap).select(
-            F.col("vehicle_id").alias("vid2"),
-            F.explode(
-                hit_vid("t_arr", "x_arr", "y_arr", "len_arr", "vehicle_id")
-            ).alias("vid1"),
-        )
-        return (
-            hits.join(F.broadcast(lic), "vid1")
-            .select("licence1", F.col("vid2").alias("vehicle_id2"))
-            .distinct()
-        )
-    else:
-        from .operators.range_join import grid_pair_candidates
-
-        cand = grid_pair_candidates(
-            t1.withColumnRenamed("ta1", "t_arr")
-              .withColumnRenamed("xa1", "x_arr")
-              .withColumnRenamed("ya1", "y_arr")
-              .withColumnRenamed("la1", "len_arr"),
-            t2.withColumnRenamed("ta2", "t_arr")
-              .withColumnRenamed("xa2", "x_arr")
-              .withColumnRenamed("ya2", "y_arr")
-              .withColumnRenamed("la2", "len_arr"),
-            "vid1", "vid2", d=3.0,
-        ).filter(F.col("vid1_l") != F.col("vid2_r"))
-        pairs = cand.join(t1, F.col("vid1_l") == F.col("vid1")).join(
-            t2, F.col("vid2_r") == F.col("vid2")
-        )
+    probes = ft.join(F.broadcast(l1), "vehicle_id")
+    pairs = _edwithin_pairs(spark, probes, ft, 3.0, n_l1, self_pairs=False)
     return (
-        pairs.filter(
-            udfs["e_dwithin"]("ta1", "xa1", "ya1", "la1", "ta2", "xa2", "ya2", "la2", F.lit(3.0))
-        )
+        _with_licence(pairs, l1, 1)
         .select("licence1", F.col("vid2").alias("vehicle_id2"))
         .distinct()
     )
@@ -1900,9 +1831,8 @@ _LB_C_SQL = """
 def bm_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q16: licence pairs both present in a region during a period whose
     clipped trips never meet (aDisjoint)."""
-    from .operators.tpoint_pairs import register_pair_udfs
+    from .operators.tpoint_pairs import a_disjoint, flat_cols
 
-    udfs = register_pair_udfs(spark)
     # persisted per-trip bbox (bb) from _flat_trips feeds the prefilter
     trips = _flat_trips(spark, sf_dir).select("vehicle_id", "trip", "bb")
     l1 = BM.licences1(spark, sf_dir)
@@ -1963,7 +1893,7 @@ def bm_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("licence1") < F.col("licence2")
     )
     return (
-        pairs.filter(udfs["a_disjoint"]("clip1", "clip2"))
+        pairs.filter(a_disjoint(*flat_cols(F.col("clip1")), *flat_cols(F.col("clip2"))))
         .select("period_id", "region_id", "licence1", "licence2")
         .distinct()
     )

@@ -226,39 +226,6 @@ def at_values_point(t, x, y) -> Column:
     )
 
 
-def at_box_sampled(t, box) -> Column:
-    """Restrict a trajectory to the instants inside an STBOX (sampling
-    semantics: keeps observed positions, splits sequences between
-    non-adjacent survivors; exact MEOS atGeometry interpolates segment/
-    boundary crossings — see operators.tpoint_pairs for the exact path).
-
-    Reference: atGeometry, src/geo/tgeompoint.cpp:265-273.
-    """
-    tc, b = _c(t), _c(box)
-
-    def inside(i: Column) -> Column:
-        sp_ok = F.when(
-            b["hasx"],
-            (i["v"]["x"] >= b["xmin"]) & (i["v"]["x"] <= b["xmax"])
-            & (i["v"]["y"] >= b["ymin"]) & (i["v"]["y"] <= b["ymax"]),
-        ).otherwise(F.lit(True))
-        t_ok = F.when(
-            b["hast"], (i["t"] >= b["tmin"]) & (i["t"] <= b["tmax"])
-        ).otherwise(F.lit(True))
-        return sp_ok & t_ok
-
-    kept = F.filter(TT.instants(tc), inside)
-    n = F.size(kept)
-    return F.when(
-        n > 0,
-        TT._temporal_struct(
-            F.when(n == 1, F.lit(1)).otherwise(F.lit(2)),
-            F.lit(1),  # restriction by sampling → discrete
-            F.array(TT._seq_struct(F.lit(True), F.lit(True), kept)),
-        ),
-    )
-
-
 def _inside_box(i: Column, b: Column) -> Column:
     """Instant i inside STBOX b (borders inclusive — MEOS border_inc)."""
     sp_ok = F.when(
@@ -481,10 +448,9 @@ def at_stbox(t, box) -> Column:
     interpolation to materialize entry/exit instants. NULL when the
     restriction is empty.
 
-    Replaces at_box_sampled's observed-instants approximation: a
-    segment that clips a region corner between samples is now kept
-    (with interpolated crossing instants), and clipped durations are
-    unbiased. Reference: src/geo/tgeompoint.cpp:265-273."""
+    A segment that clips a region corner between samples is kept (with
+    interpolated crossing instants), so clipped durations are unbiased.
+    Reference: src/geo/tgeompoint.cpp:265-273."""
     tc = _c(t)
     ss = clip_spanset(tc, box)
     return F.when(

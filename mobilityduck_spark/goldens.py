@@ -1314,26 +1314,26 @@ class Translator:
 
     # ---------------- pairwise trajectory predicates
     def fn_adisjoint(self, node):
-        from .operators.tpoint_pairs import register_pair_udfs
+        from .operators.tpoint_pairs import a_disjoint, flat_cols
 
         (a, _), (b, _) = self._args(node)
-        return register_pair_udfs(None)["a_disjoint"](a, b), self._BOOL
+        return a_disjoint(*flat_cols(a), *flat_cols(b)), self._BOOL
 
     def fn_edwithin(self, node):
-        from .operators.tpoint_pairs import register_pair_udfs
+        from .operators.tpoint_pairs import e_dwithin, flat_cols
 
         (a, _), (b, _), (d, _) = self._args(node)
         return (
-            register_pair_udfs(None)["e_dwithin"](a, b, d.cast("double")),
+            e_dwithin(*flat_cols(a), *flat_cols(b), d.cast("double")),
             self._BOOL,
         )
 
     def fn_tdwithin(self, node):
-        from .operators.tpoint_pairs import register_tdwithin_tbool_udf
+        from .operators.tpoint_pairs import flat_cols, tdwithin_tbool
 
-        (a, ka), (b, kb), (d, _) = self._args(node)
+        (a, _), (b, _), (d, _) = self._args(node)
         return (
-            register_tdwithin_tbool_udf()(a, b, d.cast("double")),
+            tdwithin_tbool(*flat_cols(a), *flat_cols(b), d.cast("double")),
             ("temporal", "bool"),
         )
 

@@ -31,15 +31,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import span as S
-
-
-def broadcast_overlap_join(
-    big: DataFrame, small: DataFrame, big_span: Column, small_span: Column
-) -> DataFrame:
-    """Small-side broadcast; exact inclusive-bound overlap predicate."""
-    return big.join(F.broadcast(small), on=S.overlaps(big_span, small_span))
-
 
 def bucketed_overlap_join(
     left: DataFrame,
@@ -193,27 +184,27 @@ def grid_pair_candidates(
     left_id: str,
     right_id: str,
     d: float,
-    cols: tuple = ("t_arr", "x_arr", "y_arr", "len_arr"),
     cell: float | None = None,
     tbucket_secs: int = 3600,
 ) -> DataFrame:
     """Candidate (left_id, right_id) pairs whose trajectories MIGHT come
     within distance d — the scalable large×large prelude to an exact
-    pairwise kernel (eDwithin / minDistance). Both sides shuffle on
+    pairwise kernel (eDwithin / minDistance). Each side carries the flat
+    trajectory columns t_arr, x_arr, y_arr, len_arr (`tpoint_pairs.
+    flat_cols`, as in berlinmod's flat trips). Both sides shuffle on
     (tb, cx, cy) grid keys (plain hash-partitioned equi-join, no
     broadcast, no cartesian); the candidate id-pair set is DISTINCTed
     before the caller re-joins payloads, so the expensive arrays cross
     the exact-verify join once per candidate pair, not once per shared
     key. Superset guarantee: see module docstring."""
     cell = float(cell) if cell is not None else max(4.0 * d, 1.0)
-    tc, xc, yc, lc = cols
 
     def keyed(df: DataFrame, idc: str, alias: str, expand: float) -> DataFrame:
         return df.select(
             F.col(idc).alias(alias),
             F.explode(
                 traj_grid_keys(
-                    F.col(tc), F.col(xc), F.col(yc), F.col(lc),
+                    F.col("t_arr"), F.col("x_arr"), F.col("y_arr"), F.col("len_arr"),
                     cell=cell, tbucket_secs=tbucket_secs, expand=expand,
                 )
             ).alias("_gk"),

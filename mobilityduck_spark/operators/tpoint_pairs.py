@@ -6,9 +6,12 @@ Reference: src/geo/tgeompoint.cpp:279-311 (aDisjoint :279-287, eDwithin
 MEOS synchronizes the two temporals and solves the quadratic
 ‖p1(t) − p2(t)‖² ≤ d² per overlapping segment pair.
 
-This is genuine geometry math over two nested arrays — the designated
-pandas-UDF slow path (SURVEY.md §7 phase 4). The UDF is Arrow-batched
-and numpy-vectorized per row pair; the surrounding join/filter stays
+This is genuine geometry math over two trajectories — the designated
+pandas-UDF slow path (SURVEY.md §7 phase 4). Every pair op is one pandas
+UDF built by `_pair_udf` over flat ARRAY<DOUBLE> columns (`flat_cols`):
+Arrow converts those to numpy ~100× faster than nested temporal structs,
+which arrive as Python object trees. Each UDF is Arrow-batched and
+numpy-vectorized per row pair; the surrounding join/filter stays
 relational, and callers should pre-filter pairs with the cheap
 expression-level stbox_overlaps/expand_space predicate so the UDF only
 sees plausible pairs (the same bbox pre-filter the reference's R-tree
@@ -17,52 +20,12 @@ would provide).
 
 from __future__ import annotations
 
+import datetime
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def _rows(col):
-    """A struct column arrives in a pandas UDF as a pd.DataFrame (one
-    column per field); normalize to an iterable of per-row dicts."""
-    if isinstance(col, pd.DataFrame):
-        return col.to_dict("records")
-    return list(col)
-
-
-def _has_seqs(tv) -> bool:
-    try:
-        seqs = tv["seqs"] if not hasattr(tv, "seqs") else tv.seqs
-    except (KeyError, TypeError):
-        return False
-    return seqs is not None and len(seqs) > 0
-
-
-def _extract(tv) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Temporal struct (as nested dict/Row) → (t_secs, x, y, seq_lens)
-    arrays over all instants. seq_lens records per-sequence instant
-    counts so synchronization can mask the inter-sequence gaps where the
-    temporal is undefined (MEOS synchronizes only over defined
-    sequences — interpolating across a gap-split trip's >2h holes would
-    fabricate straight-line positions)."""
-    seqs = tv["seqs"] if isinstance(tv, dict) else tv.seqs
-    ts, xs, ys, lens = [], [], [], []
-    for s in seqs:
-        insts = s["instants"] if isinstance(s, dict) else s.instants
-        lens.append(len(insts))
-        for i in insts:
-            ii = i if isinstance(i, dict) else i.asDict()
-            v = ii["v"] if isinstance(ii["v"], dict) else ii["v"].asDict()
-            ts.append(ii["t"].timestamp())
-            xs.append(v["x"])
-            ys.append(v["y"])
-    return (
-        np.asarray(ts),
-        np.asarray(xs),
-        np.asarray(ys),
-        np.asarray(lens, dtype=np.int64),
-    )
 
 
 def _gap_bounds(side) -> tuple[np.ndarray, np.ndarray]:
@@ -161,54 +124,6 @@ def _min_dist_sq_profile(sync):
     return best
 
 
-def register_pair_udfs(spark):
-    """Register the pairwise UDFs for DataFrame use. Returns dict of
-    callables usable as column functions."""
-
-    @F.pandas_udf(T.DoubleType())
-    def min_pair_distance(a: pd.DataFrame, b: pd.DataFrame) -> pd.Series:
-        out = []
-        for av, bv in zip(_rows(a), _rows(b)):
-            if av is None or bv is None or not _has_seqs(av) or not _has_seqs(bv):
-                out.append(None)
-                continue
-            sync = _sync_segments(_extract(av), _extract(bv))
-            out.append(np.sqrt(_min_dist_sq_profile(sync)) if sync else None)
-        return pd.Series(out, dtype="float64")
-
-    @F.pandas_udf(T.BooleanType())
-    def e_dwithin(a: pd.DataFrame, b: pd.DataFrame, d: pd.Series) -> pd.Series:
-        out = []
-        for av, bv, dv in zip(_rows(a), _rows(b), list(d)):
-            if av is None or bv is None or not _has_seqs(av) or not _has_seqs(bv):
-                out.append(None)
-                continue
-            sync = _sync_segments(_extract(av), _extract(bv))
-            out.append(
-                bool(_min_dist_sq_profile(sync) <= dv * dv) if sync else False
-            )
-        return pd.Series(out, dtype="object")
-
-    @F.pandas_udf(T.BooleanType())
-    def a_disjoint(a: pd.DataFrame, b: pd.DataFrame) -> pd.Series:
-        # "always disjoint": min distance over the shared window > 0;
-        # temporals that never overlap in time are trivially disjoint
-        out = []
-        for av, bv in zip(_rows(a), _rows(b)):
-            if av is None or bv is None or not _has_seqs(av) or not _has_seqs(bv):
-                out.append(None)
-                continue
-            sync = _sync_segments(_extract(av), _extract(bv))
-            out.append(True if sync is None else bool(_min_dist_sq_profile(sync) > 0))
-        return pd.Series(out, dtype="object")
-
-    return {
-        "min_pair_distance": min_pair_distance,
-        "e_dwithin": e_dwithin,
-        "a_disjoint": a_disjoint,
-    }
-
-
 def _dwithin_intervals(sync, dist: float):
     """Exact time intervals (as [lo, hi] second pairs) where
     ‖pa(t)−pb(t)‖ ≤ dist: per synced segment the squared distance is a
@@ -262,59 +177,6 @@ def _dwithin_intervals(sync, dist: float):
     if ts.size >= 2 and not vs[-1] and vk[-1] and dx[-1] ** 2 + dy[-1] ** 2 <= d2:
         push(ts[-1], ts[-1])
     return out
-
-
-_SPAN_ARR_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("lower", T.TimestampType()),
-            T.StructField("upper", T.TimestampType()),
-            T.StructField("lower_inc", T.BooleanType()),
-            T.StructField("upper_inc", T.BooleanType()),
-        ]
-    )
-)
-
-
-def register_tdwithin_udf(spark):
-    """tDwithin(a, b, d) rendered as the tstzspanset where the two
-    moving points are within distance d (i.e. whenTrue(tDwithin) —
-    the form every recorded BerlinMOD query consumes)."""
-    import datetime
-
-    def _to_dt(s: float):
-        return datetime.datetime.fromtimestamp(s, tz=datetime.timezone.utc).replace(
-            tzinfo=None
-        )
-
-    @F.pandas_udf(_SPAN_ARR_TYPE)
-    def dwithin_periods(a: pd.DataFrame, b: pd.DataFrame, d: pd.Series) -> pd.Series:
-        out = []
-        for av, bv, dv in zip(_rows(a), _rows(b), list(d)):
-            if av is None or bv is None or not _has_seqs(av) or not _has_seqs(bv):
-                out.append(None)
-                continue
-            sync = _sync_segments(_extract(av), _extract(bv))
-            if sync is None:
-                out.append([])
-                continue
-            spans = _dwithin_intervals(sync, float(dv))
-            out.append(
-                [
-                    {
-                        "lower": _to_dt(lo),
-                        "upper": _to_dt(hi),
-                        "lower_inc": True,
-                        # closed upper bound: at the root of the quadratic
-                        # the distance equals d, which satisfies <= d
-                        "upper_inc": True,
-                    }
-                    for lo, hi in spans
-                ]
-            )
-        return pd.Series(out, dtype="object")
-
-    return dwithin_periods
 
 
 def _seg_mask(side, n: int) -> np.ndarray | None:
@@ -413,28 +275,19 @@ def _any_cross(pa: np.ndarray, pb: np.ndarray, ma=None, mb=None) -> bool:
     return bool(((d1 * d2 < 0) & (d3 * d4 < 0)).any())
 
 
-def register_traj_distance_udf(spark):
-    """Static trajectory-pair distance UDF (BerlinMOD q5)."""
-
-    @F.pandas_udf(T.DoubleType())
-    def min_traj_distance(a: pd.DataFrame, b: pd.DataFrame) -> pd.Series:
-        out = []
-        for av, bv in zip(_rows(a), _rows(b)):
-            if av is None or bv is None or not _has_seqs(av) or not _has_seqs(bv):
-                out.append(None)
-                continue
-            out.append(_min_polyline_dist(_extract(av), _extract(bv)))
-        return pd.Series(out, dtype="float64")
-
-    return min_traj_distance
+_SPAN_ARR_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("lower", T.TimestampType()),
+            T.StructField("upper", T.TimestampType()),
+            T.StructField("lower_inc", T.BooleanType()),
+            T.StructField("upper_inc", T.BooleanType()),
+        ]
+    )
+)
 
 
-# ---------------------------------------------------------------- flat fast path
-# Arrow converts ARRAY<DOUBLE> columns to numpy arrays ~100× faster than
-# nested temporal structs (which arrive as Python object trees). The
-# flat-path UDFs take (ts, xs, ys) arrays per side — produced once per
-# trajectory by `flat_cols` — and skip _extract entirely. Same math.
-
+# ---------------------------------------------------------------- flat input
 def flat_cols(trip):
     """(t_secs, xs, ys, seq_lens) ARRAY columns from a temporal point.
     seq_lens (ARRAY<INT>, one instant count per sequence) carries the
@@ -459,152 +312,133 @@ def _npl(v) -> np.ndarray | None:
     return None if v is None else np.asarray(v, dtype=np.int64)
 
 
-def register_flat_pair_udfs(spark):
-    """Flat-path pairwise UDFs. Each takes (t, x, y, seq_lens) per side —
-    produce the columns with `flat_cols`; seq_lens masks inter-sequence
-    gaps (see _sync_segments / _seg_mask)."""
+def _pair_udf(kernel, rtype: T.DataType):
+    """One pandas UDF over two flat `(t, x, y, lens)` sides — eight
+    columns, from `flat_cols` or the flat-trips columns — plus any extra
+    per-row columns (the distance), calling `kernel(side_a, side_b,
+    *extra)` per row. NULL when either side is NULL or has no instants.
 
-    @F.pandas_udf(T.DoubleType())
-    def min_pair_distance_flat(
-        ta: pd.Series, xa: pd.Series, ya: pd.Series, la: pd.Series,
-        tb: pd.Series, xb: pd.Series, yb: pd.Series, lb: pd.Series,
-    ) -> pd.Series:
-        out = []
-        for t1, x1, y1, l1, t2, x2, y2, l2 in zip(ta, xa, ya, la, tb, xb, yb, lb):
-            sync = _sync_segments(
-                (_np(t1), _np(x1), _np(y1), _npl(l1)),
-                (_np(t2), _np(x2), _np(y2), _npl(l2)),
-            )
-            out.append(float(np.sqrt(_min_dist_sq_profile(sync))) if sync else None)
-        return pd.Series(out, dtype="float64")
+    A struct-typed UDF cannot emit a NULL row through Arrow, only a row
+    of NULL fields, so for a struct `rtype` that row is turned into NULL
+    JVM-side: a kernel result of None is NULL for every return type."""
+    struct = isinstance(rtype, T.StructType)
 
-    @F.pandas_udf(T.BooleanType())
-    def e_dwithin_flat(
-        ta: pd.Series, xa: pd.Series, ya: pd.Series, la: pd.Series,
-        tb: pd.Series, xb: pd.Series, yb: pd.Series, lb: pd.Series,
-        d: pd.Series,
-    ) -> pd.Series:
+    @F.pandas_udf(rtype)
+    def pair(*cols: pd.Series) -> pd.Series:
         out = []
-        for t1, x1, y1, l1, t2, x2, y2, l2, dv in zip(
-            ta, xa, ya, la, tb, xb, yb, lb, d
-        ):
-            sync = _sync_segments(
-                (_np(t1), _np(x1), _np(y1), _npl(l1)),
-                (_np(t2), _np(x2), _np(y2), _npl(l2)),
+        for ta, xa, ya, la, tb, xb, yb, lb, *extra in zip(*cols):
+            if ta is None or tb is None or not len(ta) or not len(tb):
+                out.append(None)
+                continue
+            out.append(kernel(
+                (_np(ta), _np(xa), _np(ya), _npl(la)),
+                (_np(tb), _np(xb), _np(yb), _npl(lb)),
+                *extra,
+            ))
+        if struct:
+            names = [f.name for f in rtype.fields]
+            return pd.DataFrame(
+                [dict.fromkeys(names) if r is None else r for r in out],
+                columns=names,
             )
-            out.append(bool(_min_dist_sq_profile(sync) <= dv * dv) if sync else False)
         return pd.Series(out, dtype="object")
 
-    @F.pandas_udf(T.BooleanType())
-    def a_disjoint_flat(
-        ta: pd.Series, xa: pd.Series, ya: pd.Series, la: pd.Series,
-        tb: pd.Series, xb: pd.Series, yb: pd.Series, lb: pd.Series,
-    ) -> pd.Series:
-        out = []
-        for t1, x1, y1, l1, t2, x2, y2, l2 in zip(ta, xa, ya, la, tb, xb, yb, lb):
-            sync = _sync_segments(
-                (_np(t1), _np(x1), _np(y1), _npl(l1)),
-                (_np(t2), _np(x2), _np(y2), _npl(l2)),
-            )
-            out.append(True if sync is None else bool(_min_dist_sq_profile(sync) > 0))
-        return pd.Series(out, dtype="object")
+    if not struct:
+        return pair
 
-    @F.pandas_udf(T.DoubleType())
-    def min_traj_distance_flat(
-        ta: pd.Series, xa: pd.Series, ya: pd.Series, la: pd.Series,
-        tb: pd.Series, xb: pd.Series, yb: pd.Series, lb: pd.Series,
-    ) -> pd.Series:
-        out = []
-        for t1, x1, y1, l1, t2, x2, y2, l2 in zip(ta, xa, ya, la, tb, xb, yb, lb):
-            out.append(
-                _min_polyline_dist(
-                    (_np(t1), _np(x1), _np(y1), _npl(l1)),
-                    (_np(t2), _np(x2), _np(y2), _npl(l2)),
-                )
-            )
-        return pd.Series(out, dtype="float64")
+    def op(*cols):
+        out = pair(*cols)
+        return F.when(out[rtype.fields[0].name].isNotNull(), out)
 
+    return op
+
+
+def _to_dt(s: float) -> datetime.datetime:
+    return datetime.datetime.fromtimestamp(s, tz=datetime.timezone.utc).replace(
+        tzinfo=None
+    )
+
+
+def _min_dist(a, b):
+    sync = _sync_segments(a, b)
+    return float(np.sqrt(_min_dist_sq_profile(sync))) if sync else None
+
+
+def _e_dwithin(a, b, d):
+    sync = _sync_segments(a, b)
+    return bool(_min_dist_sq_profile(sync) <= d * d) if sync else False
+
+
+def _a_disjoint(a, b):
+    # "always disjoint": min distance over the shared window > 0;
+    # temporals that never overlap in time are trivially disjoint
+    sync = _sync_segments(a, b)
+    return True if sync is None else bool(_min_dist_sq_profile(sync) > 0)
+
+
+def _dwithin_periods(a, b, d):
+    sync = _sync_segments(a, b)
+    if sync is None:
+        return []
+    # closed upper bound: at the root of the quadratic the distance
+    # equals d, which satisfies <= d
+    return [
+        {"lower": _to_dt(lo), "upper": _to_dt(hi),
+         "lower_inc": True, "upper_inc": True}
+        for lo, hi in _dwithin_intervals(sync, float(d))
+    ]
+
+
+def _tdwithin_tbool(a, b, d):
+    sync = _sync_segments(a, b)
+    if sync is None:
+        return None
+    ts, pax, pay, pbx, pby, vk, _ = sync
+    d2 = float(d) * float(d)
+    insts = [
+        {"t": _to_dt(t), "v": bool((ax - bx) ** 2 + (ay - by) ** 2 <= d2)}
+        for t, ax, ay, bx, by, ok in zip(ts, pax, pay, pbx, pby, vk)
+        if ok
+    ]
+    if not insts:
+        return None
     return {
-        "min_pair_distance": min_pair_distance_flat,
-        "e_dwithin": e_dwithin_flat,
-        "a_disjoint": a_disjoint_flat,
-        "min_traj_distance": min_traj_distance_flat,
+        "subtype": 1 if len(insts) == 1 else 2,
+        "interp": 1,
+        "seqs": [{"lower_inc": True, "upper_inc": True, "instants": insts}],
     }
 
 
-def register_tdwithin_tbool_udf(spark=None):
-    """tDwithin(a, b, d) → temporal boolean (the reference's actual
-    return type — src/geo/tgeompoint.cpp:303-311, MEOS tdwithin_tgeo_tgeo)
-    for DISCRETE/instant synchronization: a discrete TBOOL holding
-    ‖pa−pb‖ ≤ d at every co-defined synchronized instant. Continuous
-    (step-sequence) results are served by register_tdwithin_udf's
-    whenTrue spanset form, which every recorded reference query consumes."""
-    import datetime
-
-    def _to_dt(s: float):
-        return datetime.datetime.fromtimestamp(s, tz=datetime.timezone.utc).replace(
-            tzinfo=None
-        )
-
-    from pyspark.sql.types import (
-        ArrayType, BooleanType, ByteType, StructField, StructType,
-        TimestampType,
-    )
-
-    tbool_type = StructType([
-        StructField("subtype", ByteType()),
-        StructField("interp", ByteType()),
-        StructField("seqs", ArrayType(StructType([
-            StructField("lower_inc", BooleanType()),
-            StructField("upper_inc", BooleanType()),
-            StructField("instants", ArrayType(StructType([
-                StructField("t", TimestampType()),
-                StructField("v", BooleanType()),
-            ]))),
+_TBOOL_TYPE = T.StructType([
+    T.StructField("subtype", T.ByteType()),
+    T.StructField("interp", T.ByteType()),
+    T.StructField("seqs", T.ArrayType(T.StructType([
+        T.StructField("lower_inc", T.BooleanType()),
+        T.StructField("upper_inc", T.BooleanType()),
+        T.StructField("instants", T.ArrayType(T.StructType([
+            T.StructField("t", T.TimestampType()),
+            T.StructField("v", T.BooleanType()),
         ]))),
-    ])
+    ]))),
+])
 
-    @F.pandas_udf(tbool_type)
-    def tdwithin_tbool(
-        a: pd.DataFrame, b: pd.DataFrame, d: pd.Series
-    ) -> pd.DataFrame:
-        out = []
-        for av, bv, dv in zip(_rows(a), _rows(b), list(d)):
-            if av is None or bv is None or not _has_seqs(av) or not _has_seqs(bv):
-                out.append(None)
-                continue
-            sync = _sync_segments(_extract(av), _extract(bv))
-            if sync is None:
-                out.append(None)
-                continue
-            ts, pax, pay, pbx, pby, vk, _ = sync
-            d2 = float(dv) * float(dv)
-            insts = [
-                {"t": _to_dt(t), "v": bool((ax - bx) ** 2 + (ay - by) ** 2 <= d2)}
-                for t, ax, ay, bx, by, ok in zip(ts, pax, pay, pbx, pby, vk)
-                if ok
-            ]
-            if not insts:
-                out.append(None)
-                continue
-            subtype = 1 if len(insts) == 1 else 2
-            out.append({
-                "subtype": subtype,
-                "interp": 1,
-                "seqs": [{"lower_inc": True, "upper_inc": True, "instants": insts}],
-            })
-        # StructType pandas UDFs must return a DataFrame (one column per
-        # struct field); a None row maps to all-null fields
-        return pd.DataFrame(
-            [
-                r if r is not None
-                else {"subtype": None, "interp": None, "seqs": None}
-                for r in out
-            ],
-            columns=["subtype", "interp", "seqs"],
-        )
-
-    return tdwithin_tbool
+# The pair ops. Each takes the eight flat columns `*flat_cols(a),
+# *flat_cols(b)`; those with a distance take it as a ninth column.
+# min synchronized distance (NULL when the time windows never overlap)
+min_pair_distance = _pair_udf(_min_dist, T.DoubleType())
+# eDwithin(a, b, d)
+e_dwithin = _pair_udf(_e_dwithin, T.BooleanType())
+# aDisjoint(a, b)
+a_disjoint = _pair_udf(_a_disjoint, T.BooleanType())
+# ST_Distance(trajectory(a), trajectory(b)), time ignored (BerlinMOD q5)
+min_traj_distance = _pair_udf(_min_polyline_dist, T.DoubleType())
+# whenTrue(tDwithin(a, b, d)) as a tstzspanset — the form every recorded
+# BerlinMOD query consumes
+dwithin_periods = _pair_udf(_dwithin_periods, _SPAN_ARR_TYPE)
+# tDwithin(a, b, d) as a discrete temporal bool (the reference's return
+# type, MEOS tdwithin_tgeo_tgeo): ‖pa−pb‖ ≤ d at every co-defined
+# synchronized instant
+tdwithin_tbool = _pair_udf(_tdwithin_tbool, _TBOOL_TYPE)
 
 
 def register_probe_edwithin_udf(probes: list, d: float, ordered: bool = False):

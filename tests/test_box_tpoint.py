@@ -106,15 +106,6 @@ def test_stbox_of_tpoint_and_predicates(spark):
     )
 
 
-def test_at_box_sampled(spark):
-    df = _traj(spark)
-    box = B.stbox(xmin=2, ymin=3, xmax=4, ymax=9)
-    r = one(df, TP.at_box_sampled(F.col("tp"), box))
-    assert r is not None and len(r["seqs"][0]["instants"]) == 2  # (3,4), (3,8)
-    empty = one(df, TP.at_box_sampled(F.col("tp"), B.stbox(xmin=50, ymin=50, xmax=60, ymax=60)))
-    assert empty is None
-
-
 def test_at_values_point(spark):
     df = _traj(spark)
     r = one(df, TP.at_values_point(F.col("tp"), F.lit(3.0), F.lit(4.0)))
@@ -135,11 +126,10 @@ def _line(spark, pts, **kw):
 
 def test_at_stbox_crossing_between_samples(spark):
     # (0,0)@00:00 → (10,0)@00:10 crosses x∈[4,6] entirely between
-    # samples: sampled semantics sees nothing, exact clip keeps the
-    # 2-minute interior crossing with interpolated entry/exit instants.
+    # samples: no observed instant is inside, yet the exact clip keeps
+    # the 2-minute interior crossing with interpolated entry/exit instants.
     df = _line(spark, [(0, 0, "2000-01-01 00:00:00"), (10, 0, "2000-01-01 00:10:00")])
     box = B.stbox(xmin=4, ymin=-1, xmax=6, ymax=1)
-    assert one(df, TP.at_box_sampled(F.col("tp"), box)) is None
     r = one(df, TP.at_stbox(F.col("tp"), box))
     assert r is not None
     inst = r["seqs"][0]["instants"]

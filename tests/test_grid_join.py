@@ -1,98 +1,58 @@
 """2-D grid-bucketed spatial pair join (operators/range_join.py):
-candidate completeness vs the broadcast theta-join path, and a plan
-gate proving the large×large shape shuffles instead of broadcasting."""
+candidate completeness vs the broadcast theta-join path, a plan gate
+proving the large×large shape shuffles instead of broadcasting, and
+bm_q6/bm_q10 on the grid branch against their oracles."""
 
 from pyspark.sql import functions as F
 
 from mobilityduck_spark import berlinmod as Q
 from mobilityduck_spark.functions import box as B
 from mobilityduck_spark.operators.range_join import grid_pair_candidates
-from mobilityduck_spark.operators.tpoint_pairs import register_flat_pair_udfs
+from mobilityduck_spark.operators.tpoint_pairs import e_dwithin
 
 SF_DIR = "/root/testdata/sf0.001"
 D = 10.0
+_FLAT = ("t_arr", "x_arr", "y_arr", "len_arr")
 
 
-def _sides(spark):
-    t = Q._flat_trips(spark, SF_DIR)
-    t1 = t.select(
-        F.col("vehicle_id").alias("vid1"),
-        F.col("t_arr").alias("ta1"), F.col("x_arr").alias("xa1"),
-        F.col("y_arr").alias("ya1"), F.col("len_arr").alias("la1"),
-        F.col("bb").alias("bb1"),
-    )
-    t2 = t.select(
-        F.col("vehicle_id").alias("vid2"),
-        F.col("t_arr").alias("ta2"), F.col("x_arr").alias("xa2"),
-        F.col("y_arr").alias("ya2"), F.col("len_arr").alias("la2"),
-        F.col("bb").alias("bb2"),
-    )
-    return t1, t2
-
-
-def _exact_pairs(spark, pairs):
-    udfs = register_flat_pair_udfs(spark)
-    return set(
-        (r["vid1"], r["vid2"])
-        for r in pairs.filter(
-            udfs["e_dwithin"](
-                "ta1", "xa1", "ya1", "la1", "ta2", "xa2", "ya2", "la2",
-                F.lit(D),
-            )
-        )
-        .select("vid1", "vid2")
-        .distinct()
-        .collect()
+def _side(t, n):
+    return t.select(
+        F.col("vehicle_id").alias(f"vid{n}"),
+        *[F.col(c).alias(f"{c}{n}") for c in _FLAT],
+        F.col("bb").alias(f"bb{n}"),
     )
 
 
 def test_grid_candidates_match_broadcast_path(spark):
-    """Grid-candidate path and broadcast theta path agree on the final
-    eDwithin pair set (same exact kernel on both candidate sets)."""
-    t1, t2 = _sides(spark)
+    """Both `_edwithin_pairs` plans (kernel closure and grid candidates)
+    agree with an independent broadcast theta-join + exact kernel on the
+    eDwithin self-pair set."""
+    t = Q._flat_trips(spark, SF_DIR)
+    t1, t2 = _side(t, 1), _side(t, 2)
     bc = t1.join(
         F.broadcast(t2),
         (F.col("vid1") < F.col("vid2"))
         & B.stbox_overlaps(
             B.expand_space(F.col("bb1"), F.lit(D)), F.col("bb2")
         ),
-    )
-    expected = _exact_pairs(spark, bc)
+    ).filter(e_dwithin(*[f"{c}{n}" for n in (1, 2) for c in _FLAT], F.lit(D)))
+    expected = {(r["vid1"], r["vid2"]) for r in bc.collect()}
     assert expected, "planted data should contain close pairs"
 
-    cand = grid_pair_candidates(
-        t1.withColumnRenamed("ta1", "t_arr").withColumnRenamed("xa1", "x_arr")
-          .withColumnRenamed("ya1", "y_arr").withColumnRenamed("la1", "len_arr"),
-        t2.withColumnRenamed("ta2", "t_arr").withColumnRenamed("xa2", "x_arr")
-          .withColumnRenamed("ya2", "y_arr").withColumnRenamed("la2", "len_arr"),
-        "vid1", "vid2", d=D,
-    ).filter(F.col("vid1_l") < F.col("vid2_r"))
-    joined = cand.join(t1, F.col("vid1_l") == F.col("vid1")).join(
-        t2, F.col("vid2_r") == F.col("vid2")
-    )
-    got = _exact_pairs(spark, joined)
-    assert got == expected
+    for n_probes in (0, Q._GRID_PAIR_THRESHOLD + 1):
+        pairs = Q._edwithin_pairs(spark, t, t, D, n_probes, self_pairs=True)
+        assert {(r["vid1"], r["vid2"]) for r in pairs.collect()} == expected
 
 
 def test_grid_candidate_plan_shuffles(spark):
     """With broadcasting disabled (the large×large regime), the
     candidate join is a shuffled equi-join: no BroadcastNestedLoopJoin,
     no CartesianProduct."""
-    t1, t2 = _sides(spark)
+    t = Q._flat_trips(spark, SF_DIR)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        cand = grid_pair_candidates(
-            t1.withColumnRenamed("ta1", "t_arr")
-              .withColumnRenamed("xa1", "x_arr")
-              .withColumnRenamed("ya1", "y_arr")
-              .withColumnRenamed("la1", "len_arr"),
-            t2.withColumnRenamed("ta2", "t_arr")
-              .withColumnRenamed("xa2", "x_arr")
-              .withColumnRenamed("ya2", "y_arr")
-              .withColumnRenamed("la2", "len_arr"),
-            "vid1", "vid2", d=D,
-        )
+        cand = grid_pair_candidates(t, t, "vehicle_id", "vehicle_id", d=D)
         plan = cand._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
@@ -191,3 +151,25 @@ def test_asof_join_null_tiebreak_loses_ties(spark):
         value_cols=["value"], tiebreak="event_id",
     )
     assert out.collect()[0]["value"] == 2.0  # event_id=5 wins, not NULL
+
+
+def test_grid_branch_matches_oracle(spark, monkeypatch):
+    """bm_q6 and bm_q10 on the grid-candidate branch (forced by a zero
+    threshold) equal their DuckDB oracles, normalized as driver_check."""
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+    from scripts.driver_check import norm
+
+    monkeypatch.setattr(Q, "_GRID_PAIR_THRESHOLD", 0)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet'")
+    for name in ("bm_q6", "bm_q10"):
+        qdf = entry_mod.queries()[name](spark, SF_DIR)
+        cols = sorted(qdf.columns)
+        got = [tuple(r[c] for c in cols) for r in qdf.collect()]
+        ora = con.execute(entry_mod.oracle_sql()[name]).fetch_df()
+        assert sorted(ora.columns.tolist()) == cols, name
+        want = [tuple(r) for r in ora[cols].itertuples(index=False)]
+        assert got, name
+        assert norm(got) == norm(want), name

@@ -30,17 +30,20 @@ def _mk(spark):
     )
 
 
+def _flat(*names):
+    return [c for n in names for c in PP.flat_cols(F.col(n))]
+
+
 def test_pairwise_ops(spark):
     df = _mk(spark)
-    u = PP.register_pair_udfs(spark)
     r = df.select(
-        u["min_pair_distance"]("a", "b").alias("dab"),
-        u["min_pair_distance"]("a", "c").alias("dac"),
-        u["e_dwithin"]("a", "b", F.lit(3.5)).alias("w35"),
-        u["e_dwithin"]("a", "b", F.lit(2.0)).alias("w20"),
-        u["a_disjoint"]("a", "b").alias("disj_ab"),
-        u["a_disjoint"]("a", "c").alias("disj_ac"),
-        u["a_disjoint"]("a", "d").alias("disj_ad"),
+        PP.min_pair_distance(*_flat("a", "b")).alias("dab"),
+        PP.min_pair_distance(*_flat("a", "c")).alias("dac"),
+        PP.e_dwithin(*_flat("a", "b"), F.lit(3.5)).alias("w35"),
+        PP.e_dwithin(*_flat("a", "b"), F.lit(2.0)).alias("w20"),
+        PP.a_disjoint(*_flat("a", "b")).alias("disj_ab"),
+        PP.a_disjoint(*_flat("a", "c")).alias("disj_ac"),
+        PP.a_disjoint(*_flat("a", "d")).alias("disj_ad"),
     ).collect()[0]
     assert r["dab"] == 3.0  # constant parallel offset
     assert abs(r["dac"]) < 1e-9  # crossing → 0
@@ -52,14 +55,43 @@ def test_pairwise_ops(spark):
 
 def test_tdwithin_periods(spark):
     df = _mk(spark)
-    dw = PP.register_tdwithin_udf(spark)
-    rows = df.select(dw("a", "c", F.lit(1.0)).alias("ss")).collect()[0]["ss"]
+    rows = df.select(
+        PP.dwithin_periods(*_flat("a", "c"), F.lit(1.0)).alias("ss")
+    ).collect()[0]["ss"]
     # |dy(t)| where dy goes 5 → -5 linearly over 10 days; within 1.0 for
     # dy ∈ [-1, 1] → days 4.0..6.0 (u ∈ [0.4, 0.6])
     assert len(rows) == 1
     sp = rows[0]
     assert sp["lower"].day == 5 and sp["lower"].hour == 0  # Jan 1 + 4d = Jan 5
     assert sp["upper"].day == 7 and sp["upper"].hour == 0
+
+
+def test_pair_ops_null_or_empty_side(spark):
+    """Every pair op gives NULL when a side is NULL or has no instants,
+    on either side."""
+    base = _mk(spark)
+    tp = base.schema["a"].dataType
+    df = base.select(
+        "a",
+        F.lit(None).cast(tp).alias("n"),
+        F.col("a").withField("seqs", F.array().cast(tp["seqs"].dataType)).alias("e"),
+    )
+    d = F.lit(3.0)
+    ops = {
+        "min_pair_distance": lambda s: PP.min_pair_distance(*s),
+        "e_dwithin": lambda s: PP.e_dwithin(*s, d),
+        "a_disjoint": lambda s: PP.a_disjoint(*s),
+        "min_traj_distance": lambda s: PP.min_traj_distance(*s),
+        "dwithin_periods": lambda s: PP.dwithin_periods(*s, d),
+        "tdwithin_tbool": lambda s: PP.tdwithin_tbool(*s, d),
+    }
+    cols = [
+        op(_flat(*pair)).alias(f"{name}_{''.join(pair)}")
+        for name, op in ops.items()
+        for pair in (("a", "n"), ("n", "a"), ("a", "e"), ("e", "a"))
+    ]
+    r = df.select(*cols).collect()[0].asDict()
+    assert len(r) == 24 and r == dict.fromkeys(r), r
 
 
 def test_sync_masks_inter_sequence_gaps():
@@ -129,3 +161,58 @@ def test_polyline_dist_skips_gap_segments():
     )
     d2 = PP._min_polyline_dist(a, b2)
     assert d2 > 3.9  # not 0 (bridge crossing ignored)
+
+
+# ------------------------------------------------ goldens-harness pins
+# Reference-syntax cases replayed through goldens.replay_case; expected
+# outputs checked by hand against the geometry. A moves (0,0)→(10,0) over
+# Jan 1..11; B is A shifted to y=3; C is a two-sequence seqset below A on
+# Jan 1..3 and above it on Jan 9..11 — interpolating across its gap would
+# put C on A at Jan 6.
+_A = "tgeompoint '[Point(0 0)@2000-01-01, Point(10 0)@2000-01-11]'"
+_B = "tgeompoint '[Point(0 3)@2000-01-01, Point(10 3)@2000-01-11]'"
+_C = (
+    "tgeompoint '{[Point(0 -5)@2000-01-01, Point(2 -3)@2000-01-03], "
+    "[Point(8 3)@2000-01-09, Point(10 5)@2000-01-11]}'"
+)
+_PIN_CASES = [
+    (f"SELECT eDwithin({_A}, {_B}, 3.5);", "true"),
+    (f"SELECT eDwithin({_A}, {_B}, 2.0);", "false"),
+    # the gap is masked: C never touches A where both are defined
+    (f"SELECT aDisjoint({_A}, {_C});", "true"),
+    (
+        f"SELECT asText(tDwithin({_A}, {_C}, 4.0));",
+        "{f@2000-01-01 00:00:00+00, t@2000-01-03 00:00:00+00, "
+        "t@2000-01-09 00:00:00+00, f@2000-01-11 00:00:00+00}",
+    ),
+]
+
+
+def test_pair_goldens_pins(spark):
+    from mobilityduck_spark import goldens as G
+
+    for sql, expected in _PIN_CASES:
+        assert G.replay_case(spark, sql, expected) == ("pass", ""), sql
+
+
+def test_pair_goldens_null_operand(spark):
+    """A NULL operand gives NULL for every pair op (the translator's
+    literal row is replayed with either temporal set to NULL)."""
+    from pyspark.sql import types as T
+
+    from mobilityduck_spark import goldens as G
+
+    for sql, _ in _PIN_CASES:
+        for null_at in (0, 1):
+            tr = G.Translator()
+            col, kind = tr.eval(G.parse_select(sql))
+            vals = list(tr.lit_values)
+            vals[null_at] = None
+            schema = T.StructType(
+                [T.StructField(f"lit{i}", dt, True)
+                 for i, dt in enumerate(tr.lit_schemas)]
+            )
+            row = spark.createDataFrame([tuple(vals)], schema).select(
+                col.alias("r")
+            ).collect()[0]
+            assert G.render(row["r"], kind) == "NULL", (sql, null_at)
