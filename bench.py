@@ -9,14 +9,15 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from mobilityduck_spark import pins  # noqa: E402
 from mobilityduck_spark import queries as Q  # noqa: E402
 from mobilityduck_spark.session import get_spark  # noqa: E402
+from scripts import runner  # noqa: E402
 
 
 # The fixed stdout query subset (see main(): registry-growth-proof
@@ -153,6 +154,18 @@ def promotion(
     return (target if qualifies or force else None), quiet_run, frac_2x
 
 
+def git_sha(path: str) -> str | None:
+    """HEAD's commit of the git checkout holding `path`, or None outside
+    one (an exported copy of the tree, or no git at all)."""
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=path, capture_output=True, text=True
+        )
+    except OSError:
+        return None
+    return out.stdout.strip() if out.returncode == 0 else None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -169,9 +182,9 @@ def main() -> None:
     qs = Q.queries()
     t_setup = time.perf_counter()
     spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    qs["attime_duration"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    runner.time_query(spark, sf_dir, "attime_duration", 1)
     # also warm the embedding/cosine expression path (same rationale)
-    qs["embed_topk"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    runner.time_query(spark, sf_dir, "embed_topk", 1)
     # build the shared persisted intermediates (trips / flat trips /
     # point hits / segments / assembled temporals) HERE so the one-time
     # cost is charged to setup_sec, not to whichever query touches a
@@ -192,20 +205,15 @@ def main() -> None:
     # the min removes the attribution artifact and matches how a warm
     # cluster runs; set SPARK_GRAFT_BENCH_REPS=1 for single-shot timings
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
-    timings: dict[str, float] = {}
-    for name, fn in sorted(qs.items()):
-        # one scope around all reps: later reps read rep 1's call pins,
-        # and the scope's untimed exit releases them so cache blocks do
-        # not accumulate across the 220-query session (VERDICT r11 item
-        # 4). Session-scoped pins (berlinmod warm set, memoized IVF/PQ
-        # fits) stay — the setup-charged shared intermediates.
-        best = float("inf")
-        with pins.query_scope(name):
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+    # all reps of a query run in one scope whose untimed exit releases
+    # its call pins, so cache blocks do not accumulate across the
+    # 220-query session (VERDICT r11 item 4). Session-scoped pins
+    # (berlinmod warm set, memoized IVF/PQ fits) stay — the
+    # setup-charged shared intermediates.
+    timings = {
+        name: round(min(runner.time_query(spark, sf_dir, name, reps)), 3)
+        for name in sorted(qs)
+    }
 
     total = round(sum(timings.values()), 3)
 
@@ -226,6 +234,7 @@ def main() -> None:
         "reps": reps,
         "setup_sec": setup_sec,
         "cpus": cpus,
+        "git_sha": git_sha(here),
     }
     committed = {}
     for name in ("BENCH_full.json", f"BENCH_c{cpus}.json"):

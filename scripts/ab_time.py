@@ -6,23 +6,19 @@ Usage: python scripts/ab_time.py [sf_dir] [--reps N] [--explain] name [name ...]
 
 The timer covers the BUILD too (eager construction work: sample
 collects, k-means fits, CC checkpoint rounds), and the plan is forced
-with the noop SINK as bench.py does — count() lets Catalyst eliminate
-left joins against unique-key aggregates, so count timings of such
-plans are fiction. All reps of a query run in one pins.query_scope.
---explain prints each query's formatted plan before timing and its row
-count after; `--reps 1 --explain` is a single profiling pass.
+with the noop sink as bench.py does (scripts/runner.time_query).
+--explain prints each query's formatted plan before timing it;
+`--reps 1 --explain` is a single profiling pass.
 """
 
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entry_mod
-from mobilityduck_spark import pins
 from mobilityduck_spark.session import get_spark
+from scripts import runner
 
 
 def main() -> None:
@@ -38,21 +34,13 @@ def main() -> None:
     if args and args[0].startswith("/"):
         sf_dir, args = args[0], args[1:]
     spark = get_spark()
-    qs = entry_mod.queries()
     for name in args:
-        ts = []
-        with pins.query_scope(name):
-            if explain:  # outside the timed region
-                qs[name](spark, sf_dir).explain("formatted")
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                df = qs[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                ts.append(time.perf_counter() - t0)
-            rows = f" rows={df.count()}" if explain else ""
+        if explain:  # outside the timed region
+            print(runner.plan(spark, sf_dir, name))
+        ts = runner.time_query(spark, sf_dir, name, reps)
         print(
             f"{name}: min={min(ts):.3f}s median={statistics.median(ts):.3f}s "
-            f"all={[round(t, 2) for t in ts]}{rows}"
+            f"all={[round(t, 2) for t in ts]}"
         )
 
 

@@ -1,8 +1,11 @@
 """Driver-style correctness re-check for selected queries at a chosen SF.
 
 Mimics the round driver: runs the registered Spark query and its DuckDB
-oracle on the same parquet dir, compares row count, column names, duckdb
-result dtypes, and order-insensitive values.
+oracle on the same parquet dir (scripts/runner.check), compares row
+count, column names and order-insensitive values, and audits the two
+classes that flip the driver's value hash on equal values: negative
+zeros on either engine and oracle dtypes that widen (HUGEINT sums,
+NULL-bearing integer columns fetched as float64).
 
 Usage: python scripts/driver_check.py [sf_dir] [name ...]
        python scripts/driver_check.py [sf_dir] --json OUT.json [name ...]
@@ -10,44 +13,23 @@ Usage: python scripts/driver_check.py [sf_dir] [name ...]
 With no names, checks EVERY registered query (the full-registry
 round-close gate the driver's ~50-query window cannot provide).
 --json writes a driver-shaped artifact: one row per query with
-rows_match/schema_match/hash_match/err, rows-only queries recorded
-with err="no_oracle".
+rows_match/schema_match/hash_match/err plus negzero/dtype_hazards,
+rows-only queries recorded with err="no_oracle". A query that raises
+is recorded with its error and the sweep goes on. Exits nonzero if any
+query fails, raises, renders a negative zero or has a dtype hazard.
 """
 
 import json
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
 import __spark_entry__ as entry_mod
-from mobilityduck_spark import pins
 from mobilityduck_spark.session import get_spark
+from scripts import runner
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
-
-
-def norm(rows):
-    out = []
-    for r in rows:
-        vals = []
-        for v in r:
-            if hasattr(v, "item"):
-                v = v.item()
-            if isinstance(v, float):
-                assert not math.isnan(v)
-                v = round(v, 6)
-                if v == int(v):
-                    v = int(v)
-            vals.append(v)
-        out.append(tuple(vals))
-    return sorted(out, key=lambda t: tuple(str(x) for x in t))
+USAGE = "usage: driver_check.py [sf_dir] [--json OUT] [names...]"
 
 
 def main() -> None:
@@ -62,72 +44,32 @@ def main() -> None:
     if "--json" in args:
         i = args.index("--json")
         if i + 1 >= len(args):
-            sys.exit("usage: driver_check.py [sf_dir] [--json OUT] [names...]")
+            sys.exit(USAGE)
         json_out = args[i + 1]
         args = args[:i] + args[i + 2 :]
-    names = args or sorted(entry_mod.queries().keys())
     registry = entry_mod.queries()
+    names = args or sorted(registry)
     unknown = [n for n in names if n not in registry]
     if unknown:
-        sys.exit(
-            f"unknown query name(s): {', '.join(unknown)}\n"
-            "usage: driver_check.py [sf_dir] [--json OUT] [names...]"
-        )
+        sys.exit(f"unknown query name(s): {', '.join(unknown)}\n{USAGE}")
 
     spark = get_spark()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    oracles = entry_mod.oracle_sql()
-    queries = entry_mod.queries()
+    con = runner.oracle_db(sf_dir)
     failed = []
     report: dict[str, dict] = {}
     for name in names:
-        with pins.query_scope(name):
-            qdf = queries[name](spark, sf_dir)
-            cols = sorted(qdf.columns)
-            spark_rows = [tuple(row[c] for c in cols) for row in qdf.collect()]
-        if name not in oracles:
-            print(f"{name}: rows-only ({len(spark_rows)} rows)")
-            report[name] = {
-                "rows_match": None,
-                "schema_match": None,
-                "hash_match": None,
-                "spark_rows": len(spark_rows),
-                "oracle_rows": None,
-                "err": "no_oracle",
-            }
-            continue
-        ora = con.execute(oracles[name]).fetch_df()
-        ocols = sorted(ora.columns.tolist())
-        dtypes = {c: str(ora[c].dtype) for c in ocols}
-        duck_rows = [tuple(r) for r in ora[cols].itertuples(index=False)]
-        rows_ok = len(spark_rows) == len(duck_rows)
-        schema_ok = cols == ocols
-        hash_ok = rows_ok and schema_ok
-        if hash_ok:
-            sn, dn = norm(spark_rows), norm(duck_rows)
-            mism = [(a, b) for a, b in zip(sn, dn) if a != b]
-            hash_ok = not mism
-        report[name] = {
-            "rows_match": rows_ok,
-            "schema_match": schema_ok,
-            "hash_match": hash_ok,
-            "spark_rows": len(spark_rows),
-            "oracle_rows": len(duck_rows),
-            "err": None,
-        }
-        if hash_ok:
-            print(f"{name}: PASS rows={len(spark_rows)} dtypes={dtypes}")
-        else:
+        row, mism = runner.check(spark, sf_dir, name, con)
+        report[name] = row
+        negzero = row["negzero"] and any(row["negzero"].values())
+        if row["hash_match"] is False or negzero or row["dtype_hazards"]:
             failed.append(name)
-            print(
-                f"{name}: FAIL spark_rows={len(spark_rows)} "
-                f"oracle_rows={len(duck_rows)} cols {cols} vs {ocols}"
-            )
-            if schema_ok and rows_ok:
-                print("  first mismatches:", mism[:5])
+            print(f"{name}: FAIL {json.dumps(row, sort_keys=True)}")
+            if mism:
+                print("  first mismatches:", mism)
+        elif row["err"] == "no_oracle":
+            print(f"{name}: rows-only ({row['spark_rows']} rows)")
+        else:
+            print(f"{name}: PASS rows={row['spark_rows']}")
     if json_out:
         with open(json_out, "w") as f:
             json.dump(report, f, indent=1, sort_keys=True)

@@ -8,16 +8,14 @@ same command captures before-plans in a worktree pinned to an older
 commit and after-plans at HEAD.
 """
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
-from mobilityduck_spark import pins
 from mobilityduck_spark.session import get_spark
+from scripts import runner
 
 
 def main() -> None:
@@ -30,12 +28,9 @@ def main() -> None:
         if name not in qs:
             print(f"SKIP {name}: not registered here")
             continue
-        buf = io.StringIO()
-        with pins.query_scope(name), redirect_stdout(buf):
-            qs[name](spark, sf_dir).explain("formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(buf.getvalue())
+            f.write(runner.plan(spark, sf_dir, name) + "\n")
         print(f"wrote {path}")
 
 

@@ -3,15 +3,15 @@ as an artifact each round (VERDICT r9 item 1 — the driver's ~50-query
 window leaves most of the registry unsampled for rounds at a time;
 this closes the gap with a repo-side 215/215 record).
 
-Runs, in order:
-  1. scripts/driver_check.py over EVERY registered query at sf0.01
-     with --json, writing CORRECTNESS_full_r{N}.json (one driver-shaped
-     row per query; rows-only queries recorded as err="no_oracle").
-  2. scripts/negzero_scan.py at the same SF (the signed-zero class
-     must stay provably closed, not argued closed).
+Runs scripts/driver_check.py over EVERY registered query at sf0.01
+with --json, writing CORRECTNESS_full_r{N}.json: one driver-shaped row
+per query (rows-only queries recorded as err="no_oracle"), each with
+its negative-zero counts and oracle dtype hazards, so the signed-zero
+and dtype-widening classes stay provably closed in the same pass that
+runs each query once per engine.
 
-Exit status is nonzero if either stage fails, so this can gate a
-commit. Usage:
+Exit status is nonzero if any query fails, so this can gate a commit.
+Usage:
 
     python scripts/round_close.py <round_number> [sf_dir]
 """
@@ -31,7 +31,7 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     artifact = os.path.join(REPO, f"CORRECTNESS_full_r{rnd:02d}.json")
 
-    rc1 = subprocess.call(
+    rc = subprocess.call(
         [
             sys.executable,
             os.path.join(HERE, "driver_check.py"),
@@ -40,12 +40,8 @@ def main() -> None:
             artifact,
         ]
     )
-    print(f"driver_check: exit {rc1} ({artifact})")
-    rc2 = subprocess.call(
-        [sys.executable, os.path.join(HERE, "negzero_scan.py"), sf_dir]
-    )
-    print(f"negzero_scan: exit {rc2}")
-    if rc1 or rc2:
+    print(f"driver_check: exit {rc} ({artifact})")
+    if rc:
         sys.exit(1)
     _stamp_bench_hash(rnd)
     print("round-close gate: ALL GREEN")

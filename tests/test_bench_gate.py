@@ -1,5 +1,6 @@
 """bench.py's record promotion gate (pure function, no Spark): a run
-replaces only a committed record at its own core count."""
+replaces only a committed record at its own core count; and the git
+sha the records carry."""
 
 import bench
 
@@ -65,3 +66,7 @@ def test_force_promotes_into_full_at_any_core_count():
     assert bench.promotion(_run(cpus=8, sf=0.01), committed, force=True)[0] == (
         "BENCH_full.json"
     )
+
+
+def test_git_sha_is_none_outside_a_git_checkout(tmp_path):
+    assert bench.git_sha(str(tmp_path)) is None

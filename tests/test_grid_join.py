@@ -9,6 +9,7 @@ from mobilityduck_spark import berlinmod as Q
 from mobilityduck_spark.functions import box as B
 from mobilityduck_spark.operators.range_join import grid_pair_candidates
 from mobilityduck_spark.operators.tpoint_pairs import e_dwithin
+from scripts import runner
 
 SF_DIR = "/root/testdata/sf0.001"
 D = 10.0
@@ -155,21 +156,11 @@ def test_asof_join_null_tiebreak_loses_ties(spark):
 
 def test_grid_branch_matches_oracle(spark, monkeypatch):
     """bm_q6 and bm_q10 on the grid-candidate branch (forced by a zero
-    threshold) equal their DuckDB oracles, normalized as driver_check."""
-    import duckdb
-
-    import __spark_entry__ as entry_mod
-    from scripts.driver_check import norm
-
+    threshold) equal their DuckDB oracles under scripts/runner.check."""
     monkeypatch.setattr(Q, "_GRID_PAIR_THRESHOLD", 0)
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet'")
-    for name in ("bm_q6", "bm_q10"):
-        qdf = entry_mod.queries()[name](spark, SF_DIR)
-        cols = sorted(qdf.columns)
-        got = [tuple(r[c] for c in cols) for r in qdf.collect()]
-        ora = con.execute(entry_mod.oracle_sql()[name]).fetch_df()
-        assert sorted(ora.columns.tolist()) == cols, name
-        want = [tuple(r) for r in ora[cols].itertuples(index=False)]
-        assert got, name
-        assert norm(got) == norm(want), name
+    with runner.oracle_db(SF_DIR) as con:
+        for name in ("bm_q6", "bm_q10"):
+            row, mism = runner.check(spark, SF_DIR, name, con)
+            assert row["err"] is None, row["err"]
+            assert row["spark_rows"], name
+            assert row["hash_match"], (name, row, mism)

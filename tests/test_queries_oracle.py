@@ -1,97 +1,38 @@
 """Replicates the driver's correctness gate locally at sf0.001: run each
-registered Spark query AND its DuckDB oracle, compare row counts and
-order-insensitive values."""
+registered Spark query AND its DuckDB oracle through scripts/runner.check
+and require row counts, columns and order-insensitive values to match,
+with no negative zero and no oracle dtype hazard."""
 
-import math
-
-import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from scripts import runner
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
 
 
 @pytest.fixture(scope="module")
 def ddb():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = runner.oracle_db(SF_DIR)
     yield con
     con.close()
 
 
-def normalize(rows, cols):
-    out = []
-    for r in rows:
-        vals = []
-        for c in cols:
-            v = r[c] if not isinstance(r, tuple) else r[cols.index(c)]
-            if isinstance(v, float):
-                v = round(v, 6)
-            vals.append(v)
-        out.append(tuple(vals))
-    return sorted(out, key=lambda t: tuple(str(x) for x in t))
-
-
 @pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql().keys()))
 def test_query_matches_oracle(spark, ddb, name):
-    qdf = entry_mod.queries()[name](spark, SF_DIR)
-    cols = sorted(qdf.columns)
-    spark_rows = [tuple(row[c] for c in cols) for row in qdf.collect()]
-
-    ora = ddb.execute(entry_mod.oracle_sql()[name]).fetch_df()
-    assert sorted(cols) == sorted(ora.columns.tolist()), (
-        f"column mismatch: spark={cols} duckdb={sorted(ora.columns.tolist())}"
-    )
+    row, mism = runner.check(spark, SF_DIR, name, ddb)
+    assert row["err"] is None, row["err"]
+    assert row["schema_match"], f"{name}: column mismatch"
     # dtype-hazard gate (cost a green driver row in rounds 2, 3 AND 4):
     # DuckDB SUM(int) returns HUGEINT -> pandas object; NULL-bearing int
     # columns fetch as float64 — either flips the driver's value hash on
     # value-identical output. Oracles must CAST so dtypes line up.
-    spark_types = {f.name: f.dataType.simpleString() for f in qdf.schema.fields}
-    for c in ora.columns:
-        st, pd_ = spark_types[c], str(ora[c].dtype)
-        if st.startswith(("array", "struct", "map", "binary")):
-            continue
-        assert not (pd_ == "object" and st != "string"), (
-            f"{name}.{c}: spark {st} vs oracle pandas object (HUGEINT? "
-            f"add CAST in the oracle SQL)"
-        )
-        assert not (
-            st in ("long", "int", "short") and pd_.startswith("float")
-        ), f"{name}.{c}: spark {st} vs oracle {pd_} (NULL-widen/type drift)"
-    # itertuples preserves per-column dtypes (iterrows would upcast whole
-    # rows to float64 and break int/float comparison alignment)
-    duck_rows = [tuple(r) for r in ora[cols].itertuples(index=False)]
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count {len(spark_rows)} != {len(duck_rows)}"
+    assert not row["dtype_hazards"], f"{name}: {row['dtype_hazards']}"
+    assert row["rows_match"], (
+        f"{name}: row count {row['spark_rows']} != {row['oracle_rows']}"
     )
-
-    def norm(rows):
-        out = []
-        for r in rows:
-            vals = []
-            for v in r:
-                if hasattr(v, "item"):  # numpy scalar → python
-                    v = v.item()
-                if isinstance(v, float):
-                    assert not math.isnan(v)
-                    v = round(v, 6)
-                    if v == int(v):
-                        v = int(v)
-                vals.append(v)
-            out.append(tuple(vals))
-        return sorted(out, key=lambda t: tuple(str(x) for x in t))
-
-    sn, dn = norm(spark_rows), norm(duck_rows)
-    mismatches = [(a, b) for a, b in zip(sn, dn) if a != b]
-    assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
+    assert row["hash_match"], f"{name}: first mismatches {mism}"
+    assert row["negzero"] == {"spark": 0, "oracle": 0}, name
 
 
 def test_entry_smoke(spark):
