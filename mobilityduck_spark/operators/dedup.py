@@ -59,9 +59,11 @@ def _spread(df: DataFrame) -> DataFrame:
     compute-heavy per-row stage. A small single-row-group parquet file
     arrives as ONE partition and serializes the whole stage onto one
     core; at corpus scale inputs already have >> cores partitions and
-    this is a no-op (no shuffle inserted)."""
+    this is a no-op (no shuffle inserted). The count is the physical
+    plan's, read JVM-side (`df.rdd` would also wrap that RDD in a
+    Python one). Callers pass scans, so planning runs no stage."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if df._jdf.queryExecution().toRdd().getNumPartitions() < target:
         return df.repartition(target)
     return df
 
@@ -118,7 +120,9 @@ def _banded_signatures(
     """Shared head of the MinHash pipelines: tokens → shingle hashes
     (`shingles(tokens)`, JVM-side) → numpy-vectorized minhash signature
     → one (id, sig, band, key) row per band, key = `band_hash(lanes)`
-    over the band's num_hashes/bands signature lanes. Select barriers
+    over the band's num_hashes/bands signature lanes: SQL text in, SQL
+    text out, so each band key is one parsed expression, not several
+    py4j round trips per lane. Select barriers
     keep each expensive column evaluated once (the interpreted fold
     costs ~8s at sf0.1, the numpy kernel <1s)."""
     rows = num_hashes // bands
@@ -132,7 +136,7 @@ def _banded_signatures(
         sig_udf(F.col("sh"), F.lit(num_hashes)).alias("sig"),
     )
     return LSH.band_rows(sig, [
-        band_hash([F.element_at(F.col("sig"), b * rows + r + 1) for r in range(rows)])
+        F.expr(band_hash([f"element_at(sig, {b * rows + r + 1})" for r in range(rows)]))
         for b in range(bands)
     ])
 
@@ -155,7 +159,7 @@ def minhash_band_index(
     return _banded_signatures(
         docs, id_col, text_col, num_hashes, bands,
         lambda toks: TX.rolling_hash_shingles_from_tokens(toks, k=shingle_k),
-        lambda lanes: F.xxhash64(*lanes),
+        lambda lanes: f"xxhash64({', '.join(lanes)})",
     )
 
 
@@ -839,6 +843,11 @@ def md5_hash60(s) -> Column:
     return F.conv(F.substring(F.md5(_c(s)), 1, 15), 16, 10).cast("long")
 
 
+def _md5_hash60_sql(s: str) -> str:
+    """md5_hash60 of SQL expression `s`, as SQL text (the same tree)."""
+    return f"CAST(conv(substring(md5({s}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def md5_shingles_from_tokens(toks, k: int = 3) -> Column:
     """k-word shingle hashes (60-bit md5) from a MATERIALIZED token
     array — the engine-portable twin of rolling_hash_shingles_from_tokens
@@ -870,8 +879,9 @@ def minhash_lsh_pairs_md5(
         docs.filter(F.col(text_col).isNotNull()),
         id_col, text_col, num_hashes, bands,
         lambda toks: md5_shingles_from_tokens(toks, k=shingle_k),
-        lambda lanes: md5_hash60(
-            F.concat_ws(",", *[c.cast("string") for c in lanes])
+        lambda lanes: _md5_hash60_sql(
+            "concat_ws(',', "
+            + ", ".join(f"CAST({c} AS STRING)" for c in lanes) + ")"
         ),
     )
     matches = LSH.matched_lanes(F.col("sig"), F.col("sig_b"))

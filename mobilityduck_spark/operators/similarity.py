@@ -142,6 +142,9 @@ def lsh_signature(vec, dim: int, n_planes: int = 16, seed: int = 42) -> Column:
     arithmetic is byte-for-byte `dot`'s (cast-to-double products,
     left-fold sum, proj > 0 sign), so signatures are unchanged."""
     planes = _planes(dim, n_planes, seed)
+    if not np.isfinite(planes).all():
+        # `nanD`/`infD` would parse as unresolved columns, far from here
+        raise ValueError(f"non-finite LSH plane coefficient (seed {seed})")
     rows = ", ".join(
         "array(" + ", ".join(f"{x!r}D" for x in p) + ")" for p in planes
     )
@@ -1979,20 +1982,17 @@ def rademacher_near_dups(
         "(acc, v) -> acc + v))"
     )
     e = e.withColumn("_projs", projs)
-
-    def _proj(p: int) -> Column:
-        return F.element_at(F.col("_projs"), p + 1)
-
-    band_keys = []
-    for b in range(bands):
-        key = F.lit(0).cast("long")
-        for j in range(width):
-            p = b * width + j
-            bit = F.when(_proj(p) > 0, F.lit(1).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            key = key.bitwiseOR(F.shiftleft(bit, j))
-        band_keys.append(key)
+    # each band key is one parsed expression too (as Column calls it
+    # took about 160 py4j round trips): bit j of band b is projection
+    # b*width+j > 0, OR-folded from 0L
+    band_keys = [
+        F.expr("CAST(0 AS BIGINT)" + "".join(
+            f" | shiftleft(CASE WHEN element_at(_projs, {b * width + j + 1}) > 0"
+            f" THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END, {j})"
+            for j in range(width)
+        ))
+        for b in range(bands)
+    ]
     keyed = LSH.band_rows(e, band_keys).drop("_projs")
     cos = _int_cos(int_dot("qv", "qv_b"), F.col("nv"), F.col("nv_b"))
     return LSH.band_pairs(

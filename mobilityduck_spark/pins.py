@@ -11,8 +11,9 @@ and memoize through this module, which holds two scopes:
   ``query_scope``.
 - ``session``: pins and memoized values that live as long as the Spark
   application: the BerlinMOD trip intermediates, the assembled temporal
-  tables, the vehicle dim, memoized counts, and the
-  IVF/PQ/SQ8 fits with their index tables. They are released at
+  tables, the vehicle dim, memoized counts, the parquet file schemas
+  ``sources.tables.load`` reads with, and the IVF/PQ/SQ8 fits with
+  their index tables. They are released at
   teardown, ``release(session=True)``. ``memo`` keys start with
   ``session_key(spark)``, so a value built in one application is never
   handed to another.

@@ -2,7 +2,8 @@
 
 Local-mode defaults match the test/bench environment (local[N], single JVM)
 but every setting is cluster-safe: AQE on (runtime re-plan + skew join),
-Arrow on (pandas-UDF batches), UTC session timezone (oracle comparability).
+Arrow on (pandas-UDF batches), UTC session timezone (oracle comparability),
+Python call-site capture off (query-build py4j cost).
 """
 
 from __future__ import annotations
@@ -36,6 +37,12 @@ def get_spark(
         # vectorized parquet reader rejects; read as long and convert in
         # sources.tables.load (truncation to micros matches DuckDB)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # no Python call-site capture: PySpark otherwise wraps every
+        # functions.* call and DataFrame method in ~7 py4j round trips
+        # to record file:line for error messages (errors keep their
+        # class and message). A builder setting, because PySpark reads
+        # it once per process, at the first wrapped call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -15,30 +15,14 @@ to split sequences and keep rows bounded, or pre-bucket by (user, day).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import temporal as TT
 from ..pins import memo, pin, release, session_key
-
-_NS_TS_COLS: dict[str, list[str]] = {}
-
-
-def _ns_timestamp_cols(sf_dir: str, name: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — read as LONG under
-    spark.sql.legacy.parquet.nanosAsLong and converted to micros."""
-    key = f"{sf_dir}/{name}"
-    if key not in _NS_TS_COLS:
-        try:
-            import pyarrow.parquet as pq
-
-            schema = pq.read_schema(f"{sf_dir}/{name}.parquet")
-            _NS_TS_COLS[key] = [
-                f.name for f in schema if str(f.type) == "timestamp[ns]"
-            ]
-        except Exception:
-            _NS_TS_COLS[key] = []
-    return _NS_TS_COLS[key]
 
 TABLES = (
     "region",
@@ -53,15 +37,54 @@ TABLES = (
     "embeddings",
 )
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _ns_timestamp_cols(path: str) -> list[str]:
+    """Columns stored as parquet TIMESTAMP(NANOS) — read as LONG under
+    spark.sql.legacy.parquet.nanosAsLong and converted to micros."""
+    try:
+        import pyarrow.parquet as pq
+
+        schema = pq.read_schema(path)
+    except (ImportError, OSError, ValueError):  # no pyarrow, a directory
+        return []
+    return [f.name for f in schema if str(f.type) == "timestamp[ns]"]
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> tuple[T.StructType, list[str]]:
+    """(Spark schema, TIMESTAMP(NANOS) columns) of the parquet file at
+    `path`, memoized per session and file version (mtime, size). Schema
+    inference is a Spark job (a parallel footer merge, ~0.1 s warm);
+    reading with the memoized schema plans the same scan without it."""
+
+    def build():
+        ns_cols = _ns_timestamp_cols(path)
+        if ns_cols:
+            spark.conf.set(_NANOS_AS_LONG, "true")
+        return spark.read.parquet(path).schema, ns_cols
+
+    try:
+        st = os.stat(path)
+        key = (session_key(spark), "parquet_schema", path, st.st_mtime_ns, st.st_size)
+    except OSError:  # not a local path: infer on every read
+        key = None
+    return memo(key, build)
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if _ns_timestamp_cols(sf_dir, name):
+    """Table `name` of `sf_dir` as a fresh relation (its own attribute
+    ids, so a query may load a table twice and join it with itself),
+    read with the memoized file schema."""
+    path = f"{sf_dir}/{name}.parquet"
+    schema, ns_cols = _parquet_schema(spark, path)
+    if ns_cols:
         # the caller's session may not have this set (e.g. the driver's
         # own session); it is runtime-settable, so set it defensively —
         # without it the parquet reader rejects TIMESTAMP(NANOS) columns
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for c in _ns_timestamp_cols(sf_dir, name):
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    df = spark.read.schema(schema).parquet(path)
+    for c in ns_cols:
         # floor-divide ns → µs (positive epochs: same truncation DuckDB
         # applies when reading TIMESTAMP_NS)
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
@@ -69,11 +92,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # TIMESTAMP_NTZ on Spark ≥3.4; the engine (unix_micros, interval
     # arithmetic, span types) is built on TIMESTAMP. Under the UTC session
     # timezone the cast is value-identical to DuckDB's naive-UTC read.
-    from pyspark.sql import types as _T
-
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, _T.TimestampNTZType)]
-    for c in ntz:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
+    for f in schema.fields:
+        if isinstance(f.dataType, T.TimestampNTZType):
+            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
     return df
 
 
@@ -190,12 +211,10 @@ def load_csv(
     df = reader.csv(path, schema=schema) if schema is not None else (
         reader.option("inferSchema", "true").csv(path)
     )
-    from pyspark.sql import types as _T
-
     for c in ts_cols:
-        if isinstance(df.schema[c].dataType, _T.StringType):
+        if isinstance(df.schema[c].dataType, T.StringType):
             df = df.withColumn(c, F.to_timestamp(c))
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, _T.TimestampNTZType)]
+    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, T.TimestampNTZType)]
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
@@ -273,12 +292,10 @@ def load_jsonl(
     `ts_cols` that arrived as strings are parsed to TIMESTAMP."""
     reader = spark.read.options(**options)
     df = reader.json(path, schema=schema) if schema is not None else reader.json(path)
-    from pyspark.sql import types as _T
-
     for c in ts_cols:
-        if isinstance(df.schema[c].dataType, _T.StringType):
+        if isinstance(df.schema[c].dataType, T.StringType):
             df = df.withColumn(c, F.to_timestamp(c))
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, _T.TimestampNTZType)]
+    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, T.TimestampNTZType)]
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df

@@ -198,12 +198,31 @@ def test_memo_builds_once_per_key_until_session_release():
 
 
 _REGISTRY_NAME = re.compile(r"_PERSISTED\w*|_\w*_CACHE|_cc_cache")
+# registries of what the package defines, not caches of what it built
+_REGISTRIES = {("queries.py", "_QUERIES"), ("queries.py", "_ORACLES")}
+
+
+def _empty_container(node) -> bool:
+    """`{}`, `[]`, `set()`, `dict()`, `defaultdict(...)`: the value a
+    module-level cache starts from."""
+    if isinstance(node, ast.Dict):
+        return not node.keys
+    if isinstance(node, (ast.List, ast.Set)):
+        return not node.elts
+    if isinstance(node, ast.Call):
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+        return name in ("defaultdict", "OrderedDict") or (
+            name in ("dict", "list", "set") and not node.args and not node.keywords
+        )
+    return False
 
 
 def test_pins_holds_the_only_registry():
     """Outside pins.py no module persists a frame itself, keeps a
-    module-level pin list or memo dict, or defines its own release
-    function. (localCheckpoint is not a pin.)"""
+    module-level pin list or memo dict (any name bound to an empty
+    container), or defines its own release function. (localCheckpoint
+    is not a pin.)"""
     found = []
     for path in sorted(PKG.rglob("*.py")):
         if path.name == "pins.py":
@@ -217,8 +236,16 @@ def test_pins_holds_the_only_registry():
                 else []
             )
             for t in targets:
-                if isinstance(t, ast.Name) and _REGISTRY_NAME.fullmatch(t.id):
+                if not isinstance(t, ast.Name):
+                    continue
+                if _REGISTRY_NAME.fullmatch(t.id):
                     found.append(f"{rel}:{node.lineno} registry {t.id}")
+                elif (
+                    node.value is not None
+                    and _empty_container(node.value)
+                    and (path.name, t.id) not in _REGISTRIES
+                ):
+                    found.append(f"{rel}:{node.lineno} module-level cache {t.id}")
         for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Call)

@@ -106,6 +106,27 @@ def test_lsh_band_join_is_pinned_equijoin(spark, monkeypatch, name):
     assert len(keyed_scans) == 2, plans[1]
 
 
+@pytest.mark.parametrize(
+    "name", ["embed_near_dups", "doc_minhash_pairs", "events_asof_value"]
+)
+def test_warm_build_submits_no_job(spark, name):
+    """Building a query a second time in a session runs no Spark job:
+    sources.tables.load reads each table's schema once (inference is a
+    job per read), and these operators fire no eager action."""
+    sc = spark.sparkContext
+    for rep in range(2):
+        group = f"warm_build_{name}_{rep}"
+        sc.setJobGroup(group, name)
+        try:
+            with pins.query_scope(name):
+                Q.queries()[name](spark, SF)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    # job start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_bucketed_overlap_join_no_cartesian(spark):
     from mobilityduck_spark.operators.range_join import bucketed_overlap_join
 

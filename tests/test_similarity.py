@@ -1,5 +1,6 @@
 """Similarity-search operators: exact top-k vs LSH and IVF recall."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from mobilityduck_spark import pins
@@ -335,3 +336,13 @@ def test_semantic_dedup_twolevel_planted_copies(spark):
         rep == pid - 1_000_000 and not keep
         for pid, (rep, keep) in planted.items()
     )
+
+
+def test_lsh_signature_rejects_non_finite_planes(monkeypatch):
+    """A NaN plane coefficient would render as `nanD`, which Spark
+    parses as a column name and reports far from its cause."""
+    monkeypatch.setattr(
+        SIM, "_planes", lambda dim, n, seed=42: [[float("nan")] * dim] * n
+    )
+    with pytest.raises(ValueError, match="non-finite"):
+        SIM.lsh_signature(F.col("v"), dim=4, n_planes=2)

@@ -1,14 +1,65 @@
-"""CSV source + table sink round-trips (sources/tables.py): the
+"""Parquet loads, CSV source and table sink round-trips
+(sources/tables.py). `load` reads each file's schema once; the memo
+must follow a rewritten file and still hand out fresh relations. The
 reference ingests via COPY FROM CSV (benchmark/BerlinMOD/sql/load);
 the temporal assembly must produce identical results from either
 format."""
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mobilityduck_spark.functions import temporal as TT
 from mobilityduck_spark.sources import tables as SRC
 
 SF = "/root/testdata/sf0.001"
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def test_load_rereads_a_rewritten_file(spark, tmp_path):
+    """The schema memo is keyed by the file's version: a file rewritten
+    at the same path with another schema loads with the new one."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert SRC.load(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    df = SRC.load(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_two_loads_equi_join_on_their_own_columns(spark):
+    """Each load is a fresh relation: joining two loads of one table on
+    user_id is the real equi-join, not a trivially true self-join."""
+    a = SRC.load(spark, SF, "events")
+    b = SRC.load(spark, SF, "events")
+    per_user = pq.read_table(f"{SF}/events.parquet", columns=["user_id"])[
+        "user_id"
+    ].value_counts()
+    expected = sum(c["counts"].as_py() ** 2 for c in per_user)
+    assert expected < a.count() ** 2
+    assert a.join(b, a["user_id"] == b["user_id"]).count() == expected
+
+
+def test_nanos_timestamps_load_as_micros_without_session_setting(spark, tmp_path):
+    """TIMESTAMP(NANOS) columns read as µs TIMESTAMP even in a session
+    that does not set nanosAsLong, on the cold and the memoized load."""
+    ns = [1_704_067_200_123_456_789, 1_704_153_600_000_000_999]
+    pq.write_table(
+        pa.table({"ts": pa.array(ns, pa.timestamp("ns")), "v": [1, 2]}),
+        str(tmp_path / "ns.parquet"),
+    )
+    prev = spark.conf.get(NANOS_AS_LONG)
+    try:
+        for _ in range(2):
+            spark.conf.unset(NANOS_AS_LONG)
+            df = SRC.load(spark, str(tmp_path), "ns")
+            assert df.schema["ts"].dataType == T.TimestampType()
+            got = df.orderBy("v").select(F.unix_micros("ts")).collect()
+            assert [r[0] for r in got] == [x // 1000 for x in ns]
+    finally:
+        spark.conf.set(NANOS_AS_LONG, prev)
 
 
 def test_csv_roundtrip_matches_parquet(spark, tmp_path):
