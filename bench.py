@@ -185,7 +185,7 @@ def main() -> None:
     runner.time_query(spark, sf_dir, "attime_duration", 1)
     # also warm the embedding/cosine expression path (same rationale)
     runner.time_query(spark, sf_dir, "embed_topk", 1)
-    # build the shared persisted intermediates (trips / flat trips /
+    # build the shared persisted intermediates (trips /
     # point hits / segments / assembled temporals) HERE so the one-time
     # cost is charged to setup_sec, not to whichever query touches a
     # cache first (BENCH_r3's bm_q13 / bm_q16 attribution swings)
@@ -200,7 +200,7 @@ def main() -> None:
     setup_sec = round(time.perf_counter() - t_setup, 3)
 
     # best-of-N per query (default 2): the first rep of a query that
-    # builds a shared persisted intermediate (_flat_trips, _point_hits)
+    # builds a shared persisted intermediate (_trips, _point_hits)
     # absorbs that one-time cost into whichever query touches it first —
     # the min removes the attribution artifact and matches how a warm
     # cluster runs; set SPARK_GRAFT_BENCH_REPS=1 for single-shot timings

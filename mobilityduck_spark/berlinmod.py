@@ -39,15 +39,14 @@ from .sources import berlinmod as BM
 
 # ---------------------------------------------------------------- helpers
 def warm_caches(spark: SparkSession, sf_dir: str) -> float:
-    """Materialize the shared persisted intermediates (trips, flat trips,
-    point hits) and return the wall seconds spent. Benchmarks call this
+    """Materialize the shared persisted intermediates (trips, point hits,
+    segments) and return the wall seconds spent. Benchmarks call this
     so the one-time cache builds are charged to an explicit setup phase
     instead of whichever query happens to touch a cache first."""
     import time as _time
 
     t0 = _time.perf_counter()
     _trips(spark, sf_dir).count()
-    _flat_trips(spark, sf_dir).count()
     _point_hits(spark, sf_dir).count()
     _segments(spark, sf_dir).count()
     _l1_segments(spark, sf_dir).count()
@@ -84,25 +83,19 @@ def _l1_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trips assembly is shared by every bm query — cache per session."""
-    return memo(
-        (session_key(spark), sf_dir, "trips"),
-        lambda: pin(BM.trips(spark, sf_dir), "session"),
-    )
+    """One row per vehicle: the `trip` struct plus its (t, x, y) flat
+    arrays and stbox `bb` — the pairwise-UDF input (nested structs cost
+    ~100× more to cross Arrow).
 
-
-def _flat_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trips with (t, x, y) flat arrays + stbox — the pairwise-UDF input
-    (nested structs cost ~100× more to cross Arrow).
-
-    Persisted per session: both sides of every pairwise self-join read
-    this; without materialization a BroadcastNestedLoopJoin re-derives
-    the subtree on an untuned session (measured 61s vs 1s at sf0.01)."""
+    Shared by every bm query and persisted once per session: both sides
+    of every pairwise self-join read this; without materialization a
+    BroadcastNestedLoopJoin re-derives the subtree on an untuned session
+    (measured 61s vs 1s at sf0.01)."""
     from .operators.tpoint_pairs import flat_cols
 
     def build() -> DataFrame:
         ts_, xs, ys, lens = flat_cols(F.col("trip"))
-        flat = _trips(spark, sf_dir).select(
+        trips = BM.trips(spark, sf_dir).select(
             "vehicle_id",
             "trip",
             ts_.alias("t_arr"),
@@ -111,9 +104,9 @@ def _flat_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
             lens.alias("len_arr"),
             B.stbox_of_tpoint(F.col("trip")).alias("bb"),
         )
-        return pin(flat, "session")
+        return pin(trips, "session")
 
-    return memo((session_key(spark), sf_dir, "flat_trips"), build)
+    return memo((session_key(spark), sf_dir, "trips"), build)
 
 
 def _segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -539,7 +532,7 @@ def bm_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     point-point fallback arm is not needed)."""
     from .operators.tpoint_pairs import min_traj_distance
 
-    ft = _flat_trips(spark, sf_dir)
+    ft = _trips(spark, sf_dir)
     l1 = BM.licences1(spark, sf_dir)
     l2 = BM.licences2(spark, sf_dir)
     t1 = ft.join(F.broadcast(l1), "vehicle_id").select(
@@ -583,7 +576,7 @@ def _edwithin_pairs(
     self_pairs: bool,
 ) -> DataFrame:
     """(vid1, vid2) pairs — vid1 a `probes` row, vid2 a `fleet` row, both
-    `_flat_trips`-shaped — whose trajectories ever come within d
+    `_trips`-shaped — whose trajectories ever come within d
     (eDwithin). `self_pairs` (probes == fleet) keeps vid1 < vid2 only;
     otherwise a row is never paired with its own vid. `n_probes` bounds
     the probe rows (a memoized dim count) and picks the plan.
@@ -807,7 +800,7 @@ def bm_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: `_edwithin_pairs` over the truck fleet against itself (self
     pairs), then both licences."""
     v = BM.vehicles(spark, sf_dir).filter(F.col("vehicle_type") == "truck")
-    t = _flat_trips(spark, sf_dir).join(F.broadcast(v), "vehicle_id")
+    t = _trips(spark, sf_dir).join(F.broadcast(v), "vehicle_id")
     # plan probe on the DIM side: each vehicle has ≤1 trips row, so
     # |v| bounds |t| — a memoized count on the tiny vehicles parquet
     # instead of a scan over the cached trip arrays (~0.9 s at sf0.1)
@@ -1004,7 +997,7 @@ def bm_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q10: licences1 vehicles vs everyone: pairs that ever came within
     3 units. Plan: `_edwithin_pairs` of the licences1 trips against
     the whole fleet, then licence1."""
-    ft = _flat_trips(spark, sf_dir)
+    ft = _trips(spark, sf_dir)
     l1 = BM.licences1(spark, sf_dir)
     # plan probe on the licences dim (≤1 trips row per vehicle bounds
     # the probe rows) — memoized; avoids scanning the cached trip arrays
@@ -1815,8 +1808,8 @@ def bm_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     clipped trips never meet (aDisjoint)."""
     from .operators.tpoint_pairs import a_disjoint, flat_cols
 
-    # persisted per-trip bbox (bb) from _flat_trips feeds the prefilter
-    trips = _flat_trips(spark, sf_dir).select("vehicle_id", "trip", "bb")
+    # persisted per-trip bbox (bb) from _trips feeds the prefilter
+    trips = _trips(spark, sf_dir).select("vehicle_id", "trip", "bb")
     l1 = BM.licences1(spark, sf_dir)
     l2 = BM.licences2(spark, sf_dir)
     # deterministic 3×3 probe subset (filter, not limit — an order-free

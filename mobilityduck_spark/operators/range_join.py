@@ -191,7 +191,7 @@ def grid_pair_candidates(
     within distance d — the scalable large×large prelude to an exact
     pairwise kernel (eDwithin / minDistance). Each side carries the flat
     trajectory columns t_arr, x_arr, y_arr, len_arr (`tpoint_pairs.
-    flat_cols`, as in berlinmod's flat trips). Both sides shuffle on
+    flat_cols`, as in berlinmod's `_trips`). Both sides shuffle on
     (tb, cx, cy) grid keys (plain hash-partitioned equi-join, no
     broadcast, no cartesian); the candidate id-pair set is DISTINCTed
     before the caller re-joins payloads, so the expensive arrays cross

@@ -1,13 +1,30 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute_force_topk: exact cosine top-k. The dot product is a zip_with/
-  aggregate expression (JVM-side); queries are broadcast; per-partition
-  partial top-k via window row_number. The baseline.
-- lsh_topk: random-hyperplane LSH. Signature = sign bits of projections
-  onto R fixed hyperplanes (deterministic seed, broadcast literal
-  planes); candidates share a signature prefix bucket; exact re-rank
-  inside buckets. The scale path: no all-pairs shuffle — candidates are
-  co-partitioned by bucket id.
+Every top-k path here is a scoring step over one shared core; the
+host engine does the scanning, joining and ranking:
+
+- `_topk`: the per-query top-k window (row_number over the query,
+  ordered by a score in either direction, then by id). Every exact,
+  LSH, SQ8, PQ, IVF, IVF-PQ, negative-mining, binary and seeded-IVF
+  path ends in it, and the IVF probe router is one of its callers.
+- `_route`: the broadcast queries x centroids L2 window that sends each
+  query to its `n_probe` nearest cells (ivf_search, ivfpq_topk,
+  ivfpq_residual_topk).
+- `_train_matrix` + `_lloyd_fit`: the sorted, capped training collect
+  and the one driver-side numpy Lloyd k-means (empty cells reseed on
+  distinct farthest points) behind build_ivf_index,
+  build_twolevel_cells and pq_train; `_sq_dists` is the one squared-L2
+  kernel those fits and their Arrow assignment passes share.
+- `_dot_table_udf`: the per-query ADC dot tables (codebook_s @ q_s)
+  that the IVF-PQ probe side carries into the codes join.
+
+Scores differ per path (cosine, SQ8/PQ reconstructions, Hamming,
+inner product, integer cosine), the ranking and routing do not. The
+integer twins at the bottom (seeded_ivf_topk, rademacher_near_dups)
+keep SQL-reproducible fits so a DuckDB oracle can hash-check them.
+Beside the top-k paths: near-duplicate pairs (LSH bands on
+operators/lsh.py, SemDeDup within k-means cells) and exact embedding
+statistics (label centroids, covariance, PCA).
 """
 
 from __future__ import annotations
@@ -18,29 +35,139 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import lsh as LSH
+from .dedup import _spread
 from ..functions.span import _c
 from ..pins import memo, pin
+
+
+_TRAIN_CAP = 100_000  # rows an index fit collects, at any corpus size
+
+
+def _fsum(arr: Column) -> Column:
+    """Left-fold double sum of an array column."""
+    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
 
 
 def dot(a, b) -> Column:
     # cast each element to double BEFORE multiplying: float32 inputs would
     # otherwise round products to float32 (and diverge from any
     # double-precision oracle)
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    return _fsum(
+        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double"))
     )
 
 
 def norm(a) -> Column:
     return F.sqrt(
-        F.aggregate(
-            F.transform(_c(a), lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        _fsum(F.transform(_c(a), lambda x: x.cast("double") * x.cast("double")))
     )
+
+
+def _topk(
+    df: DataFrame, part: str, score, k: int, id_col: str,
+    desc: bool = True, rank_col: str = "rank",
+) -> DataFrame:
+    """Rows of `df` ranked 1..k within each `part` group: row_number
+    ordered by `score` (a column name or expression; descending unless
+    `desc=False`), ties broken on `id_col` ascending."""
+    s = _c(score)
+    w = Window.partitionBy(part).orderBy(
+        s.desc() if desc else s.asc(), F.col(id_col).asc()
+    )
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
+
+
+def _route(
+    queries: DataFrame, centroids: DataFrame, n_probe: int,
+    query_id_col: str, query_vec_col: str,
+) -> DataFrame:
+    """Each query joined to its `n_probe` nearest (cell, centroid) rows
+    by exact squared L2 (ties on cell id): a broadcast of the small
+    centroid table, then the per-query window."""
+    l2 = _fsum(F.zip_with(
+        F.col(query_vec_col), F.col("centroid"),
+        lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
+    ))
+    return _topk(
+        queries.crossJoin(F.broadcast(centroids)), query_id_col, l2,
+        n_probe, "cell", desc=False, rank_col="_r",
+    )
+
+
+def _sq_dists(x: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """(len(x), len(c)) squared L2 distances via the dot-product
+    expansion."""
+    return (x * x).sum(1)[:, None] - 2.0 * x @ c.T + (c * c).sum(1)
+
+
+def _train_matrix(emb: DataFrame, id_col: str, vec_col: str) -> np.ndarray:
+    """The first `_TRAIN_CAP` vectors by id as a float64 matrix: a
+    bounded, partitioning-independent training sample (at 100 TB a
+    quantizer is always fit on a sample, never the corpus)."""
+    rows = (
+        emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .sort("_id")
+        .limit(_TRAIN_CAP)
+        .collect()
+    )
+    x = np.asarray([r["_v"] for r in rows], dtype=np.float64)
+    if x.size == 0:
+        raise ValueError("empty embedding input: nothing to train on")
+    return x
+
+
+def _lloyd_fit(
+    x: np.ndarray, k: int, rng: np.random.RandomState, max_iter: int = 8
+) -> np.ndarray:
+    """Deterministic driver-side Lloyd k-means: min(k, len(x)) centroids
+    seeded by `rng`. Each cell that empties in an iteration is reseeded
+    on a DISTINCT point, farthest-first (a shared argmax would collapse
+    several empty cells onto one duplicate centroid for good)."""
+    k = min(k, len(x))
+    cent = x[rng.choice(len(x), size=k, replace=False)]
+    for _ in range(max_iter):
+        d2 = _sq_dists(x, cent)
+        lab = d2.argmin(1)
+        far, fi = None, 0
+        for j in range(k):
+            m = lab == j
+            if m.any():
+                cent[j] = x[m].mean(0)
+            else:
+                if far is None:  # sorted only in an iteration that needs it
+                    far = np.argsort(-d2.min(1))
+                cent[j] = x[far[fi]]
+                fi += 1
+    return cent
+
+
+def _dot_table_udf(cents: np.ndarray):
+    """Pandas UDF: query vector -> its ADC dot tables, one row of k
+    doubles dot(q_s, codebook_s[code]) per subspace s (m x k)."""
+    m, _, dsub = cents.shape
+    cb = cents.copy()
+
+    @F.pandas_udf("array<array<double>>")
+    def _dot_tables(qv: pd.Series) -> pd.Series:
+        out = []
+        for v in qv:
+            q = np.asarray(v, dtype=np.float64)
+            out.append([
+                (cb[s] @ q[s * dsub : (s + 1) * dsub]).tolist()
+                for s in range(m)
+            ])
+        return pd.Series(out)
+
+    return _dot_tables
+
+
+def _adc_sum(tables: Column) -> Column:
+    """Sum over subspaces of tables[s][codes[s]] (the ADC lookup)."""
+    return _fsum(F.zip_with(
+        F.col("codes"), tables, lambda c, t: F.element_at(t, c + 1)
+    ))
 
 
 def cosine(a, b) -> Column:
@@ -117,13 +244,7 @@ def brute_force_topk(
     )
     if exclude_self:
         scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, query_id_col, "cos", k, id_col)
 
 
 def _planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -138,9 +259,9 @@ def lsh_signature(vec, dim: int, n_planes: int = 16, seed: int = 42) -> Column:
     float exactly, and Spark's `...D` suffix parses to the identical
     double) and the projections ONE transform/aggregate tree — building
     n_planes per-plane dot trees from 64 F.lit() calls each cost ~1k
-    py4j round-trips per invocation (pure query-build overhead). The
-    arithmetic is byte-for-byte `dot`'s (cast-to-double products,
-    left-fold sum, proj > 0 sign), so signatures are unchanged."""
+    py4j round-trips per invocation (pure query-build overhead). Each
+    projection is `dot` of the vector with one plane row (cast-to-double
+    products, left-fold sum); bit i is proj_i > 0."""
     planes = _planes(dim, n_planes, seed)
     if not np.isfinite(planes).all():
         # `nanD`/`infD` would parse as unresolved columns, far from here
@@ -149,18 +270,7 @@ def lsh_signature(vec, dim: int, n_planes: int = 16, seed: int = 42) -> Column:
         "array(" + ", ".join(f"{x!r}D" for x in p) + ")" for p in planes
     )
     planes_lit = F.expr(f"array({rows})")
-    projs = F.transform(
-        planes_lit,
-        lambda p: F.aggregate(
-            F.zip_with(
-                _c(vec),
-                p,
-                lambda x, y: x.cast("double") * y.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
+    projs = F.transform(planes_lit, lambda p: dot(vec, p))
     # fold the sign bits in ONE pass that references `projs` exactly
     # once: higher-order functions are CodegenFallback, so Catalyst's
     # subexpression elimination does NOT apply — an OR-chain of
@@ -203,10 +313,7 @@ def lsh_topk(
         F.col(id_col),
         F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6).alias("cos"),
     ).filter(F.col(id_col) != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk(scored, query_id_col, "cos", k, id_col)
 
 
 def embedding_near_dup_pairs(
@@ -297,17 +404,14 @@ def build_ivf_index(
     vec_col: str = "embedding",
     seed: int = 42,
     max_iter: int = 8,
-    train_fraction: float = 1.0,
     scope: str = "call",
 ) -> tuple[DataFrame, DataFrame]:
-    """Build the IVF coarse-quantizer index ONCE: fit Lloyd's k-means
-    driver-side in numpy on a BOUNDED, deterministically-ordered train
-    sample (at 100 TB the quantizer is always fit on a sample — ~10⁶
-    rows — never the corpus; `train_cap` enforces the bound), then
-    assign every vector to its nearest cell in ONE Arrow pass (a
-    vectorized (batch×d)@(d×k) matmul pandas UDF with the k×d centroid
-    matrix in the closure — linear scan, no shuffle, no N×k row
-    blowup), and persist the (id, vec, cell) assignment table.
+    """Build the IVF coarse-quantizer index ONCE: `_lloyd_fit` on the
+    bounded training sample (`_train_matrix`), then assign every vector
+    to its nearest cell in ONE Arrow pass (a vectorized (batch×d)@(d×k)
+    matmul pandas UDF with the k×d centroid matrix in the closure —
+    linear scan, no shuffle, no N×k row blowup), and persist the
+    (id, vec, cell) assignment table.
 
     Returns (assignments, centroids): `assignments` is the
     cell-assignment DataFrame, pinned in `scope` (pass "session" when
@@ -320,39 +424,15 @@ def build_ivf_index(
     """
     from pyspark import StorageLevel
 
-    train_cap = 100_000
-    src = emb.sample(train_fraction, seed=seed) if train_fraction < 1.0 else emb
-    rows = (
-        src.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .sort("_id")  # deterministic fit regardless of partitioning
-        .limit(train_cap)
-        .collect()
-    )
-    x = np.asarray([r["_v"] for r in rows], dtype=np.float64)
-    if len(x) == 0:
-        raise ValueError("build_ivf_index: empty embedding input")
-    k = min(n_centroids, len(x))
-    rng = np.random.RandomState(seed)
-    cent = x[rng.choice(len(x), size=k, replace=False)]
-    for _ in range(max_iter):
-        # argmin over squared L2 via the dot-product expansion
-        d2 = (x * x).sum(1)[:, None] - 2.0 * x @ cent.T + (cent * cent).sum(1)
-        lab = d2.argmin(1)
-        for j in range(k):
-            m = lab == j
-            if m.any():
-                cent[j] = x[m].mean(0)
-            else:  # empty cell: reseed on the farthest point (deterministic)
-                cent[j] = x[d2.min(1).argmax()]
-    cmat = cent.copy()
+    x = _train_matrix(emb, id_col, vec_col)
+    cent = _lloyd_fit(x, n_centroids, np.random.RandomState(seed), max_iter)
 
     @F.pandas_udf("int")
     def nearest_cell(v: pd.Series) -> pd.Series:
         m = np.asarray([np.asarray(a, dtype=np.float64) for a in v])
         if m.size == 0:
             return pd.Series([], dtype="int32")
-        d2 = (m * m).sum(1)[:, None] - 2.0 * m @ cmat.T + (cmat * cmat).sum(1)
-        return pd.Series(d2.argmin(1).astype("int32"))
+        return pd.Series(_sq_dists(m, cent).argmin(1).astype("int32"))
 
     assigned = pin(
         emb.select(
@@ -382,27 +462,15 @@ def ivf_search(
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Search an IVF index: route each query to its `n_probe` nearest
-    cells (tiny queries×centroids join, exact L2, window top-n), then
-    equi-join candidates on cell id and exact-cosine re-rank. Search
-    cost is O(N·n_probe/n_centroids) per query; the candidate join
-    shuffles on cell — the 100 TB-safe shape."""
-    qc = queries.crossJoin(F.broadcast(centroids))
-    l2 = F.aggregate(
-        F.zip_with(
-            F.col(query_vec_col), F.col("centroid"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(l2.asc(), F.col("cell").asc())
-    probes = (
-        qc.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= n_probe)
-        .select(
-            query_id_col, query_vec_col, "cell",
-            norm(F.col(query_vec_col)).alias("_qnorm"),
-        )
+    cells (`_route`), then equi-join candidates on cell id and
+    exact-cosine re-rank. Search cost is O(N·n_probe/n_centroids) per
+    query; the candidate join shuffles on cell — the 100 TB-safe
+    shape."""
+    probes = _route(
+        queries, centroids, n_probe, query_id_col, query_vec_col
+    ).select(
+        query_id_col, query_vec_col, "cell",
+        norm(F.col(query_vec_col)).alias("_qnorm"),
     )
     cand = assigned.join(F.broadcast(probes), "cell")
     # norms precomputed (index-side at build, query-side in the tiny
@@ -417,36 +485,7 @@ def ivf_search(
         F.col(id_col),
         F.round(cos_pre, 6).alias("cos"),
     ).filter(F.col(id_col) != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k = build_ivf_index (fit once,
-    persisted assignments, centroid TABLE not literals) + ivf_search.
-    Kept as a one-call convenience; pipelines should build the index
-    once and call ivf_search per query batch."""
-    assigned, centroids = build_ivf_index(
-        emb, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col, seed=seed
-    )
-    return ivf_search(
-        assigned, centroids, queries, k=k, n_probe=n_probe,
-        id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    )
+    return _topk(scored, query_id_col, "cos", k, id_col)
 
 
 def save_ivf_index(
@@ -564,12 +603,7 @@ def sq8_topk(
     )
     if exclude_self:
         scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("qcos").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk(scored, query_id_col, "qcos", k, id_col)
 
 
 # =====================================================================
@@ -590,22 +624,13 @@ def pq_train(
     id_col: str = "vec_id",
     max_iter: int = 10,
     seed: int = 7,
-    train_cap: int = 100_000,
 ) -> np.ndarray:
-    """Train m independent k-means sub-codebooks on a bounded,
-    deterministically-selected sample (same contract as build_ivf_index:
-    sort-by-id + limit, one driver-side numpy fit — the codebook is
-    m·k·(dim/m) floats, trained once and broadcast forever). Returns
-    centroids with shape (m, k, dim//m)."""
-    rows = (
-        emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .sort("_id")
-        .limit(train_cap)
-        .collect()
-    )
-    x = np.asarray([r["_v"] for r in rows], dtype=np.float64)
-    if x.size == 0:
-        raise ValueError("pq_train: empty embedding input")
+    """Train m independent k-means sub-codebooks on the bounded training
+    sample (same contract as build_ivf_index: `_train_matrix`, then one
+    `_lloyd_fit` per subspace, all drawing from ONE seeded RandomState —
+    the codebook is m·k·(dim/m) floats, trained once and broadcast
+    forever). Returns centroids with shape (m, k, dim//m)."""
+    x = _train_matrix(emb, id_col, vec_col)
     dim = x.shape[1]
     if dim % m != 0:
         raise ValueError(f"pq_train: dim {dim} not divisible by m {m}")
@@ -613,31 +638,9 @@ def pq_train(
     rng = np.random.RandomState(seed)
     cents = np.empty((m, k, dsub))
     for s in range(m):
-        xs = x[:, s * dsub : (s + 1) * dsub]
-        kk = min(k, len(xs))
-        cent = xs[rng.choice(len(xs), size=kk, replace=False)]
-        for _ in range(max_iter):
-            d2 = (
-                (xs * xs).sum(1)[:, None]
-                - 2.0 * xs @ cent.T
-                + (cent * cent).sum(1)
-            )
-            lab = d2.argmin(1)
-            # reseed queue: farthest-first points (distinct per empty
-            # cluster — a shared argmax would collapse multiple empty
-            # clusters onto one duplicate centroid for the rest of Lloyd)
-            far = np.argsort(-d2.min(1))
-            far_i = 0
-            for j in range(kk):
-                sel = lab == j
-                if sel.any():
-                    cent[j] = xs[sel].mean(0)
-                else:
-                    cent[j] = xs[far[min(far_i, len(far) - 1)]]
-                    far_i += 1
-        if kk < k:  # degenerate tiny corpus: pad with the last centroid
-            cent = np.vstack([cent, np.repeat(cent[-1:], k - kk, 0)])
-        cents[s] = cent
+        cent = _lloyd_fit(x[:, s * dsub : (s + 1) * dsub], k, rng, max_iter)
+        # degenerate tiny corpus: pad with the last centroid
+        cents[s] = np.vstack([cent, np.repeat(cent[-1:], k - len(cent), 0)])
     return cents
 
 
@@ -661,11 +664,7 @@ def pq_codes(
         out = np.empty((len(arr), m), dtype=np.int32)
         for s in range(m):
             xs = arr[:, s * dsub : (s + 1) * dsub]
-            c = cmat[s]
-            d2 = (
-                (xs * xs).sum(1)[:, None] - 2.0 * xs @ c.T + (c * c).sum(1)
-            )
-            out[:, s] = d2.argmin(1)
+            out[:, s] = _sq_dists(xs, cmat[s]).argmin(1)
         return pd.Series(list(out))
 
     return emb.select(F.col(id_col), _codes(F.col(vec_col)).alias("codes"))
@@ -768,36 +767,7 @@ def pq_topk(
     survivors = codes.select(id_col, "codes").mapInPandas(
         _score, schema=out_schema
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_cos").desc(), F.col(id_col).asc()
-    )
-    return survivors.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def _lloyd_fit(
-    x: np.ndarray, k: int, seed: int, max_iter: int = 8
-) -> np.ndarray:
-    """Deterministic driver-side Lloyd k-means (numpy). Empty cells are
-    reseeded on DISTINCT farthest points (argsort, not a shared argmax —
-    the pq_train duplicate-centroid fix applied from the start here)."""
-    k = min(k, len(x))
-    rng = np.random.RandomState(seed)
-    cent = x[rng.choice(len(x), size=k, replace=False)].copy()
-    for _ in range(max_iter):
-        d2 = (x * x).sum(1)[:, None] - 2.0 * x @ cent.T + (cent * cent).sum(1)
-        lab = d2.argmin(1)
-        far = np.argsort(-d2.min(1))
-        fi = 0
-        for j in range(k):
-            m = lab == j
-            if m.any():
-                cent[j] = x[m].mean(0)
-            else:
-                cent[j] = x[far[fi]]
-                fi += 1
-    return cent
+    return _topk(survivors, query_id_col, "pq_cos", k, id_col)
 
 
 def build_twolevel_cells(
@@ -831,22 +801,12 @@ def build_twolevel_cells(
 
     from pyspark import StorageLevel
 
-    train_cap = 100_000
-    rows = (
-        emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .sort("_id")
-        .limit(train_cap)
-        .collect()
-    )
-    x = np.asarray([r["_v"] for r in rows], dtype=np.float64)
-    if len(x) == 0:
-        raise ValueError("build_twolevel_cells: empty embedding input")
+    x = _train_matrix(emb, id_col, vec_col)
     k = max(1, min(n_cells, len(x)))
     k1 = max(1, int(math.ceil(math.sqrt(k))))
-    coarse = _lloyd_fit(x, k1, seed)
+    coarse = _lloyd_fit(x, k1, np.random.RandomState(seed))
     k1 = len(coarse)
-    d2 = (x * x).sum(1)[:, None] - 2.0 * x @ coarse.T + (coarse * coarse).sum(1)
-    lab = d2.argmin(1)
+    lab = _sq_dists(x, coarse).argmin(1)
 
     fine_parts, offsets, counts = [], np.zeros(k1, np.int64), np.zeros(k1, np.int64)
     gid = 0
@@ -856,7 +816,7 @@ def build_twolevel_cells(
         if len(xs) == 0:
             continue
         kj = max(1, int(round(k * len(xs) / len(x))))
-        cj = _lloyd_fit(xs, kj, seed + 1 + j)
+        cj = _lloyd_fit(xs, kj, np.random.RandomState(seed + 1 + j))
         fine_parts.append(cj)
         counts[j] = len(cj)
         gid += len(cj)
@@ -867,25 +827,18 @@ def build_twolevel_cells(
         m = np.asarray([np.asarray(a, dtype=np.float64) for a in v])
         if m.size == 0:
             return pd.Series([], dtype="int32")
-        dc = (m * m).sum(1)[:, None] - 2.0 * m @ coarse.T + (coarse * coarse).sum(1)
-        cj = dc.argmin(1)
+        cj = _sq_dists(m, coarse).argmin(1)
         out = np.empty(len(m), dtype=np.int64)
         for j in np.unique(cj):
             sel = cj == j
             if counts[j] == 0:
                 # a coarse cell with no sample members (possible after
                 # reseeding): fall back to the global fine argmin
-                sub, fm, off = m[sel], fmat, 0
+                fm, off = fmat, 0
             else:
-                sub = m[sel]
                 fm = fmat[offsets[j]: offsets[j] + counts[j]]
                 off = offsets[j]
-            df_ = (
-                (sub * sub).sum(1)[:, None]
-                - 2.0 * sub @ fm.T
-                + (fm * fm).sum(1)
-            )
-            out[sel] = df_.argmin(1) + off
+            out[sel] = _sq_dists(m[sel], fm).argmin(1) + off
         return pd.Series(out.astype("int32"))
 
     assigned = pin(
@@ -1061,20 +1014,14 @@ def covariance_stats(
     cell set per map task either way). No shuffle ever carries a
     vector.
     """
-    q = emb.select(
+    # local-parallelism floor (`_spread`): a small parquet can scan as
+    # fewer partitions than cores, serializing the matmul onto one task
+    q = _spread(emb.select(
         F.transform(
             F.col(vec_col),
             lambda v: F.round(v.cast("double") * 1e6).cast("long"),
         ).alias("x")
-    )
-    # local-parallelism floor: a small parquet (or a few large files)
-    # can scan as fewer partitions than cores, serializing the matmul
-    # onto one task. The repartition ships each vector exactly once —
-    # at cluster scale the scan's own partitioning exceeds the floor
-    # and this branch never fires.
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    if q.rdd.getNumPartitions() < par:
-        q = q.repartition(par)
+    ))
 
     def xtx_exact(X: np.ndarray) -> np.ndarray | None:
         """X^T X exactly, via BLAS: int64 matmul has no BLAS path in
@@ -1287,63 +1234,24 @@ def ivfpq_topk(
         _encode,
     )
 
-    # ---- route: n_probe nearest cells per query (ivf_search contract)
-    qc = queries.crossJoin(F.broadcast(centroids))
-    l2 = F.aggregate(
-        F.zip_with(
-            F.col(query_vec_col), F.col("centroid"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        l2.asc(), F.col("cell").asc()
-    )
-    mq, nk, dsub = cents.shape
-    cmat = cents.copy()
-
-    @F.pandas_udf("array<array<double>>")
-    def _dot_tables(qv: pd.Series) -> pd.Series:
-        out = []
-        for v in qv:
-            q = np.asarray(v, dtype=np.float64)
-            out.append([
-                (cmat[s] @ q[s * dsub : (s + 1) * dsub]).tolist()
-                for s in range(mq)
-            ])
-        return pd.Series(out)
-
-    probes = (
-        qc.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= n_probe)
-        .select(
-            query_id_col, "cell",
-            _dot_tables(F.col(query_vec_col)).alias("_dt"),
-            norm(F.col(query_vec_col)).alias("_qn"),
-        )
+    # ---- route, with each probe row carrying the query's dot tables
+    probes = _route(
+        queries, centroids, n_probe, query_id_col, query_vec_col
+    ).select(
+        query_id_col, "cell",
+        _dot_table_udf(cents)(F.col(query_vec_col)).alias("_dt"),
+        norm(F.col(query_vec_col)).alias("_qn"),
     )
 
     # ---- ADC over candidates only (pq_topk's scoring expressions)
+    mq, nk, dsub = cents.shape
     flat = cents.reshape(mq * nk, dsub)
     rnorm2 = (flat * flat).sum(1).reshape(mq, nk)
     n2_tab = F.array(*[
         F.array(*[F.lit(float(x)) for x in rnorm2[s]]) for s in range(mq)
     ])
-    num = F.aggregate(
-        F.zip_with(F.col("codes"), F.col("_dt"),
-                   lambda c, t: F.element_at(t, c + 1)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    rn = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("codes"), n2_tab,
-                       lambda c, t: F.element_at(t, c + 1)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    num = _adc_sum(F.col("_dt"))
+    rn = F.sqrt(_adc_sum(n2_tab))
     scored = codes.join(F.broadcast(probes), "cell").select(
         F.col(query_id_col),
         F.col(id_col),
@@ -1353,12 +1261,7 @@ def ivfpq_topk(
             6,
         ).alias("pq_cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_cos").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk(scored, query_id_col, "pq_cos", k, id_col)
 
 
 def hard_negatives(
@@ -1392,12 +1295,7 @@ def hard_negatives(
         F.col(label_col),
         F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6).alias("cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk(scored, query_id_col, "cos", k, id_col)
 
 
 def sampled_negatives(
@@ -1435,14 +1333,8 @@ def sampled_negatives(
             )), 1, 8,
         ), 16, 10,
     ).cast("long")
-    w = Window.partitionBy(query_id_col).orderBy(
-        u.asc(), F.col(id_col).asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, label_col,
-                F.col("rank").cast("int").alias("rank"))
+    return _topk(pairs, query_id_col, u, k, id_col, desc=False).select(
+        query_id_col, id_col, label_col, F.col("rank").cast("int").alias("rank")
     )
 
 
@@ -1526,65 +1418,20 @@ def ivfpq_residual_topk(
         _fit_residual_index,
     )
 
-    mq, nk, dsub = cents.shape
-    cb = cents.copy()
-
-    @F.pandas_udf("array<array<double>>")
-    def _dot_tables(qv: pd.Series) -> pd.Series:
-        out = []
-        for v in qv:
-            q = np.asarray(v, dtype=np.float64)
-            out.append([
-                (cb[s] @ q[s * dsub : (s + 1) * dsub]).tolist()
-                for s in range(mq)
-            ])
-        return pd.Series(out)
-
-    qc = queries.crossJoin(F.broadcast(centroids))
-    qdotc = F.aggregate(
-        F.zip_with(
-            F.col(query_vec_col), F.col("centroid"),
-            lambda a, b: a.cast("double") * b,
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    probes = _route(
+        queries, centroids, n_probe, query_id_col, query_vec_col
+    ).select(
+        query_id_col, "cell",
+        dot(F.col(query_vec_col), F.col("centroid")).alias("_qc"),
+        _dot_table_udf(cents)(F.col(query_vec_col)).alias("_dt"),
     )
-    l2 = F.aggregate(
-        F.zip_with(
-            F.col(query_vec_col), F.col("centroid"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        l2.asc(), F.col("cell").asc()
-    )
-    probes = (
-        qc.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= n_probe)
-        .select(
-            query_id_col, "cell", qdotc.alias("_qc"),
-            _dot_tables(F.col(query_vec_col)).alias("_dt"),
-        )
-    )
-    ip = F.col("_qc") + F.aggregate(
-        F.zip_with(F.col("codes"), F.col("_dt"),
-                   lambda c, t: F.element_at(t, c + 1)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    ip = F.col("_qc") + _adc_sum(F.col("_dt"))
     scored = codes.join(F.broadcast(probes), "cell").select(
         F.col(query_id_col),
         F.col(id_col),
         F.round(ip, 6).alias("pq_ip"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_ip").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk(scored, query_id_col, "pq_ip", k, id_col)
 
 
 def binary_sign_codes(
@@ -1687,11 +1534,9 @@ def binary_topk(
     cand = cand.withColumn(
         "_lrnk", F.row_number().over(ws_local)
     ).filter(F.col("_lrnk") <= shortlist)
-    ws = Window.partitionBy(query_id_col).orderBy(
-        F.col("hamming").asc(), F.col(id_col).asc()
-    )
-    short = cand.withColumn("srank", F.row_number().over(ws)).filter(
-        F.col("srank") <= shortlist
+    short = _topk(
+        cand, query_id_col, "hamming", shortlist, id_col,
+        desc=False, rank_col="srank",
     ).drop("_salt", "_lrnk")
     rer = short.join(
         emb.select(F.col(id_col), F.col(vec_col)), id_col
@@ -1709,12 +1554,7 @@ def binary_topk(
             "cos"
         ),
     )
-    wk = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(wk)).filter(
-        F.col("rank") <= k
-    )
+    return _topk(scored, query_id_col, "cos", k, id_col)
 
 
 # --------------------------------------- engine-portable (integer) ANN twins
@@ -1841,17 +1681,11 @@ def seeded_ivf_topk(
     )
     cand = probes.join(assigned, "cell").filter(F.col("vid") != F.col("qid"))
     cos = _int_cos(int_dot("qqv", "qv"), F.col("qnv"), F.col("nv"))
-    wk = Window.partitionBy("qid").orderBy(cos.desc(), F.col("vid").asc())
-    return (
-        cand.withColumn("_cos", cos)
-        .withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(query_id_col),
-            F.col("vid").alias(id_col),
-            F.round(F.col("_cos") * _Q_SCALE).cast("long").alias("cos_u6"),
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return _topk(cand.withColumn("_cos", cos), "qid", "_cos", k, "vid").select(
+        F.col("qid").alias(query_id_col),
+        F.col("vid").alias(id_col),
+        F.round(F.col("_cos") * _Q_SCALE).cast("long").alias("cos_u6"),
+        F.col("rank").cast("int").alias("rank"),
     )
 
 

@@ -28,7 +28,7 @@ def test_grid_candidates_match_broadcast_path(spark):
     """Both `_edwithin_pairs` plans (kernel closure and grid candidates)
     agree with an independent broadcast theta-join + exact kernel on the
     eDwithin self-pair set."""
-    t = Q._flat_trips(spark, SF_DIR)
+    t = Q._trips(spark, SF_DIR)
     t1, t2 = _side(t, 1), _side(t, 2)
     bc = t1.join(
         F.broadcast(t2),
@@ -49,7 +49,7 @@ def test_grid_candidate_plan_shuffles(spark):
     """With broadcasting disabled (the large×large regime), the
     candidate join is a shuffled equi-join: no BroadcastNestedLoopJoin,
     no CartesianProduct."""
-    t = Q._flat_trips(spark, SF_DIR)
+    t = Q._trips(spark, SF_DIR)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

@@ -39,7 +39,6 @@ def _cached_plans(spark) -> int:
 def _session_tables(spark):
     return [
         BMQ._trips(spark, SF),
-        BMQ._flat_trips(spark, SF),
         BMQ._point_hits(spark, SF),
         BMQ._segments(spark, SF),
         BMQ._l1_segments(spark, SF),
@@ -132,7 +131,7 @@ def test_unmemoized_index_builds_leave_no_session_pin(spark):
 def test_call_release_keeps_session_scope(spark):
     BMQ.warm_caches(spark, SF)
     tables = _session_tables(spark)
-    for t in tables[5:]:
+    for t in tables[4:]:
         t.count()
     Q.release_operator_caches()
     assert [t.storageLevel for t in tables] == [
@@ -149,7 +148,7 @@ def test_session_release_returns_to_pre_warm_baseline(spark):
     for t in _session_tables(spark):
         t.count()
     assert _persistent_rdds(spark) > rdds
-    assert Q.release_operator_caches(session_scoped=True) >= 8
+    assert Q.release_operator_caches(session_scoped=True) >= 7
     assert _persistent_rdds(spark) <= rdds
     assert _cached_plans(spark) <= plans
     assert not pins._MEMO

@@ -1,5 +1,5 @@
-"""Unit tests for the round-9 second-session operators: binary sign-
-code retrieval, k-core peeling, 2-D skyline, ACF, and CUPED — each
+"""Unit tests for the round-9 second-session operators: k-core
+peeling, 2-D skyline, ACF, and CUPED — each
 checked against an independent in-Python recomputation (not the SQL
 oracle, which the driver already replays)."""
 
@@ -9,64 +9,11 @@ from pyspark.sql import functions as F
 
 from mobilityduck_spark import pins
 from mobilityduck_spark.operators import graph as G
-from mobilityduck_spark.operators import similarity as SIM
 from mobilityduck_spark.operators import skyline as SK
 from mobilityduck_spark.operators import events as EV
 from mobilityduck_spark.sources import tables as SRC
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_binary_codes_planted_copy_hamming_zero(spark):
-    """An exact copy of the query vector must have Hamming distance 0
-    to it and therefore always enter the shortlist and rerank to the
-    top cosine slot."""
-    emb = SRC.load(spark, SF, "embeddings")
-    plant = emb.filter(F.col("vec_id") == 3).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
-    )
-    corpus = emb.unionByName(plant)
-    q = emb.filter(F.col("vec_id") == 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    top = SIM.binary_topk(corpus, q, k=3, shortlist=8).collect()
-    first = [r for r in top if r.rank == 1][0]
-    assert first.vec_id == 1_000_003
-    assert first.hamming == 0
-    assert first.cos == 1.0
-
-
-def test_binary_topk_full_shortlist_equals_exact(spark):
-    """With shortlist >= |corpus| the Hamming stage prunes nothing, so
-    the rerank must reproduce the exact brute-force top-k verbatim."""
-    emb = SRC.load(spark, SF, "embeddings").limit(60)
-    q = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    bt = {
-        (r.query_id, r.rank): r.vec_id
-        for r in SIM.binary_topk(emb, q, k=5, shortlist=100).collect()
-    }
-    ex = {
-        (r.query_id, r.rank): r.vec_id
-        for r in SIM.brute_force_topk(emb, q, k=5).collect()
-    }
-    assert bt == ex
-
-
-def test_binary_codes_match_numpy_pack(spark):
-    emb = SRC.load(spark, SF, "embeddings").limit(10)
-    rows = emb.select(
-        "vec_id", "embedding", *SIM.binary_sign_codes(F.col("embedding"))
-    ).collect()
-    for r in rows:
-        v = np.array(r.embedding)
-        bits = (v >= 0).astype(np.int64)
-        lo = int((bits[:32] << np.arange(32, dtype=np.int64)).sum())
-        hi = int((bits[32:] << np.arange(32, dtype=np.int64)).sum())
-        assert (r.bq_w0, r.bq_w1) == (lo, hi), r.vec_id
 
 
 def _py_kcore(edges, k):

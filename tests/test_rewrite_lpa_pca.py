@@ -1,14 +1,8 @@
-"""Unit tests for chunk_dedup_rewrite, label_propagation, and the
-covariance / PCA power-iteration operators."""
+"""Unit tests for chunk_dedup_rewrite and label_propagation."""
 
 import hashlib
 
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
-
 from mobilityduck_spark.operators import graph as G
-from mobilityduck_spark.operators import similarity as SIM
 from mobilityduck_spark.operators import text as TX
 
 
@@ -86,43 +80,3 @@ def test_label_propagation_clique_converges(spark):
         for r in G.label_propagation(edges, rounds=2).collect()
     }
     assert set(out.values()) == {5}
-
-
-# ----------------------------------------------------- covariance / PCA
-def test_covariance_matches_numpy(spark):
-    rng = np.random.default_rng(3)
-    X = rng.normal(size=(40, 5)).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in row]) for i, row in enumerate(X)],
-        "vec_id bigint, embedding array<float>",
-    )
-    got = {
-        (r["i"], r["j"]): r["cov"]
-        for r in SIM.covariance_stats(df).collect()
-    }
-    # reference: quantize exactly as the operator does, then np.cov
-    Q = np.round(X.astype(np.float64) * 1e6)
-    C = np.cov(Q.T / 1e6, ddof=1)
-    for (i, j), v in got.items():
-        assert v == pytest.approx(C[i, j], abs=2e-6)
-    assert len(got) == 15  # 5*(5+1)/2 upper triangle
-
-
-def test_pca_power_top_matches_eigh(spark):
-    rng = np.random.default_rng(11)
-    # anisotropic data: dominant direction along a known axis mix
-    base = rng.normal(size=(60, 4))
-    base[:, 0] *= 6.0
-    base[:, 1] *= 2.0
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in row]) for i, row in enumerate(base)],
-        "vec_id bigint, embedding array<float>",
-    )
-    v = np.array(SIM.pca_power_top(df, iters=60))
-    Q = np.round(base.astype(np.float32).astype(np.float64) * 1e6) / 1e6
-    C = np.cov(Q.T, ddof=1)
-    w, V = np.linalg.eigh(np.round(C, 6))
-    top = V[:, -1]
-    if top[np.argmax(np.abs(top))] < 0:
-        top = -top
-    assert float(np.abs(np.dot(v, top))) > 0.9999

@@ -1,5 +1,11 @@
-"""Similarity-search operators: exact top-k vs LSH and IVF recall."""
+"""Similarity-search operators: exact top-k vs LSH, IVF, SQ8, PQ and
+binary recall, the shared k-means fit, covariance/PCA, and AST guards
+that keep one top-k window and one Lloyd loop in operators/similarity.py."""
 
+import ast
+import pathlib
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,12 +46,14 @@ def test_brute_force_topk_shape(spark):
 def test_ivf_recall_vs_exact(spark):
     emb, q = _setup(spark)
     exact = _pairs(SIM.brute_force_topk(emb, q, k=5))
-    ivf = _pairs(SIM.ivf_topk(emb, q, k=5, n_centroids=8, n_probe=4))
+    assigned, centroids = SIM.build_ivf_index(emb, n_centroids=8)
+    ivf = _pairs(SIM.ivf_search(assigned, centroids, q, k=5, n_probe=4))
     recall = len(ivf & exact) / len(exact)
     assert recall >= 0.5, f"IVF recall too low: {recall}"
     # full probe = exact
-    ivf_full = _pairs(SIM.ivf_topk(emb, q, k=5, n_centroids=8, n_probe=8))
+    ivf_full = _pairs(SIM.ivf_search(assigned, centroids, q, k=5, n_probe=8))
     assert ivf_full == exact
+    pins.release()
 
 
 def test_ivf_index_many_centroids(spark):
@@ -276,7 +284,14 @@ def test_semantic_dedup_planted_copies_production_threshold(spark):
         assert not plant["keep"] and plant["rep_id"] == r["vec_id"]
 
 
-def test_pq_train_reseeds_empty_clusters_distinctly():
+def _distinct_plus_copies(n: int) -> np.ndarray:
+    """n distinct 8-d points, then 120 copies of the first: k=n Lloyd
+    from a random init empties several cells in one iteration."""
+    base = np.random.RandomState(0).randn(n, 8) * 10.0
+    return np.vstack([base, np.repeat(base[:1], 120, axis=0)])
+
+
+def test_pq_train_reseeds_empty_clusters_distinctly(spark):
     """When several clusters go empty in the same Lloyd iteration, each
     must be reseeded with a DISTINCT farthest point — a shared argmax
     would leave duplicate centroids wasting codebook capacity. Forced
@@ -302,15 +317,28 @@ def test_pq_train_reseeds_empty_clusters_distinctly():
         def collect(self):
             return [{"_id": i, "_v": v} for i, v in enumerate(self._x)]
 
-    rng = np.random.RandomState(0)
-    base = rng.randn(8, 8) * 10.0
-    x = np.vstack([base, np.repeat(base[:1], 120, axis=0)])
+    x = _distinct_plus_copies(8)
     cents = SIM.pq_train(_FakeDF(x.tolist()), m=1, k=8)
     c = np.round(cents[0], 9)
     uniq = np.unique(c, axis=0)
     # all 8 distinct source points are representable: no duplicated
     # centroid rows may remain after convergence
     assert len(uniq) == 8, c
+
+
+def test_build_ivf_index_reseeds_empty_cells_distinctly(spark):
+    """The IVF coarse quantizer shares pq_train's fit: 16 distinct
+    points among 136 rows must yield 16 distinct centroids (a shared
+    farthest-point argmax leaves 10 here: seed 42, 8 iterations)."""
+    x = _distinct_plus_copies(16)
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(x)],
+        "vec_id bigint, embedding array<double>",
+    )
+    _, centroids = SIM.build_ivf_index(emb, n_centroids=16)
+    c = np.asarray([r["centroid"] for r in centroids.collect()])
+    pins.release()
+    assert len(np.unique(np.round(c, 9), axis=0)) == 16, c
 
 
 def test_semantic_dedup_twolevel_planted_copies(spark):
@@ -346,3 +374,158 @@ def test_lsh_signature_rejects_non_finite_planes(monkeypatch):
     )
     with pytest.raises(ValueError, match="non-finite"):
         SIM.lsh_signature(F.col("v"), dim=4, n_planes=2)
+
+
+def test_binary_codes_planted_copy_hamming_zero(spark):
+    """An exact copy of the query vector must have Hamming distance 0
+    to it and therefore always enter the shortlist and rerank to the
+    top cosine slot."""
+    emb = SRC.load(spark, SF, "embeddings")
+    plant = emb.filter(F.col("vec_id") == 3).select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
+    )
+    corpus = emb.unionByName(plant)
+    q = emb.filter(F.col("vec_id") == 3).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    top = SIM.binary_topk(corpus, q, k=3, shortlist=8).collect()
+    first = [r for r in top if r.rank == 1][0]
+    assert first.vec_id == 1_000_003
+    assert first.hamming == 0
+    assert first.cos == 1.0
+
+
+def test_binary_topk_full_shortlist_equals_exact(spark):
+    """With shortlist >= |corpus| the Hamming stage prunes nothing, so
+    the rerank must reproduce the exact brute-force top-k verbatim."""
+    emb = SRC.load(spark, SF, "embeddings").limit(60)
+    q = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    bt = {
+        (r.query_id, r.rank): r.vec_id
+        for r in SIM.binary_topk(emb, q, k=5, shortlist=100).collect()
+    }
+    ex = {
+        (r.query_id, r.rank): r.vec_id
+        for r in SIM.brute_force_topk(emb, q, k=5).collect()
+    }
+    assert bt == ex
+
+
+def test_binary_codes_match_numpy_pack(spark):
+    emb = SRC.load(spark, SF, "embeddings").limit(10)
+    rows = emb.select(
+        "vec_id", "embedding", *SIM.binary_sign_codes(F.col("embedding"))
+    ).collect()
+    for r in rows:
+        v = np.array(r.embedding)
+        bits = (v >= 0).astype(np.int64)
+        lo = int((bits[:32] << np.arange(32, dtype=np.int64)).sum())
+        hi = int((bits[32:] << np.arange(32, dtype=np.int64)).sum())
+        assert (r.bq_w0, r.bq_w1) == (lo, hi), r.vec_id
+
+
+def test_covariance_matches_numpy(spark):
+    rng = np.random.default_rng(3)
+    X = rng.normal(size=(40, 5)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(X)],
+        "vec_id bigint, embedding array<float>",
+    )
+    got = {
+        (r["i"], r["j"]): r["cov"]
+        for r in SIM.covariance_stats(df).collect()
+    }
+    # reference: quantize exactly as the operator does, then np.cov
+    Q = np.round(X.astype(np.float64) * 1e6)
+    C = np.cov(Q.T / 1e6, ddof=1)
+    for (i, j), v in got.items():
+        assert v == pytest.approx(C[i, j], abs=2e-6)
+    assert len(got) == 15  # 5*(5+1)/2 upper triangle
+
+
+def test_pca_power_top_matches_eigh(spark):
+    rng = np.random.default_rng(11)
+    # anisotropic data: dominant direction along a known axis mix
+    base = rng.normal(size=(60, 4))
+    base[:, 0] *= 6.0
+    base[:, 1] *= 2.0
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(base)],
+        "vec_id bigint, embedding array<float>",
+    )
+    v = np.array(SIM.pca_power_top(df, iters=60))
+    Q = np.round(base.astype(np.float32).astype(np.float64) * 1e6) / 1e6
+    C = np.cov(Q.T, ddof=1)
+    w, V = np.linalg.eigh(np.round(C, 6))
+    top = V[:, -1]
+    if top[np.argmax(np.abs(top))] < 0:
+        top = -top
+    assert float(np.abs(np.dot(v, top))) > 0.9999
+
+
+# ------------------------------------------------------------- AST guards
+_SIM_SRC = pathlib.Path(SIM.__file__)
+
+# row_number windows that are not a per-query top-k, each named with the
+# number it may hold: binary_topk's salted per-(query, salt) shortlist,
+# seeded_ivf_topk's global centroid numbering and its nested _cell_rank
+# (vector -> nearest seeded cell, SQL-twinned by the oracle)
+_WINDOW_EXEMPT = {"binary_topk": 1, "seeded_ivf_topk": 1, "_cell_rank": 1}
+
+
+def _functions(tree):
+    """(function, its own nodes): nested defs are their own entries."""
+    out = []
+
+    def visit(fn):
+        own = []
+        stack = list(ast.iter_child_nodes(fn))
+        while stack:
+            n = stack.pop()
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(n)
+                continue
+            own.append(n)
+            stack.extend(ast.iter_child_nodes(n))
+        out.append((fn, own))
+
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            visit(node)
+    return out
+
+
+def _calls(nodes, attr):
+    return [
+        n for n in nodes
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and n.func.attr == attr
+    ]
+
+
+def test_only_topk_builds_a_row_number_window():
+    tree = ast.parse(_SIM_SRC.read_text())
+    found = {
+        fn.name: len(_calls(own, "row_number"))
+        for fn, own in _functions(tree)
+        if _calls(own, "row_number")
+    }
+    assert found == {"_topk": 1, **_WINDOW_EXEMPT}
+
+
+def test_only_lloyd_fit_runs_a_lloyd_loop():
+    """A Lloyd loop: a `for` whose body both assigns points to their
+    nearest centroid (argmin) and moves centroids to means."""
+    tree = ast.parse(_SIM_SRC.read_text())
+    loops = set()
+    for fn, own in _functions(tree):
+        for n in own:
+            if isinstance(n, ast.For):
+                body = [b for s in n.body for b in ast.walk(s)]
+                if _calls(body, "argmin") and _calls(body, "mean"):
+                    loops.add(fn.name)
+    assert loops == {"_lloyd_fit"}
